@@ -352,8 +352,7 @@ def compare_bands(args) -> int:
             print(f"\nSTORAGE-ATTRIBUTED breaches ({len(storage_attr)}) — "
                   "file-count-bound keys in an artifact carrying the "
                   f"metadata-stall signature ({stall}); these track host "
-                  "storage state, not code (receipt: tools/bucket_ab.py, "
-                  "BASELINE.md r13):")
+                  "storage state, not code (receipt: BASELINE.md r13):")
             for entry in storage_attr:
                 _line(*entry)
     else:

@@ -23,10 +23,8 @@ import datetime
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from sat_bucket_spark.plan_stats import (
-    estimated_size_bytes as _estimated_size_bytes_impl,
-    warn_if_unpartitioned_window,
-)
+from sat_bucket_spark.functions.temporal import epoch_seconds
+from sat_bucket_spark.plan_stats import estimated_size_bytes, warn_if_unpartitioned_window
 
 __all__ = [
     "add_overpass_id",
@@ -54,10 +52,6 @@ def _interval_seconds(interval) -> float:
 # routes to the chunked scalable variant instead of a single-reducer window.
 # Shared with the warn-only guard in plan_stats (same bound, same estimator).
 _GLOBAL_SESSION_MAX_BYTES = 256 * 1024 * 1024
-
-# Estimator lives in plan_stats so every single-reducer-window guard keys
-# off the identical Catalyst statistic.
-_estimated_size_bytes = _estimated_size_bytes_impl
 
 # add_swath_indices' offset window runs over ONE row per granule, so its
 # guard keys off the raw input with a proportionally larger bound: ~1 TiB
@@ -95,7 +89,7 @@ def add_overpass_id(
             df, interval=interval, time=time, partition_by=partition_by, id_column=id_column
         )
     if strategy == "auto" and not partition_by:
-        est = _estimated_size_bytes(df)
+        est = estimated_size_bytes(df)
         if est is not None and est > _GLOBAL_SESSION_MAX_BYTES:
             return add_overpass_id_scalable(
                 df, interval=interval, time=time, partition_by=partition_by, id_column=id_column
@@ -112,9 +106,10 @@ def add_overpass_id(
     gap = _interval_seconds(interval)
     keys = list(partition_by) if partition_by else []
     w = Window.partitionBy(*keys).orderBy(time) if keys else Window.orderBy(time)
-    prev = F.lag(F.col(time)).over(w)
+    t = epoch_seconds(df, time)
+    prev = F.lag(t).over(w)
     new_session = F.when(
-        prev.isNull() | (F.col(time).cast("double") - prev.cast("double") <= F.lit(gap)),
+        prev.isNull() | (t - prev <= F.lit(gap)),
         F.lit(0),
     ).otherwise(F.lit(1))
     run = Window.partitionBy(*keys).orderBy(time) if keys else Window.orderBy(time)
@@ -149,13 +144,14 @@ def add_overpass_id_scalable(
     """
     gap = _interval_seconds(interval)
     keys = list(partition_by) if partition_by else []
-    chunk = F.floor(F.col(time).cast("double") / F.lit(float(chunk_seconds))).cast("long")
+    t = epoch_seconds(df, time)
+    chunk = F.floor(t / F.lit(float(chunk_seconds))).cast("long")
     df2 = df.withColumn("__chunk", chunk)
 
     w = Window.partitionBy(*keys, "__chunk").orderBy(time)
-    prev = F.lag(F.col(time)).over(w)
+    prev = F.lag(t).over(w)
     new_session = F.when(
-        prev.isNull() | (F.col(time).cast("double") - prev.cast("double") <= F.lit(gap)),
+        prev.isNull() | (t - prev <= F.lit(gap)),
         F.lit(0),
     ).otherwise(F.lit(1))
     local = F.sum(new_session).over(w.rowsBetween(Window.unboundedPreceding, 0))
@@ -165,8 +161,8 @@ def add_overpass_id_scalable(
     stats = (
         df2.groupBy(*keys, "__chunk")
         .agg(
-            F.min(F.col(time).cast("double")).alias("__first"),
-            F.max(F.col(time).cast("double")).alias("__last"),
+            F.min(t).alias("__first"),
+            F.max(t).alias("__last"),
             F.max("__local").alias("__n_sessions"),
         )
         .collect()

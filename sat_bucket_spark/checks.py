@@ -56,33 +56,32 @@ def check_size(size) -> tuple[float, float]:
 
 
 def check_time(t) -> datetime.datetime:
-    """Coerce str/date/datetime/numpy datetime to naive ``datetime.datetime``.
+    """Coerce str/date/datetime/numpy datetime to naive UTC ``datetime.datetime``.
 
     Reference: satbucket/checks.py:34-77 (accepts datetime, date, np.datetime64, str).
+    Strings are ISO 8601 (``datetime.fromisoformat``: "2021-01-01",
+    "2021-01-01 06:30", "2021-01-01T06:30:00Z", "...+02:00", ...) or the
+    compact "%Y%m%d%H%M%S" form. Time-zone-aware values are converted to UTC.
     """
     import numpy as np
 
+    if isinstance(t, str):
+        try:
+            t = datetime.datetime.fromisoformat(t)
+        except ValueError:
+            try:
+                t = datetime.datetime.strptime(t, "%Y%m%d%H%M%S")
+            except ValueError:
+                raise ValueError(f"unparseable time string: {t!r}") from None
     if isinstance(t, datetime.datetime):
-        return t.replace(tzinfo=None) if t.tzinfo else t
+        if t.tzinfo is not None:
+            t = t.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+        return t
     if isinstance(t, datetime.date):
         return datetime.datetime(t.year, t.month, t.day)
     if isinstance(t, np.datetime64):
         us = t.astype("datetime64[us]").astype(int)
         return datetime.datetime(1970, 1, 1) + datetime.timedelta(microseconds=int(us))
-    if isinstance(t, str):
-        for fmt in (
-            "%Y-%m-%d %H:%M:%S.%f",
-            "%Y-%m-%d %H:%M:%S",
-            "%Y-%m-%d %H:%M",
-            "%Y-%m-%d",
-            "%Y%m%d%H%M%S",
-            "%Y%m%d",
-        ):
-            try:
-                return datetime.datetime.strptime(t, fmt)
-            except ValueError:
-                continue
-        raise ValueError(f"unparseable time string: {t!r}")
     raise TypeError(f"unsupported time type: {type(t)}")
 
 

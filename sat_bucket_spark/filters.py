@@ -36,6 +36,8 @@ __all__ = [
 _WGS84_A = 6378137.0
 _WGS84_F = 1.0 / 298.257223563
 _WGS84_B = _WGS84_A * (1.0 - _WGS84_F)
+# a(1 - e^2), the meridional radius of curvature at the equator (its minimum)
+_WGS84_MIN_MERIDIONAL_RADIUS = _WGS84_A * (1.0 - _WGS84_F * (2.0 - _WGS84_F))
 _EARTH_RADIUS_M = 6371008.8  # IUGG mean radius, for haversine
 
 
@@ -224,8 +226,18 @@ def extent_around_point(lon: float, lat: float, distance: float | None = None, s
     """Bounding extent around a point, by geodesic distance or degree size.
 
     Reference: readers.py:34-38 + gpm-api ``get_geographic_extent_around_point``:
-    with ``size`` (degrees) the extent is ``lon +/- size/2``; with ``distance``
-    (meters) the extent spans the meridian/parallel arcs of that length.
+    with ``size`` (degrees) the extent is ``lon +/- size/2``. With ``distance``
+    (meters) the extent holds the whole circle of that radius, on the WGS84
+    ellipsoid and on the haversine sphere alike — it prunes partitions before
+    the exact row filter, so it may be loose but never narrow:
+
+    - latitude half-width: ``distance`` over the smallest meridional radius of
+      curvature, ``a(1 - e^2)`` (the equatorial one);
+    - longitude half-width: the small-circle bound ``asin(sin d / cos lat)``
+      for that angular radius ``d``;
+    - every longitude when the circle reaches a pole or crosses +/-180
+      (extents do not wrap).
+
     Exactly one of ``distance`` / ``size`` must be given.
     """
     if (distance is None) == (size is None):
@@ -235,11 +247,14 @@ def extent_around_point(lon: float, lat: float, distance: float | None = None, s
             size = (float(size), float(size))
         half_x, half_y = size[0] / 2.0, size[1] / 2.0
     else:
-        # Degrees subtended by `distance` meters along parallel/meridian
-        # (spherical approximation; driver-side planning value only — the exact
-        # row filter is applied afterwards, so a slightly loose extent is safe).
-        half_y = math.degrees(distance / _EARTH_RADIUS_M)
-        half_x = math.degrees(distance / (_EARTH_RADIUS_M * max(math.cos(math.radians(lat)), 1e-9)))
+        angle = distance / _WGS84_MIN_MERIDIONAL_RADIUS
+        half_y = math.degrees(angle)
+        if abs(lat) + half_y >= 90.0:
+            half_x = 360.0  # reaches a pole
+        else:
+            half_x = math.degrees(math.asin(math.sin(angle) / math.cos(math.radians(lat))))
+        if lon - half_x < -180.0 or lon + half_x > 180.0:
+            half_x = 360.0  # crosses the antimeridian
     return [
         max(lon - half_x, -180.0),
         min(lon + half_x, 180.0),

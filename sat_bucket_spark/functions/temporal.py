@@ -11,12 +11,34 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 from sat_bucket_spark.checks import check_temporal_partitioning
 
-__all__ = ["get_partitioning_boundaries", "get_time_prefix", "time_prefix_expr"]
+__all__ = [
+    "epoch_seconds",
+    "get_partitioning_boundaries",
+    "get_time_prefix",
+    "time_prefix_expr",
+]
+
+
+def epoch_seconds(df: DataFrame, time: str) -> Column:
+    """Seconds since 1970-01-01 (double) of ``df``'s timestamp column ``time``.
+
+    TIMESTAMP casts to double directly (an instant: exact in any session time
+    zone). TIMESTAMP_NTZ — what a tz-naive parquet or pandas column reads back
+    as — cannot be cast to a number; its wall-clock reading is taken as UTC,
+    the convention pandas and pyarrow use for naive values, so the result
+    does not depend on the session time zone either. Other types (already
+    numeric epochs) keep the plain double cast.
+    """
+    if isinstance(df.schema[time].dataType, TimestampNTZType):
+        epoch = F.lit("1970-01-01 00:00:00").cast("timestamp_ntz")
+        return F.timestamp_diff("MICROSECOND", epoch, F.col(time)) / F.lit(1e6)
+    return F.col(time).cast("double")
 
 
 def get_time_prefix(timestep, temporal_partitioning: str) -> str:

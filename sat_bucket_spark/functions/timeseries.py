@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from sat_bucket_spark.functions.temporal import epoch_seconds
 from sat_bucket_spark.plan_stats import warn_if_unpartitioned_window
 
 __all__ = ["add_rolling_features", "interpolate_linear", "regularize_timesteps"]
@@ -84,7 +85,7 @@ def regularize_timesteps(
     """
     keys = list(partition_by) if partition_by else []
     warn_if_unpartitioned_window(df, "regularize_timesteps", keys)
-    step = F.floor(F.col(time).cast("double") / freq_seconds).cast("long")
+    step = F.floor(epoch_seconds(df, time) / freq_seconds).cast("long")
     bucketed = df.withColumn("__step", step)
     aggs = agg_exprs or {"n": F.count(F.lit(1))}
     agg_df = bucketed.groupBy(*keys, "__step").agg(
@@ -133,7 +134,7 @@ def interpolate_linear(
         Window.partitionBy(*keys).orderBy(time).rowsBetween(0, Window.unboundedFollowing)
     )
     v = F.col(value).cast("double")
-    t = F.col(time).cast("double")
+    t = epoch_seconds(df, time)
     t_obs = F.when(v.isNotNull(), t)
     rn = F.row_number().over(Window.partitionBy(*keys).orderBy(time))
     rn_obs = F.when(v.isNotNull(), rn)

@@ -130,19 +130,10 @@ def get_partition_filepaths(
     query path never needs this for pruning (Catalyst prunes from predicates);
     ``read`` uses it only when filename-level filters are requested.
     """
-    pattern = re.compile(regex_pattern) if regex_pattern is not None else None
-    dirs = _partition_dirs(bucket_dir, extent)
-    if parallel and len(dirs) > 1:
-        import concurrent.futures
-
-        with concurrent.futures.ThreadPoolExecutor() as ex:
-            lists = ex.map(
-                lambda d: _list_dir_files(d, extension, glob_pattern, pattern), dirs
-            )
-            out = [f for lst in lists for f in lst]
-    else:
-        out = [f for d in dirs for f in _list_dir_files(d, extension, glob_pattern, pattern)]
-    return sorted(out)
+    by_partition = get_filepaths_by_partition(
+        bucket_dir, extent, extension, glob_pattern, regex_pattern, parallel
+    )
+    return sorted(f for files in by_partition.values() for f in files)
 
 
 def get_filepaths_by_partition(

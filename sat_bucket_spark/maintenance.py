@@ -29,10 +29,8 @@ import yaml
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sat_bucket_spark.io import (
-    get_bucket_spatial_partitioning,
-    get_bucket_temporal_partitioning,
-)
+from sat_bucket_spark.io import get_bucket_spatial_partitioning
+from sat_bucket_spark.readers import read_bucket_dataframe
 from sat_bucket_spark.writers import parse_size, write_partitioned_dataset
 
 __all__ = [
@@ -43,13 +41,8 @@ __all__ = [
 ]
 
 
-def _read_hive(spark: SparkSession, bucket_dir: str) -> DataFrame:
-    # pathGlobFilter skips bucket_info.yaml (same as readers.read_bucket_dataframe)
-    return spark.read.option("pathGlobFilter", "*.parquet").parquet(bucket_dir)
-
-
 def _bucket_partition_cols(spark: SparkSession, bucket_dir: str) -> list[str]:
-    df = _read_hive(spark, bucket_dir)
+    df = read_bucket_dataframe(spark, bucket_dir)
     cols = []
     try:
         p = get_bucket_spatial_partitioning(bucket_dir)
@@ -86,7 +79,7 @@ def bucket_file_stats(
     """
     if partition_cols is None:
         partition_cols = _bucket_partition_cols(spark, bucket_dir)
-    df = _read_hive(spark, bucket_dir)
+    df = read_bucket_dataframe(spark, bucket_dir)
     per_file = (
         df.select(
             *[F.col(c) for c in partition_cols],
@@ -154,20 +147,15 @@ def compact_bucket(
             for row in victims
         ),
     )
-    df = _read_hive(spark, bucket_dir).where(pred)
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        writer_kwargs.setdefault("max_file_size", target)
-        write_partitioned_dataset(
-            df,
-            bucket_dir,
-            partitions=partition_cols,
-            mode="overwrite",
-            **writer_kwargs,
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
+    df = read_bucket_dataframe(spark, bucket_dir).where(pred)
+    writer_kwargs.setdefault("max_file_size", target)
+    write_partitioned_dataset(
+        df,
+        bucket_dir,
+        partitions=partition_cols,
+        mode="overwrite_partitions",
+        **writer_kwargs,
+    )
     return len(victims)
 
 

@@ -28,7 +28,7 @@ from sat_bucket_spark.filters import (
     filter_around_point,
     filter_by_extent,
 )
-from sat_bucket_spark.io import get_bucket_spatial_partitioning
+from sat_bucket_spark.partitioning import partitioning_from_dict
 
 __all__ = ["read", "read_bucket_dataframe"]
 
@@ -73,70 +73,37 @@ def read_bucket_dataframe(
         # Explicit file list (filename-level filtering): basePath keeps the
         # hive partition columns discoverable from the file paths.
         reader = spark.read.option("basePath", bucket_dir)
+        src = paths
     else:
         reader = spark.read.option("pathGlobFilter", glob)
+        src = [bucket_dir]
     if merge_schema:
-        # Schema drift (columns added to the archive over the years): the
-        # single-footer fast path below would pin the schema to ONE file and
-        # silently drop every column that file predates. mergeSchema unions
-        # all footers (a footer pass over the bucket — the documented price
-        # of drift-aware reads); string-typing the partition levels then
-        # uses the infer-then-reread path on the MERGED schema.
+        # Schema drift (columns added to the archive over the years): a
+        # single-footer schema would pin the archive to ONE file and silently
+        # drop every column that file predates. mergeSchema unions all
+        # footers (a footer pass over the bucket — the documented price of
+        # drift-aware reads).
         reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*paths) if paths is not None else reader.parquet(bucket_dir)
-        if levels:
-            fields = [
-                StructField(f.name, StringType(), True)
-                if f.name in levels
-                else f
-                for f in df.schema.fields
-            ]
-            df = (
-                reader.schema(StructType(fields)).parquet(*paths)
-                if paths is not None
-                else reader.schema(StructType(fields)).parquet(bucket_dir)
-            )
-        return df
-    if levels:
-        # String-typing the partition levels needs a schema up front. Reading
-        # the bucket once to inspect df.schema and AGAIN with the corrected
-        # schema lists every partition directory twice — the dominant driver
-        # cost of opening a many-thousand-directory bucket (and two full
-        # object-store LIST passes at scale). Instead read ONE data file's
-        # footer (Spark's own inference also reads a single footer when
-        # mergeSchema is off), append the levels as strings, and open the
-        # bucket exactly once with the explicit schema.
-        sample = paths[0] if paths else _first_data_file(bucket_dir, glob)
-        if sample is not None:
-            data_fields = list(spark.read.parquet(sample).schema.fields)
-            present = {f.name for f in data_fields}
-            fields = data_fields + [
-                StructField(lvl, StringType(), True)
-                for lvl in levels
-                if lvl not in present
-            ]
-            schema = StructType(fields)
-            return (
-                reader.schema(schema).parquet(*paths)
-                if paths is not None
-                else reader.schema(schema).parquet(bucket_dir)
-            )
-    df = reader.parquet(*paths) if paths is not None else reader.parquet(bucket_dir)
-    if levels:
-        # Fallback (no sample file found, e.g. non-local URI): the original
-        # infer-then-reread path.
-        fields = []
-        for f in df.schema.fields:
-            if f.name in levels:
-                fields.append(StructField(f.name, StringType(), True))
-            else:
-                fields.append(f)
-        df = (
-            reader.schema(StructType(fields)).parquet(*paths)
-            if paths is not None
-            else reader.schema(StructType(fields)).parquet(bucket_dir)
-        )
-    return df
+    if not levels:
+        return reader.parquet(*src)
+    # String-typing the partition levels needs the schema up front. Reading
+    # the bucket once to inspect df.schema and AGAIN with the corrected
+    # schema lists every partition directory twice — the dominant driver
+    # cost of opening a many-thousand-directory bucket (and two full
+    # object-store LIST passes at scale). So unless the footers must be
+    # merged, read ONE data file's footer (Spark's own inference also reads
+    # a single footer when mergeSchema is off) and open the bucket exactly
+    # once with the explicit schema. Non-local URIs have no cheap first file
+    # and fall back to inferring the schema from a first open.
+    sample = None if merge_schema else (paths[0] if paths else _first_data_file(bucket_dir, glob))
+    base = spark.read.parquet(sample) if sample is not None else reader.parquet(*src)
+    fields = [
+        StructField(f.name, StringType(), True) if f.name in levels else f
+        for f in base.schema.fields
+    ]
+    present = {f.name for f in fields}
+    fields += [StructField(lvl, StringType(), True) for lvl in levels if lvl not in present]
+    return reader.schema(StructType(fields)).parquet(*src)
 
 
 def _first_data_file(bucket_dir: str, glob: str = "*.parquet", max_depth: int = 8) -> str | None:
@@ -282,7 +249,13 @@ def read(
             "specify at most one of extent/country/continent/point/polygon"
         )
 
-    partitioning = get_bucket_spatial_partitioning(bucket_dir)
+    # one metadata read per query: the spatial and temporal partitionings
+    # both come from this bucket_info.yaml (imported at call time so that
+    # wrappers on io.read_bucket_info, e.g. perfbench's tracer, apply)
+    from sat_bucket_spark.io import read_bucket_info
+
+    info = read_bucket_info(bucket_dir)
+    partitioning = partitioning_from_dict(info["spatial_partitioning"])
 
     # --- resolve the spatial query to an extent (driver-side planning) -----
     query_extent = None
@@ -355,13 +328,12 @@ def read(
     if start_time is not None or end_time is not None:
         from sat_bucket_spark.checks import check_start_end_time
         from sat_bucket_spark.functions.temporal import get_time_prefix
-        from sat_bucket_spark.io import get_bucket_temporal_partitioning
 
         start_time, end_time = check_start_end_time(
             start_time if start_time is not None else "1970-01-01",
             end_time if end_time is not None else "2100-01-01",
         )
-        temporal = get_bucket_temporal_partitioning(bucket_dir)
+        temporal = info.get("temporal_partitioning")
         if temporal and "time_part" in df.columns:
             from sat_bucket_spark.functions.temporal import get_partitioning_boundaries
 

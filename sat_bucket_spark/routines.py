@@ -28,19 +28,11 @@ from pyspark.sql.types import StructType
 
 from sat_bucket_spark.checks import check_start_end_time, check_temporal_partitioning
 from sat_bucket_spark.filters import interval_overlap_expr
-from sat_bucket_spark.functions.temporal import time_prefix_expr
+from sat_bucket_spark.functions.temporal import epoch_seconds, time_prefix_expr
 from sat_bucket_spark.info import filename_time_exprs
-from sat_bucket_spark.io import (
-    get_bucket_spatial_partitioning,
-    get_bucket_temporal_partitioning,
-    write_bucket_info,
-)
+from sat_bucket_spark.io import get_bucket_spatial_partitioning, write_bucket_info
 from sat_bucket_spark.readers import read_bucket_dataframe
-from sat_bucket_spark.writers import (
-    estimate_row_size,
-    rows_for_target_size,
-    write_partitioned_dataset,
-)
+from sat_bucket_spark.writers import write_partitioned_dataset
 
 __all__ = ["merge_granule_buckets", "write_bucket", "write_granules_bucket"]
 
@@ -110,7 +102,6 @@ def write_granules_bucket(
     import json
     import os
 
-    write_bucket_info(bucket_dir, partitioning)
     manifest_path = os.path.join(bucket_dir, "_ingest_manifest.json")
     already: set[str] = set()
     if skip_ingested and os.path.exists(manifest_path):
@@ -155,16 +146,7 @@ def write_granules_bucket(
     result = paths_df.mapInPandas(_ingest, schema=out_schema).persist()
     try:
         ok = result.where(F.col("_error").isNull()).drop("_error", "_src_path")
-        labeled = partitioning.add_labels(ok, x=x, y=y, remove_invalid_rows=True)
-        write_partitioned_dataset(
-            labeled,
-            bucket_dir,
-            partitions=list(partitioning.order),
-            mode=mode,
-            flavor=partitioning.flavor,
-            **writer_kwargs,
-        )
-
+        write_bucket(ok, bucket_dir, partitioning, x=x, y=y, mode=mode, **writer_kwargs)
         errors = (
             result.where(F.col("_error").isNotNull()).select("_src_path", "_error").collect()
         )
@@ -200,9 +182,10 @@ def merge_granule_buckets(
     compacts every partition in parallel. Catalyst then prunes time ranges for
     free on read.
 
-    ``update=True`` -> dynamic partition overwrite of the touched
-    (spatial x temporal) partitions — the idempotent replacement for
-    delete-files-by-prefix (routines.py:791-810).
+    ``update=True`` -> the same write with ``mode="overwrite_partitions"``
+    (dynamic partition overwrite of the touched (spatial x temporal)
+    partitions) — the idempotent replacement for delete-files-by-prefix
+    (routines.py:791-810). Every writer option applies to both modes.
 
     Rows are clustered by ``time`` inside each output file (a local
     per-task sort, no extra shuffle): row-group min/max time stats become
@@ -246,7 +229,6 @@ def merge_granule_buckets(
     partitions = list(partitioning.order) + ["time_part"]
 
     sort_cols = [time]
-    drop_after = None
     if zorder_xy is not None:
         from sat_bucket_spark.partitioning import bin_index_expr, zorder_index_expr
 
@@ -259,61 +241,24 @@ def merge_granule_buckets(
         yb = bin_index_expr(
             F.col(y_col), ext.ymin, ext.ymax, (ext.ymax - ext.ymin) / n, n
         )
-        tb = F.floor(F.col(time).cast("double") / F.lit(86400.0)).cast(
+        tb = F.floor(epoch_seconds(df, time) / F.lit(86400.0)).cast(
             "long"
         ).bitwiseAND(F.lit(n - 1))
+        # dunder name: write_partitioned_dataset sorts by it, then drops it
         df = df.withColumn(
             "__z3", zorder_index_expr(xb, yb, bits=zorder_bits, t_bin=tb)
         )
         sort_cols = ["__z3"]
-        drop_after = "__z3"
 
     writer_kwargs.setdefault("max_file_size", "2GB")  # reference default, routines.py:543
-    if update:
-        # Dynamic partition overwrite: only partitions present in df are replaced.
-        # File sizing applies here too — compactions must honor max_file_size,
-        # not emit arbitrarily sized files.
-        max_records = writer_kwargs.get("max_records_per_file")
-        if max_records is None and writer_kwargs.get("max_file_size") is not None:
-            # Same sampling-skip gate as write_partitioned_dataset: when
-            # Catalyst bounds the WHOLE input far below one target file the
-            # cap cannot bind, so don't pay the sampling job to compute it.
-            from sat_bucket_spark.plan_stats import estimated_size_bytes
-            from sat_bucket_spark.writers import parse_size
-
-            est = estimated_size_bytes(df)
-            if est is None or est * 4 > parse_size(writer_kwargs["max_file_size"]):
-                max_records = rows_for_target_size(
-                    writer_kwargs["max_file_size"],
-                    estimate_row_size(
-                        df, compression=writer_kwargs.get("compression", "snappy")
-                    ),
-                )
-        from sat_bucket_spark.writers import _repartition_for_write
-
-        base = _repartition_for_write(df, partitions).sortWithinPartitions(
-            *partitions, *sort_cols
-        )
-        if drop_after is not None:
-            base = base.drop(drop_after)
-        writer = (
-            base.write.partitionBy(*partitions)
-            .option("partitionOverwriteMode", "dynamic")
-            .option("compression", writer_kwargs.get("compression", "snappy"))
-            .mode("overwrite")
-        )
-        if max_records is not None:
-            writer = writer.option("maxRecordsPerFile", int(max_records))
-        writer.parquet(dst_bucket_dir)
-    else:
-        write_partitioned_dataset(
-            df,
-            dst_bucket_dir,
-            partitions=partitions,
-            mode="append",
-            sort_within_by=sort_cols,
-            **writer_kwargs,
-        )
+    write_partitioned_dataset(
+        df,
+        dst_bucket_dir,
+        partitions=partitions,
+        mode="overwrite_partitions" if update else "append",
+        sort_within_by=sort_cols,
+        **writer_kwargs,
+    )
 
 
 def assign_files_to_temporal_groups(

@@ -22,6 +22,8 @@ import re
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sat_bucket_spark.plan_stats import estimated_size_bytes
+
 __all__ = [
     "dehive_partition_directories",
     "estimate_row_size",
@@ -149,9 +151,7 @@ def _repartition_for_write(df: DataFrame, partitions: list[str]) -> DataFrame:
     spark = df.sparkSession
     cores = spark.sparkContext.defaultParallelism
     if spark.conf.get("spark.sql.adaptive.enabled", "true").lower() == "true":
-        from sat_bucket_spark.analysis import _estimated_size_bytes
-
-        est = _estimated_size_bytes(df)
+        est = estimated_size_bytes(df)
         advisory = parse_size(
             spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64MB")
         )
@@ -179,6 +179,12 @@ def write_partitioned_dataset(
 
     - ``partitions``: partition columns in on-disk order (reference order
       semantics, partitioning.py:195-198).
+    - ``mode``: a Spark save mode, or ``"overwrite_partitions"`` to replace
+      only the partitions present in ``df`` (dynamic partition overwrite,
+      named after ``DataFrameWriterV2.overwritePartitions``). It is set as a
+      per-write option, so other writes in the session keep the static
+      ``"overwrite"`` semantics. This is how ``merge_granule_buckets(update=
+      True)`` and ``compact_bucket`` rewrite touched partitions in place.
     - ``flavor``: "hive" (default) keeps Spark's ``name=label`` dirs;
       None/"directory" post-renames them to bare label dirs — the reference's
       default XY/Tile layout (SURVEY.md §7 hard part 5); local-FS only.
@@ -240,9 +246,7 @@ def write_partitioned_dataset(
         # Catalyst sizes are uncompressed-leaning (>= parquet-encoded), and the
         # 4x margin covers label columns added between estimate and write;
         # being wrong only splits a file early, never violates the max.
-        from sat_bucket_spark.analysis import _estimated_size_bytes
-
-        est = _estimated_size_bytes(df)
+        est = estimated_size_bytes(df)
         if est is None or est * 4 > parse_size(max_file_size):
             bytes_per_row = estimate_row_size(df, compression=compression)
             max_records_per_file = rows_for_target_size(max_file_size, bytes_per_row)
@@ -256,6 +260,10 @@ def write_partitioned_dataset(
             writer = writer.option(
                 f"parquet.bloom.filter.expected.ndv#{c}", int(bloom_filter_ndv)
             )
+
+    if mode == "overwrite_partitions":
+        writer = writer.option("partitionOverwriteMode", "dynamic")
+        mode = "overwrite"
 
     writer.option("compression", compression).mode(mode).parquet(base_dir)
     if partitions and flavor != "hive":

@@ -84,7 +84,7 @@ class TestAutoStrategy:
     def test_huge_estimate_routes_to_scalable(self, spark, gaps_df, monkeypatch):
         import sat_bucket_spark.analysis as mod
 
-        monkeypatch.setattr(mod, "_estimated_size_bytes", lambda df: 10**12)
+        monkeypatch.setattr(mod, "estimated_size_bytes", lambda df: 10**12)
         calls = {}
         orig = mod.add_overpass_id_scalable
 
@@ -95,6 +95,40 @@ class TestAutoStrategy:
         monkeypatch.setattr(mod, "add_overpass_id_scalable", spy)
         mod.add_overpass_id(gaps_df, interval=600, time="time")
         assert calls.get("hit")
+
+
+class TestTimestampNTZ:
+    """A tz-naive parquet time column reads back as TIMESTAMP_NTZ, which
+    cannot be cast to a number; epoch_seconds reads its wall clock as UTC."""
+
+    @pytest.fixture()
+    def naive_df(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.types import TimestampNTZType
+
+        base = datetime.datetime(2021, 1, 1)
+        times = [base + datetime.timedelta(seconds=s) for s in (0, 1, 2, 300, 330, 7200)]
+        path = str(tmp_path / "naive.parquet")
+        pq.write_table(pa.table({"time": pa.array(times, pa.timestamp("us"))}), path)
+        df = spark.read.parquet(path)
+        assert isinstance(df.schema["time"].dataType, TimestampNTZType)
+        return df
+
+    @pytest.mark.parametrize("strategy", ["global", "scalable"])
+    def test_add_overpass_id(self, naive_df, strategy):
+        out = add_overpass_id(naive_df, strategy=strategy).orderBy("time").collect()
+        assert [r["overpass_id"] for r in out] == [0, 0, 0, 1, 1, 2]
+
+    def test_epoch_seconds_matches_the_utc_wall_clock(self, naive_df, gaps_df):
+        from sat_bucket_spark.functions.temporal import epoch_seconds
+
+        got = [r[0] for r in naive_df.select(epoch_seconds(naive_df, "time")).collect()]
+        first = datetime.datetime(2021, 1, 1, tzinfo=datetime.timezone.utc).timestamp()
+        assert got == [first + s for s in (0, 1, 2, 300, 330, 7200)]
+        # a TIMESTAMP column keeps the plain double cast
+        ts = [r[0] for r in gaps_df.select(epoch_seconds(gaps_df, "time")).collect()]
+        assert ts == [r[0] for r in gaps_df.select(F.col("time").cast("double")).collect()]
 
 
 class TestOverpassPeriods:

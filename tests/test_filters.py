@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
-import numpy as np
+import math
 
-from sat_bucket_spark.filters import _haversine_np, _vincenty_inverse
+import numpy as np
+import pytest
+
+from sat_bucket_spark.filters import _haversine_np, _vincenty_inverse, extent_around_point
 
 
 class TestVincenty:
@@ -53,6 +56,39 @@ def _pip_ref(px, py, poly):
         if (y1 > py) != (y2 > py) and px < (x2 - x1) * (py - y1) / (y2 - y1) + x1:
             inside = not inside
     return inside
+
+
+class TestExtentAroundPoint:
+    """The pruning extent of a point-radius read holds the whole WGS84 circle:
+    every node of a 0.05 x 0.1 degree (lat x lon) grid within ``distance``
+    (Vincenty) of the centre lies inside it."""
+
+    @pytest.mark.parametrize(
+        "lon0, lat0, distance",
+        [
+            (0.0, 0.0, 400e3),  # the latitude bound needs the smallest meridional radius
+            (179.9, 0.0, 100e3),  # the circle crosses +/-180
+            (0.0, 85.0, 1000e3),  # the circle reaches over the pole
+            (10.0, 60.0, 500e3),
+        ],
+    )
+    def test_holds_the_circle(self, lon0, lat0, distance):
+        reach = math.degrees(distance / 6.3e6) + 1.0
+        rows = np.arange(math.floor((lat0 - reach) * 20), math.ceil((lat0 + reach) * 20) + 1)
+        lats = np.clip(rows / 20.0, -90.0, 90.0)
+        lons, lats = np.meshgrid(np.linspace(-180.0, 180.0, 3601), lats)
+        lons, lats = lons.ravel(), lats.ravel()
+        inside = _vincenty_inverse(lons, lats, lon0, lat0) <= distance
+        assert inside.sum() > 100
+        xmin, xmax, ymin, ymax = extent_around_point(lon0, lat0, distance=distance)
+        assert np.all((lons[inside] >= xmin) & (lons[inside] <= xmax))
+        assert np.all((lats[inside] >= ymin) & (lats[inside] <= ymax))
+
+    def test_stays_tight_away_from_poles_and_antimeridian(self):
+        # at 60N a 500 km circle spans ~+/-9 degrees of longitude, not the globe
+        xmin, xmax, ymin, ymax = extent_around_point(10.0, 60.0, distance=500e3)
+        assert 8.9 < 10.0 - xmin < 9.2 and 8.9 < xmax - 10.0 < 9.2
+        assert 4.49 < 60.0 - ymin < 4.55 and 4.49 < ymax - 60.0 < 4.55
 
 
 class TestPointInPolygon:

@@ -104,7 +104,6 @@ class TestCompactBucket:
             seg.split("=") for seg in target.split(os.sep)[-2:]
         )
         # compact ONLY that partition first (restrict via partition_cols filter)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
         one = (
             spark.read.option("pathGlobFilter", "*.parquet").parquet(b)
             .where(
@@ -114,7 +113,7 @@ class TestCompactBucket:
         from sat_bucket_spark.writers import write_partitioned_dataset
 
         write_partitioned_dataset(
-            one, b, partitions=["lon_bin", "lat_bin"], mode="overwrite"
+            one, b, partitions=["lon_bin", "lat_bin"], mode="overwrite_partitions"
         )
         files_before = {
             f: os.path.getmtime(f) for f in glob.glob(f"{target}/*.parquet")

@@ -186,8 +186,14 @@ def test_semantic_dedup_tiles_the_pair_join(spark):
     cluster's O(n_c^2) cosine work into one reducer, and a broadcast join
     would inherit the stream side's (possibly single-split) partitioning —
     the explicit tile-key repartition is what spreads the work.
+
+    The join lives in ``semantic_dup_pairs``' own plan: ``semantic_dedup``
+    stage-caches the pairs eagerly, so its frame shows only the cached scan.
     """
-    plan = _plan(E.q_semantic_dedup(spark, SF_DIR))
+    from sat_bucket_spark.operators.clustering import semantic_dup_pairs
+
+    emb = E._t(spark, SF_DIR, "embeddings")
+    plan = _plan(semantic_dup_pairs(emb, E._IVF_CENTROIDS, threshold=0.3))
     assert "hashpartitioning(__cluster" in plan
     assert "__ti" in plan and "__tj" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

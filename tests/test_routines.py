@@ -184,6 +184,92 @@ class TestMerge:
         assert df.count() == 150  # no duplication of 2021
 
 
+def _footers(spark, bucket_dir):
+    """(row-group count, columns carrying a Bloom filter) per data file,
+    from parquet-mr's own footer reader."""
+    import glob
+
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    out = []
+    for f in sorted(glob.glob(f"{bucket_dir}/**/*.parquet", recursive=True)):
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+                jvm.org.apache.hadoop.fs.Path(f), conf
+            )
+        )
+        try:
+            blocks = list(reader.getFooter().getBlocks())
+            bloom = {
+                c.getPath().toDotString()
+                for b in blocks
+                for c in b.getColumns()
+                if c.getBloomFilterOffset() >= 0
+            }
+        finally:
+            reader.close()
+        out.append((len(blocks), bloom))
+    return out
+
+
+class TestMergeWriterOptions:
+    """update=True is the same partitioned write as update=False, so it
+    honours the same writer options."""
+
+    def test_update_honours_row_group_size_and_bloom_filters(self, spark, tmp_path):
+        # 20k rows, one spatial cell, one month: one output file per merge
+        rows = spark.range(20_000).selectExpr(
+            "5.0 + (id % 100) * 0.01 AS lon",
+            "5.0 + (id % 97) * 0.01 AS lat",
+            "timestamp_seconds(1609459200 + id * 60) AS time",
+            "CAST(id * 2654435761 % 1000003 AS LONG) AS gid",
+        )
+        staged = str(tmp_path / "stage")
+        write_bucket(rows, staged, LonLatPartitioning(size=(10, 10)))
+        plain, tuned = str(tmp_path / "plain"), str(tmp_path / "tuned")
+        merge_granule_buckets(spark, staged, plain, temporal_partitioning="year", update=True)
+        merge_granule_buckets(
+            spark,
+            staged,
+            tuned,
+            temporal_partitioning="year",
+            update=True,
+            row_group_size="64KB",
+            bloom_filter_columns=["gid"],
+        )
+        assert _footers(spark, plain) == [(1, set())]
+        [(row_groups, bloom)] = _footers(spark, tuned)
+        assert row_groups > 1 and bloom == {"gid"}
+        assert read(spark, tuned).count() == 20_000
+
+
+class TestCheckTime:
+    def test_iso_8601_strings(self):
+        from sat_bucket_spark.checks import check_time
+
+        want = datetime.datetime(2021, 1, 1, 6, 30)
+        for s in (
+            "2021-01-01T06:30:00",
+            "2021-01-01T06:30:00Z",
+            "2021-01-01T08:30:00+02:00",
+            "2021-01-01 06:30",
+            "20210101063000",
+        ):
+            assert check_time(s) == want, s
+        assert check_time("20210101") == datetime.datetime(2021, 1, 1)
+        aware = datetime.datetime(2021, 1, 1, 1, 30, tzinfo=datetime.timezone(
+            datetime.timedelta(hours=-5)))
+        assert check_time(aware) == want
+        with pytest.raises(ValueError, match="unparseable"):
+            check_time("01/01/2021")
+
+    def test_read_accepts_iso_window(self, spark, orbit_df, tmp_path):
+        dst = str(tmp_path / "bucket")
+        write_bucket(orbit_df, dst, LonLatPartitioning(size=(10, 10)))
+        got = read(spark, dst, start_time="2021-01-01T00:00:00Z", end_time="2022-01-01T00:00:00")
+        assert got.count() == 100
+
+
 class TestGranuleIngest:
     def test_write_granules_bucket(self, spark, tmp_path):
         # Fake granule files: path encodes granule id; reader synthesizes rows.
