@@ -26,22 +26,64 @@ fault-tolerant posture without touching operator code:
 Use :func:`set_stage_cache_mode` (process-global) or the
 :func:`stage_cache_mode` context manager. All modes produce identical
 results; tests pin that (tests/test_caching.py).
+
+Measured stages. An operator that joins a derived frame back onto a
+corpus-sized one materializes that frame once with
+:func:`measured_stage` and hints the join with :func:`broadcast_if_fits`:
+
+- ``measured_stage(df, *extra_metrics)`` runs ONE eager materialization
+  with an ``Observation`` riding it (row count ``n`` plus any extra
+  aggregate expressions), then adds ``bytes``, the size of the cache
+  itself: the block storage of a ``localCheckpoint``'s ``LogicalRDD``, or
+  the materialized ``InMemoryRelation`` stats of a ``persist``. A mode
+  that reports no size (a reliable checkpoint) falls back to rows x the
+  schema's default row size. Block storage holds deserialized rows, so
+  it reads larger than what a broadcast ships (about 84 bytes per row of
+  two longs, whose binary rows are 24 bytes): the gate errs toward the
+  shuffled join.
+- ``broadcast_if_fits(df, metrics)`` hints ``F.broadcast`` only while
+  ``bytes`` is at most Spark's ``spark.sql.autoBroadcastJoinThreshold``;
+  a threshold <= 0 turns every gate off, as it does for Spark's planner.
+  Both postures are the same logical plan minus the hint, so outputs are
+  identical.
+
+Retry caveat: observation accumulators can double-apply when a stage is
+retried after executor loss, so ``n`` (and the extras) may over-count on
+a faulty cluster. For a gate that is fail-safe: an over-count can only
+push a frame onto the shuffled posture. Callers that fold a count into
+their results (pagerank's N) or rely on an exact fingerprint re-check it
+with an aggregate action.
+
+Scopes. Stage caches under ``localCheckpoint`` or a reliable checkpoint
+are invisible to the cache manager: they are freed only when the driver
+GCs the RDD reference, so a long-running caller accumulates executor
+storage per call. ``with stage_scope():`` owns every :func:`stage_cache`
+and :func:`round_cache` frame created inside it and frees them on exit
+with ``release_stage_cache(..., destructive=True)``. Results built on
+those frames must be materialized (written, collected) inside the scope.
+With no active scope, frames live until GC, as before.
 """
 
 from __future__ import annotations
 
 from contextlib import contextmanager
+from contextvars import ContextVar
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 __all__ = [
     "STAGE_CACHE_MODES",
+    "broadcast_fits",
+    "broadcast_if_fits",
     "get_stage_cache_mode",
+    "measured_stage",
     "release_stage_cache",
     "round_cache",
     "set_stage_cache_mode",
     "stage_cache",
     "stage_cache_mode",
+    "stage_scope",
 ]
 
 STAGE_CACHE_MODES = ("local_checkpoint", "persist", "reliable_checkpoint")
@@ -82,18 +124,18 @@ def stage_cache(df: DataFrame, eager: bool = False) -> DataFrame:
     mode.
     """
     if _mode == "local_checkpoint":
-        return df.localCheckpoint(eager=eager)
+        return _own(df.localCheckpoint(eager=eager))
     if _mode == "persist":
         from pyspark import StorageLevel
 
-        out = df.persist(StorageLevel.MEMORY_AND_DISK)
+        out = _own(df.persist(StorageLevel.MEMORY_AND_DISK))
         if eager:
             out.count()
         return out
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is None:
         _raise_no_checkpoint_dir()
-    return df.checkpoint(eager=eager)
+    return _own(df.checkpoint(eager=eager))
 
 
 _warned_persist_rounds = False
@@ -121,7 +163,7 @@ def round_cache(df: DataFrame) -> DataFrame:
     if _mode == "persist":
         sc = df.sparkSession.sparkContext
         if sc.getCheckpointDir() is not None:
-            return df.checkpoint(eager=True)
+            return _own(df.checkpoint(eager=True))
         global _warned_persist_rounds
         if not _warned_persist_rounds:
             import warnings
@@ -136,8 +178,82 @@ def round_cache(df: DataFrame) -> DataFrame:
                 stacklevel=2,
             )
             _warned_persist_rounds = True
-        return df.localCheckpoint(eager=True)
+        return _own(df.localCheckpoint(eager=True))
     return stage_cache(df, eager=True)
+
+
+def measured_stage(df: DataFrame, *extra_metrics, cache=None):
+    """Materialize ``df`` eagerly and measure it in the same job.
+
+    Returns ``(cached, metrics)``: ``metrics`` holds the observed row
+    count ``n``, each of ``extra_metrics`` (aliased aggregate expressions)
+    by its alias, and ``bytes``, the stored size of the cache (module
+    docstring). ``cache`` must materialize eagerly; the default is
+    ``stage_cache(df, eager=True)``, iterative loops pass
+    :func:`round_cache`.
+    """
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("n"), *extra_metrics)
+    cached = stage_cache(observed, eager=True) if cache is None else cache(observed)
+    metrics = dict(obs.get)
+    stored = _stored_bytes(cached)
+    if stored is None:
+        stored = metrics["n"] * cached._jdf.schema().defaultSize()
+    metrics["bytes"] = stored
+    return cached, metrics
+
+
+def _stored_bytes(df: DataFrame) -> int | None:
+    """Bytes held by a materialized stage cache, or None where the mode
+    reports no size (a reliable checkpoint, an empty local checkpoint)."""
+    qe = df._jdf.queryExecution()
+    plan = qe.analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        rdd_id = plan.rdd().id()
+        jsc = df.sparkSession.sparkContext._jsc.sc()
+        for info in jsc.getRDDStorageInfo():
+            if info.id() == rdd_id:
+                return info.memSize() + info.diskSize()
+        return None
+    optimized = qe.optimizedPlan()
+    if optimized.getClass().getSimpleName() == "InMemoryRelation":
+        return int(optimized.stats().sizeInBytes())
+    return None
+
+
+def broadcast_fits(spark, metrics: dict) -> bool:
+    """True while a measured frame fits ``autoBroadcastJoinThreshold``
+    (never when the threshold is <= 0)."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return 0 < limit and metrics["bytes"] <= limit
+
+
+def broadcast_if_fits(df: DataFrame, metrics: dict) -> DataFrame:
+    """``F.broadcast(df)`` while the measured ``metrics`` fit, else ``df``."""
+    return F.broadcast(df) if broadcast_fits(df.sparkSession, metrics) else df
+
+
+_scope: ContextVar[list | None] = ContextVar("stage_scope", default=None)
+
+
+@contextmanager
+def stage_scope():
+    """Own every stage/round cache created inside; free them on exit."""
+    owned: list = []
+    token = _scope.set(owned)
+    try:
+        yield
+    finally:
+        _scope.reset(token)
+        for df in reversed(owned):
+            release_stage_cache(df, destructive=True)
+
+
+def _own(df: DataFrame) -> DataFrame:
+    owned = _scope.get()
+    if owned is not None:
+        owned.append(df)
+    return df
 
 
 def release_stage_cache(df: DataFrame, destructive: bool = False) -> None:

@@ -77,11 +77,15 @@ def geodesic_fwd(lon, lat, azimuth, distance, radius: float = SPHERE_RADIUS):
     sin_phi1, cos_phi1 = np.sin(phi1), np.cos(phi1)
     sin_sigma, cos_sigma = np.sin(sigma), np.cos(sigma)
 
+    # destination as (y, x) components: z = sin(phi2), and the equatorial
+    # projection (east, north-of-meridian) whose hypot is cos(phi2).
+    # atan2 keeps full precision near the poles, where arcsin(sin phi2)
+    # loses it (a midpoint at 89.9998 deg was ~0.2 mm off).
+    east = np.sin(alpha) * sin_sigma
+    north = cos_phi1 * cos_sigma - sin_phi1 * sin_sigma * np.cos(alpha)
     sin_phi2 = sin_phi1 * cos_sigma + cos_phi1 * sin_sigma * np.cos(alpha)
-    phi2 = np.arcsin(np.clip(sin_phi2, -1.0, 1.0))
-    lam2 = lam1 + np.arctan2(
-        np.sin(alpha) * sin_sigma * cos_phi1, cos_sigma - sin_phi1 * sin_phi2
-    )
+    phi2 = np.arctan2(sin_phi2, np.hypot(east, north))
+    lam2 = lam1 + np.arctan2(east, north)
     # azimuth of the line at the destination (pole-safe form: num and den
     # both scaled by cos(phi1))
     azi2 = np.degrees(

@@ -101,18 +101,6 @@ def _list_dir_files(
     return out
 
 
-def _partition_dirs(bucket_dir: str, extent=None) -> list[str]:
-    partitioning = get_bucket_spatial_partitioning(bucket_dir)
-    rel = (
-        partitioning.directories_by_extent(extent)
-        if extent is not None
-        else partitioning.directories
-    )
-    return [
-        os.path.join(bucket_dir, d) for d in rel if os.path.isdir(os.path.join(bucket_dir, d))
-    ]
-
-
 def get_partition_filepaths(
     bucket_dir: str,
     extent=None,
@@ -145,8 +133,33 @@ def get_filepaths_by_partition(
     parallel: bool = True,
 ) -> dict[str, list[str]]:
     """Partition-relative dir -> sorted file list (reference: io.py:111-128)."""
+    return _filepaths_by_partition(
+        bucket_dir, get_bucket_spatial_partitioning(bucket_dir), extent,
+        extension, glob_pattern, regex_pattern, parallel,
+    )
+
+
+def _filepaths_by_partition(
+    bucket_dir: str,
+    partitioning,
+    extent=None,
+    extension: str | None = ".parquet",
+    glob_pattern: str | None = None,
+    regex_pattern: str | None = None,
+    parallel: bool = True,
+) -> dict[str, list[str]]:
+    """:func:`get_filepaths_by_partition` for a caller that already holds
+    the bucket's partitioning (``readers.read``), so bucket_info.yaml is
+    not read a second time."""
     pattern = re.compile(regex_pattern) if regex_pattern is not None else None
-    dirs = _partition_dirs(bucket_dir, extent)
+    rel = (
+        partitioning.directories_by_extent(extent)
+        if extent is not None
+        else partitioning.directories
+    )
+    dirs = [
+        os.path.join(bucket_dir, d) for d in rel if os.path.isdir(os.path.join(bucket_dir, d))
+    ]
 
     def one(d: str) -> tuple[str, list[str]]:
         return os.path.relpath(d, bucket_dir), sorted(

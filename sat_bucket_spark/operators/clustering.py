@@ -212,8 +212,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_blocks: int = 8,
-    broadcast_dropped_max: int = 10_000_000,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Keep one representative per semantic near-dup neighborhood.
 
@@ -223,43 +221,29 @@ def semantic_dedup(
     The drop set is just ``id_b`` of :func:`semantic_dup_pairs` — ids only
     through the shuffle.
 
-    Survivor join shape (r17, guide §3.1): the drop-id set is eagerly
-    stage-cached with its row count riding the materialization as an
-    observed metric (no extra aggregate job — the pair join runs exactly
-    once either way), and while the measured count stays at or below
-    ``broadcast_dropped_max`` the left-anti join is broadcast-hinted, so
-    the corpus's full rows (embedding payloads included) move ZERO times
-    instead of once — measured: without the hint the anti-join planned
-    AND executed as a SortMergeJoin shuffling the vectors side even with
-    a 215-row drop set (AQE did not demote it at runtime). Above the
-    bound (a pathologically duplicate-heavy corpus) the shuffled
-    anti-join shape is unchanged. Both postures are output-identical.
+    Survivor join shape (r17, guide §3.1): the drop-id set is a measured
+    stage cache (caching.measured_stage — the pair join runs exactly
+    once), and while it fits the broadcast threshold the left-anti join
+    is broadcast-hinted, so the corpus's full rows (embedding payloads
+    included) move ZERO times instead of once — measured: without the
+    hint the anti-join planned AND executed as a SortMergeJoin shuffling
+    the vectors side even with a 215-row drop set (AQE did not demote it
+    at runtime). Above the threshold (a pathologically duplicate-heavy
+    corpus) the shuffled anti-join shape is unchanged. Both postures are
+    output-identical.
 
     Eager at call time (the probe-operator convention): the pair join
-    materializes when called, so Spark jobs fire during construction.
-    Long-running callers pass ``cache_registry=[]`` and release the
-    appended frame via
-    :func:`sat_bucket_spark.caching.release_stage_cache` once the
-    returned frame is materialized.
+    materializes when called, so Spark jobs fire during construction;
+    long-running callers free the cache with ``caching.stage_scope()``.
     """
-    from pyspark.sql import Observation
+    from sat_bucket_spark.caching import broadcast_if_fits, measured_stage
 
-    from sat_bucket_spark.caching import stage_cache
-
-    obs = Observation()
-    dropped = stage_cache(
+    dropped, metrics = measured_stage(
         semantic_dup_pairs(
             vectors, centroids, threshold=threshold, id_col=id_col,
             vec_col=vec_col, n_blocks=n_blocks,
         )
         .select(F.col("id_b").alias(id_col))
         .distinct()
-        .observe(obs, F.count(F.lit(1)).alias("n")),
-        eager=True,
     )
-    if cache_registry is not None:
-        cache_registry.append(dropped)
-    n_drop = obs.get["n"]
-    if 0 < n_drop <= broadcast_dropped_max:
-        dropped = F.broadcast(dropped)
-    return vectors.join(dropped, id_col, "left_anti")
+    return vectors.join(broadcast_if_fits(dropped, metrics), id_col, "left_anti")

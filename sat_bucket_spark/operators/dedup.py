@@ -21,7 +21,12 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sat_bucket_spark.caching import stage_cache
+from sat_bucket_spark.caching import (
+    broadcast_fits,
+    broadcast_if_fits,
+    measured_stage,
+    stage_cache,
+)
 from sat_bucket_spark.operators.parallel import ensure_parallelism
 from sat_bucket_spark.operators.hashing import (
     MERSENNE_P,
@@ -1190,8 +1195,6 @@ def minhash_dedup_against(
     shingle_size: int = 8,
     min_jaccard: float = 0.1,
     seed: int = 42,
-    broadcast_candidates_max: int = 1_000_000,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Drop batch docs that near-duplicate ANY corpus doc (cross-batch LSH).
 
@@ -1204,9 +1207,8 @@ def minhash_dedup_against(
 
     Verify-join shape (r17, guide §1.2/§3.1 — the
     :func:`minhash_dedup_against_index` contract, applied here): the
-    candidate pairs are eagerly stage-cached with their count riding the
-    materialization as an observed metric, and while the measured count
-    fits ``broadcast_candidates_max`` (a) BOTH verify sides are
+    candidate pairs are a measured stage cache (caching.measured_stage),
+    and while they fit the broadcast threshold (a) BOTH verify sides are
     pre-filtered with broadcast semi-joins on the candidate ids BEFORE
     the shingle projection — so corpus text is shingled on the verify
     side only for candidate rows, never corpus-wide — and (b) the
@@ -1216,11 +1218,8 @@ def minhash_dedup_against(
     SortMergeJoins shuffling full shingle arrays). Above the bound the
     shuffled shapes are unchanged; both postures are output-identical.
     Eager at call time (the probe-operator convention); long-running
-    callers pass ``cache_registry=[]`` and release via
-    :func:`sat_bucket_spark.caching.release_stage_cache`.
+    callers free the cache with ``caching.stage_scope()``.
     """
-    from pyspark.sql import Observation
-
     sig_kwargs = dict(
         id_col=id_col, text_col=text_col, n_hashes=n_hashes,
         shingle_size=shingle_size, seed=seed,
@@ -1231,21 +1230,14 @@ def minhash_dedup_against(
     bands_c = _band_rows(
         minhash_signatures(corpus, **sig_kwargs), id_col, n_bands, n_hashes
     ).select(F.col(id_col).alias("__cid"), "band_idx", "band_sig")
-    obs = Observation()
-    cands = stage_cache(
+    cands, cand_metrics = measured_stage(
         bands_b.join(bands_c, ["band_idx", "band_sig"])
         .select("__bid", "__cid")
         .distinct()  # ids only through the dedup exchange
-        .observe(obs, F.count(F.lit(1)).alias("n")),
-        eager=True,
     )
-    if cache_registry is not None:
-        cache_registry.append(cands)
-    n_cands = obs.get["n"]
-    small_cands = 0 < n_cands <= broadcast_candidates_max
     set_b_src = _ensure_parallelism(batch)
     set_c_src = _ensure_parallelism(corpus)
-    if small_cands:
+    if broadcast_fits(batch.sparkSession, cand_metrics):
         set_b_src = set_b_src.join(
             F.broadcast(cands.select(F.col("__bid").alias(id_col)).distinct()),
             id_col,
@@ -1265,16 +1257,16 @@ def minhash_dedup_against(
     inter = F.size(F.array_intersect(F.col("__set_b"), F.col("__set_c")))
     union = F.size(F.col("__set_b")) + F.size(F.col("__set_c")) - inter
     contaminated = (
-        (F.broadcast(cands) if small_cands else cands)
+        broadcast_if_fits(cands, cand_metrics)
         .join(set_b, "__bid")
         .join(set_c, "__cid")
         .where(F.round(inter / union.cast("double"), 6) >= F.lit(min_jaccard))
         .select(F.col("__bid").alias(id_col))
         .distinct()
     )
-    if small_cands:
-        contaminated = F.broadcast(contaminated)
-    return batch.join(contaminated, id_col, "left_anti")
+    return batch.join(
+        broadcast_if_fits(contaminated, cand_metrics), id_col, "left_anti"
+    )
 
 
 def _hashed_shingles_expr(text_col, k: int):
@@ -1765,8 +1757,6 @@ def minhash_dedup_against_index(
     batch: DataFrame,
     index_dir: str,
     min_jaccard: float = 0.1,
-    broadcast_candidates_max: int = 1_000_000,
-    cache_registry: list | None = None,
     pushdown_max_rows: int = 0,
 ) -> DataFrame:
     """Drop batch docs near-duplicating ANY indexed doc — without touching
@@ -1802,36 +1792,21 @@ def minhash_dedup_against_index(
     archive row groups.
 
     The candidate-id filter is BROADCAST into the shingle-set scan only
-    while the candidate-pair count (measured, not assumed — it rides the
-    candidate materialization as an observed metric) stays at or below
-    ``broadcast_candidates_max``; a backfill-sized batch hitting hot bands
-    (boilerplate-heavy corpora can match one band_sig to millions of
-    corpus docs) falls back to a shuffled left-semi join instead of
-    building an unbounded id set on the driver. Both postures are the
-    same logical plan minus the hint — output-identical, pinned by test.
-    The default bound (1M pairs) keeps the broadcast tens of MBs even
-    with long string ids, far under Spark's 8 GB broadcast ceiling.
+    while the candidate pairs — a measured stage cache
+    (caching.measured_stage) — fit the broadcast threshold; a
+    backfill-sized batch hitting hot bands (boilerplate-heavy corpora can
+    match one band_sig to millions of corpus docs) falls back to a
+    shuffled left-semi join instead of building an unbounded id set on
+    the driver. Both postures are the same logical plan minus the hint —
+    output-identical, pinned by test.
 
     Eager at call time: the candidate set materializes when called (it is
-    consumed by both the verify join and the id filter, and its count
+    consumed by both the verify join and the id filter, and its size
     gates the broadcast posture), so Spark jobs fire during construction —
-    same caveat as ``graph.pagerank``.
-
-    Cache lifetime: the materialized candidate frame is a stage cache
-    that — under the default ``local_checkpoint`` policy — the cache
-    manager does NOT track, so it lingers until driver GC. For a one-shot
-    nightly probe that is fine; a LONG-RUNNING caller invoking this per
-    micro-batch (the streaming archive gate) would accumulate executor
-    storage across batches. Such callers pass ``cache_registry=[]``: the
-    cached frame is appended to it, and once the returned frame is
-    MATERIALIZED (written/collected — not before: the verify join reads
-    the cache lazily) the caller releases it via
-    :func:`sat_bucket_spark.caching.release_stage_cache` with
-    ``destructive=True``."""
-    from pyspark.sql import Observation
-
-    from sat_bucket_spark.caching import stage_cache
-
+    same caveat as ``graph.pagerank``. A long-running caller invoking this
+    per micro-batch (the streaming archive gate) wraps the call and the
+    result's write in ``caching.stage_scope()``, which frees the candidate
+    cache; otherwise it lingers until driver GC."""
     spark = batch.sparkSession
     p, bands_c, sets_c = load_minhash_index(spark, index_dir)
     id_col = p["id_col"]
@@ -1871,25 +1846,17 @@ def minhash_dedup_against_index(
         .distinct()
     )
     # cands feeds TWO consumers (the verify join and the candidate-id
-    # filter) and its count gates the broadcast posture, so materialize it
-    # once under the stage-cache policy with the count riding the
-    # materialization job as an observed metric — no second band join, no
-    # separate aggregate action.
-    obs = Observation()
-    cands = stage_cache(
-        cands.observe(obs, F.count(F.lit(1)).alias("n")), eager=True
-    )
-    if cache_registry is not None:
-        cache_registry.append(cands)
-    n_cands = obs.get["n"]
-    small_cands = 0 < n_cands <= broadcast_candidates_max
+    # filter) and its size gates the broadcast posture: one measured
+    # materialization — no second band join, no separate aggregate action.
+    cands, cand_metrics = measured_stage(cands)
+    small_cands = broadcast_fits(spark, cand_metrics)
     set_b_src = _ensure_parallelism(batch)
     if small_cands:
         # r17 (§1.2): the verify join keeps only rows with candidates, so
         # shingling the REST of the batch is thrown-away work — pre-filter
         # with a broadcast semi-join on the (already materialized, counted)
         # candidate ids before the shingle projection. Map-side only, no
-        # new shuffle; gated on the same measured bound as every other
+        # new shuffle; gated on the same measurement as every other
         # candidate broadcast. Output-identical: the verify's inner join
         # on __bid drops exactly those rows anyway.
         set_b_src = set_b_src.join(
@@ -1910,40 +1877,37 @@ def minhash_dedup_against_index(
     set_c = sets_c.select(
         F.col("content_id").alias("__cid"), F.col("shingle_set").alias("__set_c")
     )
-    if 0 < n_cands <= min(pushdown_max_rows, broadcast_candidates_max):
+    if small_cands and 0 < cand_metrics["n"] <= pushdown_max_rows:
         cids = sorted(
             r["__cid"] for r in cands.select("__cid").distinct().collect()
         )
         set_c = set_c.where(F.col("__cid").isin(cids))
     else:
-        cand_ids = cands.select("__cid").distinct()
-        if n_cands <= broadcast_candidates_max:
-            cand_ids = F.broadcast(cand_ids)
+        cand_ids = broadcast_if_fits(cands.select("__cid").distinct(), cand_metrics)
         set_c = set_c.join(cand_ids, "__cid", "left_semi")
     inter = F.size(F.array_intersect(F.col("__set_b"), F.col("__set_c")))
     union = F.size(F.col("__set_b")) + F.size(F.col("__set_c")) - inter
     # the candidate pairs are the measured-bounded side of the verify
     # joins — broadcast them under the same gate so neither shingle side
-    # is ever shuffle-planned for the verify (ids-only frame, <= n_cands
-    # rows)
+    # is ever shuffle-planned for the verify (ids-only frame)
     contaminated = (
-        (F.broadcast(cands) if small_cands else cands)
+        broadcast_if_fits(cands, cand_metrics)
         .join(set_b, "__bid")
         .join(set_c, "__cid")
         .where(F.round(inter / union.cast("double"), 6) >= F.lit(min_jaccard))
         .select(F.col("__bid").alias(id_col))
         .distinct()
     )
-    if small_cands:
-        # r17 (§3.1): contaminated is bounded by the measured candidate
-        # count, but its aggregate-over-checkpoint subtree carries unknown
-        # stats, so the planner SMJ-shuffles the whole batch for the final
-        # anti-join; AQE demotes it to a broadcast join at runtime but
-        # only AFTER the batch's shuffle map side is written (executed
-        # plan: AQEShuffleRead local over a materialized Exchange). The
-        # hint removes that batch-sized shuffle write from the plan.
-        contaminated = F.broadcast(contaminated)
-    return batch.join(contaminated, id_col, "left_anti")
+    # r17 (§3.1): contaminated is bounded by the measured candidates, but
+    # its aggregate-over-checkpoint subtree carries unknown stats, so the
+    # planner SMJ-shuffles the whole batch for the final anti-join; AQE
+    # demotes it to a broadcast join at runtime but only AFTER the batch's
+    # shuffle map side is written (executed plan: AQEShuffleRead local over
+    # a materialized Exchange). The hint removes that batch-sized shuffle
+    # write from the plan.
+    return batch.join(
+        broadcast_if_fits(contaminated, cand_metrics), id_col, "left_anti"
+    )
 
 
 def add_simhash(
@@ -2946,7 +2910,6 @@ def keep_first_by_signature(
     n_bits: int = 64,
     max_hamming: int = 3,
     n_bands: int = 4,
-    broadcast_signatures_max: int = 10_000_000,
 ) -> DataFrame:
     """Keep-first verdicts over any integer bit-signature column — the
     shared engine behind :func:`simhash_dedup` and
@@ -2968,24 +2931,20 @@ def keep_first_by_signature(
     on the collapsed table. Returns ``(id, sig, n_copies, kept)``; NULL
     signatures must be filtered by the caller.
 
-    Expansion-join shape (r17, guide §3.1): the collapsed table's row
-    count rides its materialization as an observed metric, and while it
-    stays at or below ``broadcast_signatures_max`` both the groups and
-    the neighbor-verdict frames are broadcast into the step-3 expansion
-    joins — the row-count-sized ``sigs`` side is never shuffle-planned
-    for them (measured: without the hint the expansion executed as a
+    Expansion-join shape (r17, guide §3.1): the collapsed table is a
+    measured stage cache (caching.measured_stage), and while it fits the
+    broadcast threshold both the groups and the neighbor-verdict frames
+    are broadcast into the step-3 expansion joins — the row-count-sized
+    ``sigs`` side is never shuffle-planned for them (measured: without the hint the expansion executed as a
     SortMergeJoin re-exchanging the full sigs frame, because the caches'
     ``LogicalRDD`` drops the groupBy's partitioning and AQE did not
     demote the join at runtime). Above the bound — distinct-signature
     cardinality approaching row count — the shuffled shape is unchanged.
     Both postures are output-identical. The groups materialization this
     measurement rides is eager, so jobs fire at call time (the
-    probe-operator convention).
+    probe-operator convention); long-running callers free the caches with
+    ``caching.stage_scope()``.
     """
-    from pyspark.sql import Observation
-
-    from sat_bucket_spark.caching import stage_cache
-
     if n_bands <= max_hamming:
         raise ValueError(
             f"n_bands ({n_bands}) must exceed max_hamming ({max_hamming}) "
@@ -2997,18 +2956,12 @@ def keep_first_by_signature(
     mask = (1 << width) - 1
 
     sigs = stage_cache(sigs.select(id_col, sig_col))
-    obs = Observation()
-    groups = stage_cache(
-        sigs.groupBy(sig_col)
-        .agg(
+    groups, group_metrics = measured_stage(
+        sigs.groupBy(sig_col).agg(
             F.min(id_col).alias("__rep_id"),
             F.count(F.lit(1)).alias("n_copies"),
         )
-        .observe(obs, F.count(F.lit(1)).alias("n")),
-        eager=True,
     )
-    n_groups = obs.get["n"]
-    small_groups = 0 < n_groups <= broadcast_signatures_max
     bands = groups.select(
         sig_col,
         "__rep_id",
@@ -3042,15 +2995,11 @@ def keep_first_by_signature(
         .groupBy(sig_col)
         .agg(F.min("__nbr_rep").alias("__min_nbr_rep"))
     )
-    # neighbors is bounded by the collapsed table (one row per distinct
-    # signature that HAS a neighbor), so the same measured gate covers it
+    # neighbors is bounded by the collapsed table (one narrower row per
+    # distinct signature that HAS a neighbor), so the same gate covers it
     return (
-        sigs.join(F.broadcast(groups) if small_groups else groups, sig_col)
-        .join(
-            F.broadcast(neighbors) if small_groups else neighbors,
-            sig_col,
-            "left",
-        )
+        sigs.join(broadcast_if_fits(groups, group_metrics), sig_col)
+        .join(broadcast_if_fits(neighbors, group_metrics), sig_col, "left")
         .select(
             id_col,
             sig_col,

@@ -31,32 +31,24 @@ keep-lowest-id dedup policy consumes.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sat_bucket_spark.caching import (
+    broadcast_if_fits,
+    measured_stage,
     release_stage_cache,
     round_cache,
-    stage_cache,
 )
 
 
-def _eager_cache(df: DataFrame) -> DataFrame:
-    """Round-boundary materialization for the iterative loops: always
-    eager and always lineage-truncating — see caching.round_cache for why
-    plain persist is not an option here (exponential plan growth)."""
-    return round_cache(df)
-
-
-def _fingerprint_exprs(cols):
-    """The ONE definition of the loop fingerprint: row count + an
-    order-independent xor-fold hash (overflow-free under ANSI mode).
-    Shared by the observed-metrics fast path and the exact-aggregate
-    fallback so the two can never diverge."""
-    return (
-        F.count(F.lit(1)).alias("n"),
-        F.bit_xor(F.xxhash64(*cols)).alias("h"),
-    )
+def _xor_hash(cols=("u", "v")):
+    """The loop fingerprint's hash half: an order-independent xor-fold
+    (overflow-free under ANSI mode). With the row count it is the
+    convergence state, read as an observed metric off each round's
+    materialization (caching.measured_stage, whose retry caveat applies)
+    or, on the slow path, by :func:`_exact_fingerprint`."""
+    return F.bit_xor(F.xxhash64(*cols)).alias("h")
 
 
 def _exact_fingerprint(df: DataFrame, cols=("u", "v")) -> tuple:
@@ -64,43 +56,14 @@ def _exact_fingerprint(df: DataFrame, cols=("u", "v")) -> tuple:
     construction (aggregates recompute on task retry, unlike observation
     accumulators). The slow path: used only to double-check a suspected
     non-convergence before raising (see connected_components)."""
-    row = df.agg(*_fingerprint_exprs(cols)).collect()[0]
+    row = df.agg(F.count(F.lit(1)).alias("n"), _xor_hash(cols)).collect()[0]
     return (row["n"], row["h"])
 
 
-def _observed(df: DataFrame, cols):
-    obs = Observation()
-    return df.observe(obs, *_fingerprint_exprs(cols)), obs
-
-
-def _cached_with_fingerprint(df: DataFrame, cols=("u", "v")):
-    """Eager-cache ``df`` and return ``(cached, (count, hash))`` where the
-    fingerprint rides the materialization job itself as Spark observed
-    metrics — no separate aggregate action. Both iterative loops route on
-    the count (driver threshold) and ``connected_components`` additionally
-    uses the order-independent xor-fold hash as its convergence state, so
-    each round costs exactly ONE job. All three stage-cache shapes
-    (localCheckpoint / persist / reliable checkpoint) materialize through
-    Dataset actions, which fire observations.
-
-    Retry caveat: observation accumulators can double-apply when a stage
-    is retried after executor loss, so a fingerprint may over-count on a
-    faulty cluster. Routing consequences are benign (over-count can only
-    push a small graph onto the distributed path, never a huge graph onto
-    the driver); convergence consequences are fail-safe (a corrupted
-    fingerprint compares UNEQUAL, forcing extra rounds, and
-    connected_components re-verifies with :func:`_exact_fingerprint`
-    before declaring non-convergence)."""
-    observed, obs = _observed(df, cols)
-    cached = _eager_cache(observed)
-    metrics = obs.get
-    return cached, (metrics["n"], metrics["h"])
-
-
-def _persisted_with_fingerprint(df: DataFrame, cols=("u", "v")):
-    """Fingerprinted eager cache for LOOP-INVARIANT frames (pagerank's
-    edge set and node/degree base) — ``persist`` instead of the round
-    cache, because:
+def _persist(df: DataFrame) -> DataFrame:
+    """Eager ``persist`` for LOOP-INVARIANT frames (pagerank's edge set
+    and node/degree base under ``invariant_cache="partitioned"``) instead
+    of the round cache, because:
 
     - partitioning SURVIVES: ``InMemoryTableScan`` reports the cached
       plan's outputPartitioning/ordering, while ``localCheckpoint``'s
@@ -112,18 +75,12 @@ def _persisted_with_fingerprint(df: DataFrame, cols=("u", "v")):
       frames does not apply — these frames' lineage is static;
     - lineage kept means executor loss recomputes: safe in every
       stage-cache mode, and the release is the cache-manager unpersist.
-
-    The (count, hash) fingerprint rides the eager count job as observed
-    metrics, same as :func:`_cached_with_fingerprint` (whose retry caveat
-    applies equally).
     """
     from pyspark import StorageLevel
 
-    observed, obs = _observed(df, cols)
-    cached = observed.persist(StorageLevel.MEMORY_AND_DISK)
-    cached.count()
-    metrics = obs.get
-    return cached, (metrics["n"], metrics["h"])
+    out = df.persist(StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    return out
 
 __all__ = [
     "connected_components",
@@ -230,15 +187,18 @@ def connected_components(
     # as observed metrics and serves BOTH the driver-threshold gate (its
     # count) and the distributed loop's round-0 convergence state — no
     # aggregate action at all just to decide the route.
-    e, prev = _cached_with_fingerprint(
+    e, metrics = measured_stage(
         edges.select(
             F.greatest(F.col(src), F.col(dst)).alias("u"),
             F.least(F.col(src), F.col(dst)).alias("v"),
         )
         .where(F.col("u") != F.col("v"))
-        .distinct()
+        .distinct(),
+        _xor_hash(),
+        cache=round_cache,
     )
-    if driver_threshold and prev[0] <= driver_threshold:
+    prev = (metrics["n"], metrics["h"])
+    if driver_threshold and metrics["n"] <= driver_threshold:
         from pyspark.sql.types import StructField, StructType
 
         pairs = [(r["u"], r["v"]) for r in e.collect()]
@@ -268,7 +228,10 @@ def connected_components(
 
     for _ in range(max_iterations):
         prev_frame = e
-        e, cur = _cached_with_fingerprint(_small_star(_large_star(e)))
+        e, metrics = measured_stage(
+            _small_star(_large_star(e)), _xor_hash(), cache=round_cache
+        )
+        cur = (metrics["n"], metrics["h"])
         # The new round is eagerly materialized with truncated lineage, so
         # the old round's blocks (or reliable-checkpoint files) are no
         # longer an input — free them now instead of waiting for driver GC
@@ -279,7 +242,7 @@ def connected_components(
         prev = cur
     else:
         # Observation accumulators can over-count under task retries (see
-        # _cached_with_fingerprint), which would read as perpetual
+        # caching.measured_stage), which would read as perpetual
         # non-convergence on a converged graph. Before raising, verify
         # with exactly-once aggregates: one more large+small round, both
         # sides fingerprinted by dedicated agg actions. If they match the
@@ -307,8 +270,6 @@ def update_connected_components(
     component_col: str = "component",
     max_iterations: int = 50,
     driver_threshold: int = 200_000,
-    broadcast_merge_max: int = 10_000_000,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Merge a NEW batch of edges into a standing ``(node, component)``
     map — without recomputing components over the corpus.
@@ -351,55 +312,33 @@ def update_connected_components(
     remapped) plus every previously-unseen endpoint of ``new_edges``
     (unseen nodes with only self-loop edges are excluded, matching
     :func:`connected_components`' isolated-node convention).
-    The endpoint and merge frames are broadcast while their measured row
-    counts (each bounded by 2x the batch's distinct endpoints, never
-    corpus-sized; Observations riding the frames' materializations — no
-    extra jobs) stay at or below ``broadcast_merge_max``, with a
-    shuffled-join fallback above — same measured-gate convention as the
-    index probes.
-
-    Cache lifetime: the endpoint, lookup-slice, and merge frames are
-    eager stage caches, each consumed by at least two downstream joins.
-    Long-lived callers running repeated merges (the nightly/streaming
-    maintenance this exists for) pass ``cache_registry=[]`` and release
-    via :func:`sat_bucket_spark.caching.release_stage_cache` once the
-    returned frame is materialized — the same contract as the index
-    probes; one-shot callers may rely on driver GC (documented hazard in
-    caching.py).
+    The endpoint, lookup-slice and merge frames (each bounded by 2x the
+    batch's distinct endpoints, never corpus-sized) are measured stage
+    caches, broadcast while they fit (caching.broadcast_if_fits), with a
+    shuffled-join fallback above. Jobs fire at call time; long-lived
+    callers wrap the call and the result's write in
+    ``caching.stage_scope()`` to free the caches.
     """
-    from pyspark.sql import Observation
-
     m = standing.select(
         F.col(node_col).alias("__n"), F.col(component_col).alias("__c")
     )
     e = new_edges.select(F.col(src).alias("__eu"), F.col(dst).alias("__ev"))
     # The batch's distinct endpoints — batch-bounded, the frame every
-    # standing-map access is keyed by. Eager-cached with an observed
-    # count so the broadcast decision is measured, not assumed.
-    obs_end = Observation()
-    endpoints = stage_cache(
+    # standing-map access is keyed by.
+    endpoints, end_metrics = measured_stage(
         e.select(F.col("__eu").alias("__n"))
         .unionByName(e.select(F.col("__ev").alias("__n")))
         .distinct()
-        .observe(obs_end, F.count(F.lit(1)).alias("n")),
-        eager=True,
     )
-    if cache_registry is not None:
-        cache_registry.append(endpoints)
-    n_end = obs_end.get["n"]
-    small_batch = n_end <= broadcast_merge_max
     # Slice the standing map down to the rows the batch can touch: an
     # inner join with the BROADCAST endpoints keeps the corpus-sized map
     # on the stream side — one map-side scan, no Exchange on it, output
-    # at most n_end rows. (Above the gate the slice join shuffles both
+    # at most one row per endpoint. (Above the gate the slice join shuffles both
     # sides — documented fallback, same as the merge-application join.)
-    lookup = stage_cache(
-        m.join(F.broadcast(endpoints) if small_batch else endpoints, "__n"),
-        eager=True,
+    lookup, lookup_metrics = measured_stage(
+        m.join(broadcast_if_fits(endpoints, end_metrics), "__n")
     )
-    if cache_registry is not None:
-        cache_registry.append(lookup)
-    lk_b = F.broadcast(lookup) if small_batch else lookup
+    lk_b = broadcast_if_fits(lookup, lookup_metrics)
     # contract endpoints through the batch-sized slice; unseen nodes are
     # their own representatives. Every join here is batch-vs-batch —
     # the full map is never on a join's build side.
@@ -417,17 +356,9 @@ def update_connected_components(
         contracted_edges, src="cu", dst="cv",
         max_iterations=max_iterations, driver_threshold=driver_threshold,
     ).select(F.col("node").alias("__rep"), F.col("component").alias("__final"))
-    # batch-bounded measured gate: contracted CC output rows <= 2x distinct
-    # batch endpoints; the count rides the eager materialization as an
-    # observed metric — no separate aggregate job
-    obs = Observation()
-    merge = stage_cache(
-        merge.observe(obs, F.count(F.lit(1)).alias("n")), eager=True
-    )
-    if cache_registry is not None:
-        cache_registry.append(merge)
-    n_merge = obs.get["n"]
-    merge_b = F.broadcast(merge) if n_merge <= broadcast_merge_max else merge
+    # batch-bounded: contracted CC output rows <= 2x distinct endpoints
+    merge, merge_metrics = measured_stage(merge)
+    merge_b = broadcast_if_fits(merge, merge_metrics)
 
     updated_standing = (
         standing.select(
@@ -666,11 +597,9 @@ def pagerank(
     # connected_components) — no separate e.count() action for the gate.
     e = e.where(F.col("u") != F.col("v")).distinct()
     if partitioned:
-        e, (n_edges, _) = _persisted_with_fingerprint(
-            e.repartition("u").sortWithinPartitions("u")
-        )
-    else:
-        e, (n_edges, _) = _cached_with_fingerprint(e)
+        e = e.repartition("u").sortWithinPartitions("u")
+    e, e_metrics = measured_stage(e, cache=_persist if partitioned else round_cache)
+    n_edges = e_metrics["n"]
 
     def _node_frame(edge_frame):
         return (
@@ -747,12 +676,11 @@ def pagerank(
     # the per-round plan carries no 1-row crossJoins for it.
     base = nodes.join(outdeg, "node", "left")
     if partitioned:
-        base, (n_nodes, _) = _persisted_with_fingerprint(
-            base.repartition("node").sortWithinPartitions("node"),
-            cols=("node",),
-        )
-    else:
-        base, (n_nodes, _) = _cached_with_fingerprint(base, cols=("node",))
+        base = base.repartition("node").sortWithinPartitions("node")
+    base, base_metrics = measured_stage(
+        base, cache=_persist if partitioned else round_cache
+    )
+    n_nodes = base_metrics["n"]
     # N is FOLDED into the rank formula (teleport term, 1/N init, dangling
     # mass split), so an observation over-count under stage retries would
     # make every rank silently wrong (mass no longer sums to 1) — unlike
@@ -816,7 +744,7 @@ def pagerank(
         # (node-keyed join against base); at scale that single exchange
         # buys the removal of entire corpus-wide rounds (see
         # update_pagerank's receipt).
-        seeded = _eager_cache(base.join(init, "node", "left"))
+        seeded = round_cache(base.join(init, "node", "left"))
         srow = seeded.agg(
             F.sum(F.col("__r0").cast("decimal(38,18)")).alias("m"),
             F.count("__r0").alias("k"),
@@ -884,7 +812,7 @@ def pagerank(
         # plan, and the per-round edge/base exchanges dedupe to
         # ReusedExchange when the block materializes.
         if (_i + 1) % fuse == 0 or _i == iterations - 1:
-            new_ranks = _eager_cache(new_ranks)
+            new_ranks = round_cache(new_ranks)
             if cached_ranks is not None:
                 release_stage_cache(cached_ranks, destructive=True)
             cached_ranks = new_ranks

@@ -16,7 +16,12 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from sat_bucket_spark.caching import stage_cache
+from sat_bucket_spark.caching import (
+    broadcast_fits,
+    broadcast_if_fits,
+    measured_stage,
+    stage_cache,
+)
 
 __all__ = [
     "append_to_ivfpq_index",
@@ -1639,29 +1644,27 @@ def dedupe_ivfpq_index(spark, index_dir: str) -> int:
         codes.where(F.col("__cluster").isin(dup_clusters))
         .dropDuplicates([id_col, "__cluster", "pq_code"])
     )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        healed.write.mode("overwrite").partitionBy("__cluster").parquet(
-            spark_codes_path
+    # dynamic overwrite per write: only the healed clusters' partitions
+    # are replaced, and no other write in the session changes mode
+    healed.write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("__cluster").parquet(spark_codes_path)
+    if params["store_vectors"]:
+        # the refine store replays the same appends — heal it in the
+        # same clusters, keeping files id-sorted for the verify's
+        # pushed-In row-group pruning
+        vec_path = os.path.join(index_dir, "vectors")
+        vecs = spark.read.parquet(vec_path)
+        (
+            vecs.where(F.col("__cluster").isin(dup_clusters))
+            .dropDuplicates([id_col, "__cluster", params["vec_col"]])
+            .repartition("__cluster")
+            .sortWithinPartitions(id_col)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__cluster")
+            .parquet(vec_path)
         )
-        if params["store_vectors"]:
-            # the refine store replays the same appends — heal it in the
-            # same clusters, keeping files id-sorted for the verify's
-            # pushed-In row-group pruning
-            vec_path = os.path.join(index_dir, "vectors")
-            vecs = spark.read.parquet(vec_path)
-            (
-                vecs.where(F.col("__cluster").isin(dup_clusters))
-                .dropDuplicates([id_col, "__cluster", params["vec_col"]])
-                .repartition("__cluster")
-                .sortWithinPartitions(id_col)
-                .write.mode("overwrite")
-                .partitionBy("__cluster")
-                .parquet(vec_path)
-            )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return len(dup_clusters)
 
 
@@ -1762,10 +1765,7 @@ def semantic_dedup_against_index(
     verify_vectors: DataFrame | str | None = None,
     id_col: str | None = None,
     vec_col: str = "embedding",
-    broadcast_batch_max: int = 1_000_000,
-    broadcast_candidates_max: int = 1_000_000,
     pushdown_max_ids: int = 0,
-    cache_registry: list | None = None,
 ) -> DataFrame:
     """Drop batch vectors that semantically duplicate ANY indexed corpus
     vector — without touching the corpus: the probe's inputs are the
@@ -1838,21 +1838,16 @@ def semantic_dedup_against_index(
     Scale shape: batch rows never shuffle corpus-sized data — the probed
     codes scan is partition-pruned to the batch's probed clusters
     (bounded collect of <= n_clusters ints), the batch's (id, cluster,
-    LUT) frame is broadcast into it while that frame's MEASURED row count
-    (batch rows x n_probe; an Observation riding the probe-cluster
-    materialization — no extra job) stays <= ``broadcast_batch_max``,
-    with a shuffled join fallback
-    above; candidate ids filter the verify scan broadcast/semi-join
-    gated the same way. Both postures of each gate are the same logical
-    plan minus the hint — output-identical.
+    LUT) frame — a measured stage cache whose size counts the ``m x
+    ksub`` LUT every row carries — is broadcast into it while it fits
+    the broadcast threshold (caching.broadcast_if_fits), with a shuffled
+    join fallback above; candidate ids filter the verify scan
+    broadcast/semi-join gated the same way. Both postures of each gate
+    are the same logical plan minus the hint — output-identical.
 
-    Long-running callers (the streaming archive gate) pass
-    ``cache_registry=[]`` and release the appended stage caches once the
-    returned frame is materialized — the same lifetime contract as
-    :func:`~sat_bucket_spark.operators.dedup.minhash_dedup_against_index`.
+    Long-running callers (the streaming archive gate) wrap the call and
+    the result's write in ``caching.stage_scope()`` to free the caches.
     """
-    from pyspark.sql import Observation
-
     spark = batch.sparkSession
     params, cents, books, codes = load_ivfpq_index(spark, index_dir)
     m, ksub, dsub = books.shape
@@ -1906,24 +1901,16 @@ def semantic_dedup_against_index(
         qn2 = F.aggregate(qv, F.lit(0.0), lambda acc, x: acc + x * x)
         q_base = q_base.withColumn("__lut", lut).withColumn("__qn2", qn2)
         q_cols += [F.col("__lut"), F.col("__qn2")]
-    obs = Observation()
-    q = stage_cache(
-        q_base.join(F.broadcast(probe_df), "__qcluster")
-        .select(*q_cols)
-        .observe(obs, F.count(F.lit(1)).alias("n")),
-        eager=True,
+    # the broadcast relation is measured as the frame actually shipped
+    # (batch rows x n_probe, LUTs included)
+    q, q_metrics = measured_stage(
+        q_base.join(F.broadcast(probe_df), "__qcluster").select(*q_cols)
     )
-    if cache_registry is not None:
-        cache_registry.append(q)
-    # bounded collect: at most n_clusters ints, independent of corpus size;
-    # the broadcast relation's measured row count (batch rows x n_probe —
-    # the frame actually shipped) rides the same materialization job
+    # bounded collect: at most n_clusters ints, independent of corpus size
     probed = [r["__cluster"] for r in q.select("__cluster").distinct().collect()]
-    n_batch = obs.get["n"]
     pruned = codes.where(F.col("__cluster").isin(probed))
 
-    q_side = F.broadcast(q) if n_batch <= broadcast_batch_max else q
-    flagged_pairs = pruned.join(q_side, "__cluster")
+    flagged_pairs = pruned.join(broadcast_if_fits(q, q_metrics), "__cluster")
     if adc_margin is not None:
         score = F.aggregate(
             F.zip_with(
@@ -1938,14 +1925,15 @@ def semantic_dedup_against_index(
         )
 
     if verify_vectors is None:
+        # r17 (§3.1): contaminated (ids only) is bounded by the measured
+        # probe frame, but without the hint the planner SMJ-shuffles the
+        # whole batch for the anti-join (AQE rescues it only after the
+        # batch's shuffle map side is written). It holds at most the probe
+        # frame's n rows of ids only, so it is gated on that size, not on
+        # the LUT-wide probe frame's bytes.
         contaminated = flagged_pairs.select(F.col("__bid").alias(id_col)).distinct()
-        if 0 < n_batch <= broadcast_batch_max:
-            # r17 (§3.1): contaminated is bounded by the measured probe-frame
-            # row count, but without the hint the planner SMJ-shuffles the
-            # whole batch for the anti-join (AQE rescues it only after the
-            # batch's shuffle map side is written). Same measured gate as
-            # the probe-frame broadcast above.
-            contaminated = F.broadcast(contaminated)
+        ids_bytes = q_metrics["n"] * contaminated._jdf.schema().defaultSize()
+        contaminated = broadcast_if_fits(contaminated, {"bytes": ids_bytes})
         clean = probed_batch.join(contaminated, id_col, "left_anti")
         return clean.unionByName(bypass)
 
@@ -1953,18 +1941,11 @@ def semantic_dedup_against_index(
     # the verify scan reads candidate ids, never the whole archive. The
     # pairs are already unique (a corpus id lives in exactly ONE cluster,
     # which a batch row probes at most once), so no dedup shuffle here.
-    obs_c = Observation()
-    cands = stage_cache(
+    cands, cand_metrics = measured_stage(
         flagged_pairs.select("__bid", F.col(corpus_id).alias("__cid"))
-        .observe(obs_c, F.count(F.lit(1)).alias("n")),
-        eager=True,
     )
-    if cache_registry is not None:
-        cache_registry.append(cands)
-    n_cands = obs_c.get["n"]
-    small_cands = 0 < n_cands <= broadcast_candidates_max
     vb_src = probed_batch
-    if small_cands:
+    if broadcast_fits(spark, cand_metrics):
         # r17 (§1.2): the verify join keeps only rows with ADC candidates —
         # pre-filter the batch with a broadcast semi-join on the (already
         # materialized, counted) candidate ids so the per-row norm fold and
@@ -1990,7 +1971,7 @@ def semantic_dedup_against_index(
         base = spark.read.parquet(os.path.join(index_dir, "vectors")).where(
             F.col("__cluster").isin(probed)
         )
-        if 0 < n_cands <= pushdown_max_ids:
+        if 0 < cand_metrics["n"] <= pushdown_max_ids:
             # bounded collect off the already-materialized candidate cache;
             # the pushed In prunes id-sorted row groups inside the probed
             # partitions — verify I/O is candidate-bounded
@@ -1999,9 +1980,9 @@ def semantic_dedup_against_index(
             )
             base = base.where(F.col(corpus_id).isin(cids))
         else:
-            cand_ids = cands.select("__cid").distinct()
-            if n_cands <= broadcast_candidates_max:
-                cand_ids = F.broadcast(cand_ids)
+            cand_ids = broadcast_if_fits(
+                cands.select("__cid").distinct(), cand_metrics
+            )
             base = base.join(
                 cand_ids.withColumnRenamed("__cid", corpus_id),
                 corpus_id, "left_semi",
@@ -2012,9 +1993,7 @@ def semantic_dedup_against_index(
             norm_expr(store_vec, dim).alias("__nb"),
         )
     else:
-        cand_ids = cands.select("__cid").distinct()
-        if n_cands <= broadcast_candidates_max:
-            cand_ids = F.broadcast(cand_ids)
+        cand_ids = broadcast_if_fits(cands.select("__cid").distinct(), cand_metrics)
         vc = verify_vectors.select(
             F.col(corpus_id).alias("__cid"),
             F.col(vec_col).alias("__vb"),
@@ -2023,21 +2002,21 @@ def semantic_dedup_against_index(
     cos = _cosine_prenormed(dot_expr("__va", "__vb", dim), F.col("__na"), F.col("__nb"))
     # the candidate pairs are the measured-bounded side of the verify
     # joins — broadcast them under the same gate so neither vb nor vc is
-    # ever shuffle-planned for the verify (ids-only frame, <= n_cands rows)
+    # ever shuffle-planned for the verify (ids-only frame)
     contaminated = (
-        (F.broadcast(cands) if small_cands else cands)
+        broadcast_if_fits(cands, cand_metrics)
         .join(vb, "__bid")
         .join(vc, "__cid")
         .where(F.round(cos, 6) >= F.lit(float(min_cosine)))
         .select(F.col("__bid").alias(id_col))
         .distinct()
     )
-    if small_cands:
-        # r17 (§3.1): same anti-join hint as the MinHash probe — the
-        # contaminated set is candidate-bounded (measured), so planning the
-        # batch into an SMJ shuffle for the final anti-join is pure waste.
-        contaminated = F.broadcast(contaminated)
-    clean = probed_batch.join(contaminated, id_col, "left_anti")
+    # r17 (§3.1): same anti-join hint as the MinHash probe — the
+    # contaminated set is candidate-bounded (measured), so planning the
+    # batch into an SMJ shuffle for the final anti-join is pure waste.
+    clean = probed_batch.join(
+        broadcast_if_fits(contaminated, cand_metrics), id_col, "left_anti"
+    )
     return clean.unionByName(bypass)
 
 

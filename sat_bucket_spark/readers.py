@@ -300,15 +300,17 @@ def read(
 
     paths = None
     if file_extension is not None or glob_pattern is not None or regex_pattern is not None:
-        from sat_bucket_spark.io import get_partition_filepaths
+        from sat_bucket_spark.io import _filepaths_by_partition
 
-        paths = get_partition_filepaths(
+        by_partition = _filepaths_by_partition(
             bucket_dir,
+            partitioning,
             extent=query_extent if use_pruning else None,
             extension=file_extension if file_extension is not None else ".parquet",
             glob_pattern=glob_pattern,
             regex_pattern=regex_pattern,
         )
+        paths = sorted(f for files in by_partition.values() for f in files)
         if not paths:
             raise ValueError("No files available matching your request.")
         subdirs = None  # the explicit file list already encodes the pruning

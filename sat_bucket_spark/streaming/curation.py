@@ -271,43 +271,39 @@ def _make_gate(
     def _gate(batch_df: DataFrame, batch_id: int) -> None:
         from pyspark.sql import Observation
 
-        from sat_bucket_spark.caching import release_stage_cache
+        from sat_bucket_spark.caching import stage_scope
 
         spark = batch_df.sparkSession
         batch_sink = f"{sink_dir}/batch={batch_id}"
         n_surv: int | None = None
         if not _committed(spark, batch_sink):
-            surv = batch_df
-            if bloom_index_dir is not None:
-                surv = dedup_exact_against_bloom_index(surv, bloom_index_dir)
-            probe_caches: list = []
-            if minhash_index_dir is not None:
-                surv = minhash_dedup_against_index(
-                    surv, minhash_index_dir, min_jaccard=min_jaccard,
-                    cache_registry=probe_caches,
-                )
-            if ivfpq_index_dir is not None:
-                verify = (
-                    ivfpq_verify(spark) if callable(ivfpq_verify)
-                    else ivfpq_verify
-                )
-                surv = semantic_dedup_against_index(
-                    surv, ivfpq_index_dir, min_cosine=min_cosine,
-                    n_probe=n_probe, vec_col=vec_col,
-                    verify_vectors=verify, adc_margin=adc_margin,
-                    cache_registry=probe_caches,
-                )
-            # the survivor count rides the sink write as an observed
-            # metric — no separate isEmpty job per batch
-            obs = Observation()
-            surv = surv.observe(obs, F.count(F.lit(1)).alias("n"))
-            surv.write.mode("overwrite").parquet(batch_sink)
-            n_surv = int(obs.get["n"])
-            # the write materialized the result, so the probes' candidate
-            # stage caches are dead weight — release them now, or a long-
-            # running query accumulates untracked executor blocks per batch
-            for cached in probe_caches:
-                release_stage_cache(cached, destructive=True)
+            # the probes' stage caches die with the scope, after the write
+            # materialized the result: a long-running query must not
+            # accumulate untracked executor blocks per batch
+            with stage_scope():
+                surv = batch_df
+                if bloom_index_dir is not None:
+                    surv = dedup_exact_against_bloom_index(surv, bloom_index_dir)
+                if minhash_index_dir is not None:
+                    surv = minhash_dedup_against_index(
+                        surv, minhash_index_dir, min_jaccard=min_jaccard,
+                    )
+                if ivfpq_index_dir is not None:
+                    verify = (
+                        ivfpq_verify(spark) if callable(ivfpq_verify)
+                        else ivfpq_verify
+                    )
+                    surv = semantic_dedup_against_index(
+                        surv, ivfpq_index_dir, min_cosine=min_cosine,
+                        n_probe=n_probe, vec_col=vec_col,
+                        verify_vectors=verify, adc_margin=adc_margin,
+                    )
+                # the survivor count rides the sink write as an observed
+                # metric — no separate isEmpty job per batch
+                obs = Observation()
+                surv = surv.observe(obs, F.count(F.lit(1)).alias("n"))
+                surv.write.mode("overwrite").parquet(batch_sink)
+                n_surv = int(obs.get["n"])
         if learn:
             staged = spark.read.parquet(batch_sink)
             if n_surv == 0 or (n_surv is None and staged.isEmpty()):

@@ -9,6 +9,7 @@ timeseries (FIXTURES.md §5).
 from __future__ import annotations
 
 import datetime
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import SparkSession
@@ -30,6 +31,34 @@ def spark():
         },
     )
     yield spark
+
+
+@pytest.fixture
+def no_broadcast(spark):
+    """``with no_broadcast():`` turns every measured broadcast gate off
+    (and Spark's own auto-broadcast with it): it sets
+    ``spark.sql.autoBroadcastJoinThreshold=-1`` and restores the previous
+    value on exit. The gate-off arm of the output-equality tests."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextmanager
+    def off():
+        prev = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, prev)
+
+    return off
+
+
+@pytest.fixture
+def cached_rdd_ids(spark):
+    """Callable returning the ids of every RDD holding storage blocks —
+    stage caches included, which the cache manager does not track."""
+    jsc = spark.sparkContext._jsc.sc()
+    return lambda: {i.id() for i in jsc.getRDDStorageInfo()}
 
 
 @pytest.fixture(scope="session")

@@ -97,13 +97,15 @@ class TestSemanticDedup:
         )
         assert got == want
 
-    def test_dedup_avoids_corpus_shuffle_when_drops_small(self, spark, emb):
+    def test_dedup_avoids_corpus_shuffle_when_drops_small(
+        self, spark, emb, no_broadcast
+    ):
         """r17 (§3.1): the drop-id set is measured at materialization; when
         it fits the broadcast bound, the survivor anti-join must be
         PLANNED broadcast — without the hint the corpus (embedding
         payloads included) was SortMergeJoin-shuffled even at a 215-row
         drop set, and AQE did not demote it at runtime. Gate off
-        (broadcast_dropped_max=0) must yield identical survivors."""
+        (no_broadcast) must yield identical survivors."""
         df, X = emb
         centroids = X[:6].copy()
         out = semantic_dedup(df, centroids, threshold=self.THRESHOLD)
@@ -115,10 +117,9 @@ class TestSemanticDedup:
         )
         assert "LeftAnti" in plan
         got = sorted(r["vec_id"] for r in out.collect())
-        ungated = semantic_dedup(
-            df, centroids, threshold=self.THRESHOLD, broadcast_dropped_max=0
-        )
-        assert sorted(r["vec_id"] for r in ungated.collect()) == got
+        with no_broadcast():
+            ungated = semantic_dedup(df, centroids, threshold=self.THRESHOLD)
+            assert sorted(r["vec_id"] for r in ungated.collect()) == got
 
     def test_survivor_invariants(self, spark, emb):
         df, X = emb

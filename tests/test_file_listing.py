@@ -82,3 +82,19 @@ class TestReadWithFileFilters:
             spark, bucket, extent=[5, 8, 0, 20], regex_pattern=r"part-\d+"
         ).count()
         assert plain == filtered > 0
+
+    def test_filtered_read_reads_bucket_info_once(self, spark, bucket, monkeypatch):
+        """read() lists the filtered files with the partitioning it already
+        holds: bucket_info.yaml is read once per call, as for a plain read."""
+        from sat_bucket_spark import io
+
+        calls = []
+        real = io.read_bucket_info
+
+        def counting(bucket_dir):
+            calls.append(bucket_dir)
+            return real(bucket_dir)
+
+        monkeypatch.setattr(io, "read_bucket_info", counting)
+        read(spark, bucket, extent=[5, 8, 0, 20], file_extension=".parquet")
+        assert len(calls) == 1

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from sat_bucket_spark.geodesy import (
@@ -40,6 +40,8 @@ class TestGeodesyProperties:
 
     @settings(max_examples=60, deadline=None)
     @given(lons, lats, lons, lats, st.integers(min_value=2, max_value=12))
+    # a ~9 885 km segment whose midpoint sits at 89.9998 deg latitude
+    @example(-178.9, 1.099609375, 1.1, 1.1, 3)
     def test_intermediate_even_spacing_and_endpoints(
         self, lon1, lat1, lon2, lat2, n
     ):

@@ -330,19 +330,19 @@ class TestPagerank:
         edges = [(1, 2), (2, 3), (3, 1), (1, 4)]
         clean = self._run(spark, edges, iterations=4, driver_threshold=0)
 
-        real = graph._cached_with_fingerprint
+        real = graph.measured_stage
 
-        def corrupt(df, cols=("u", "v")):
-            cached, (n, h) = real(df, cols)
-            if tuple(cols) == ("node",):  # the base frame — N's source
-                n += 7
-            return cached, (n, h)
+        def corrupt(df, *extra, **kw):
+            cached, metrics = real(df, *extra, **kw)
+            if df.columns[0] == "node":  # the base frame — N's source
+                metrics = {**metrics, "n": metrics["n"] + 7}
+            return cached, metrics
 
-        graph._cached_with_fingerprint = corrupt
+        graph.measured_stage = corrupt
         try:
             got = self._run(spark, edges, iterations=4, driver_threshold=0)
         finally:
-            graph._cached_with_fingerprint = real
+            graph.measured_stage = real
         assert got.keys() == clean.keys()
         for k in clean:
             assert abs(got[k] - clean[k]) < 1e-15
@@ -442,7 +442,7 @@ class TestPagerank:
         per block, not once per round. The pre-AQE plan print legitimately
         shows no reuse (AQE applies it through its stage cache at runtime),
         so this pins the EXECUTED block plan: capture each round-boundary
-        materialization via the loop's own _eager_cache hook and assert
+        materialization via the loop's own round_cache hook and assert
         every multi-round block resolved with AQE finalized and at least
         ``fuse_rounds - 1`` ReusedExchange nodes (>=, not ==, per the
         ADVICE r16 version-pinning note — exact reuse counts are an
@@ -460,21 +460,21 @@ class TestPagerank:
 
         fuse = 4
         captured = []
-        real = graph_mod._eager_cache
+        real = graph_mod.round_cache
 
         def capturing(frame):
             out = real(frame)
             captured.append(frame._jdf.queryExecution().executedPlan().toString())
             return out
 
-        graph_mod._eager_cache = capturing
+        graph_mod.round_cache = capturing
         try:
             pagerank(
                 df, damping=0.85, iterations=2 * fuse, directed=False,
                 driver_threshold=0, fuse_rounds=fuse,
             )
         finally:
-            graph_mod._eager_cache = real
+            graph_mod.round_cache = real
 
         # captures arrive in loop order: invariant edge cache, base cache,
         # then one per fused block — the block plans are the last
@@ -662,8 +662,10 @@ class TestUpdateConnectedComponents:
         }
         assert got == {0: 0, 5: 0, 6: 0}
 
-    def test_cache_registry_lifetime(self, spark):
-        from sat_bucket_spark.caching import release_stage_cache
+    def test_stage_scope_lifetime(self, spark, cached_rdd_ids):
+        """The endpoint, lookup-slice and merge caches live while the
+        scope is open (the result reads them) and are freed on exit."""
+        from sat_bucket_spark.caching import stage_scope
         from sat_bucket_spark.operators.graph import (
             connected_components,
             update_connected_components,
@@ -672,17 +674,32 @@ class TestUpdateConnectedComponents:
         standing = connected_components(
             spark.createDataFrame([(1, 2), (3, 4)], ["src", "dst"])
         )
-        reg: list = []
-        out = update_connected_components(
-            standing,
-            spark.createDataFrame([(2, 3)], ["src", "dst"]),
-            cache_registry=reg,
-        )
-        got = {r["node"]: r["component"] for r in out.collect()}
+        before = cached_rdd_ids()
+        with stage_scope():
+            out = update_connected_components(
+                standing, spark.createDataFrame([(2, 3)], ["src", "dst"])
+            )
+            got = {r["node"]: r["component"] for r in out.collect()}
+            assert len(cached_rdd_ids() - before) == 3
         assert got == {1: 1, 2: 1, 3: 1, 4: 1}
-        assert len(reg) == 3  # endpoints, lookup slice, merge
-        for cached in reg:
-            release_stage_cache(cached, destructive=True)
+        assert not cached_rdd_ids() - before
+
+    @staticmethod
+    def _broadcast_hinted_joins(df) -> int:
+        """Joins in ``df``'s optimized logical plan that carry an explicit
+        broadcast hint on either side (walked node by node)."""
+        n, stack = 0, [df._jdf.queryExecution().optimizedPlan()]
+        while stack:
+            node = stack.pop()
+            if node.getClass().getSimpleName() == "Join":
+                hint = node.hint()
+                for side in (hint.leftHint(), hint.rightHint()):
+                    strategy = side.get().strategy() if side.isDefined() else None
+                    if strategy is not None and strategy.isDefined():
+                        n += strategy.get().toString() == "broadcast"
+            children = node.children()
+            stack.extend(children.apply(i) for i in range(children.size()))
+        return n
 
     @staticmethod
     def _ancestors_of_scan(plan: str, needle: str):
@@ -706,10 +723,14 @@ class TestUpdateConnectedComponents:
         """The at-scale plan contract: the corpus-sized standing map is on
         the STREAM side of broadcast-hash joins only — no Exchange node
         (shuffle OR broadcast) anywhere above a standing-map scan, and no
-        SortMergeJoin in the whole update plan. Auto-broadcast is disabled
-        so AQE can't paper over a missing explicit hint with the tiny test
-        map (the r12 advisor's finding: a ~200-row map auto-broadcasts and
-        the assertion never exercises the at-scale shape)."""
+        SortMergeJoin in the whole update plan. The broadcast threshold is
+        set below the standing map's own size estimate and AQE's runtime
+        auto-broadcast is disabled, so neither can paper over a missing
+        explicit hint with the tiny test map (the r12 advisor's finding: a
+        ~200-row map auto-broadcasts and the assertion never exercises the
+        at-scale shape), while the batch-sized measured gates still fit.
+        Batch-sized frames also fall under that threshold, so the explicit
+        broadcast hints are counted on the optimized plan as well."""
         from sat_bucket_spark.operators.graph import (
             connected_components,
             update_connected_components,
@@ -725,24 +746,32 @@ class TestUpdateConnectedComponents:
             ("spark.sql.autoBroadcastJoinThreshold", None),
             ("spark.sql.adaptive.autoBroadcastJoinThreshold", None),
         ]
+        map_bytes = standing._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         for i, (k, _) in enumerate(thresholds):
             try:
                 thresholds[i] = (k, spark.conf.get(k))
             except Exception:
                 pass
-            spark.conf.set(k, "-1")
+        spark.conf.set(thresholds[0][0], str(map_bytes // 2))
+        spark.conf.set(thresholds[1][0], "-1")
         try:
             out = update_connected_components(
                 standing,
                 spark.createDataFrame([(1, 3), (401, 402)], ["src", "dst"]),
             )
             plan = out._jdf.queryExecution().executedPlan().toString()
+            hinted = self._broadcast_hinted_joins(out)
         finally:
             for k, v in thresholds:
                 if v is None:
                     spark.conf.unset(k)
                 else:
                     spark.conf.set(k, v)
+        # the explicit gate hints themselves: the map-application join
+        # and the new-node joins against the lookup and merge frames. A
+        # dropped hint fails here even where the planner would still
+        # auto-broadcast the batch-sized side on its own.
+        assert hinted == 3, hinted
         assert "SortMergeJoin" not in plan, plan[:2000]
         assert "BroadcastHashJoin" in plan
         # the standing scan appears in the merge-application join (the

@@ -32,6 +32,26 @@ from sat_bucket_spark.operators.text import (
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
 
+def _executed_joins(df) -> list[tuple[str, str]]:
+    """(node class, join type) of every join in ``df``'s executed plan,
+    walked through adaptive query stages (``df`` must have run)."""
+    joins, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+            continue
+        if name.endswith("QueryStageExec"):
+            stack.append(node.plan())
+            continue
+        if name.endswith("JoinExec"):
+            joins.append((name, node.joinType().toString()))
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return joins
+
+
 @pytest.fixture(scope="module")
 def documents(spark):
     return spark.read.parquet(f"{SF_DIR}/documents.parquet")
@@ -1114,13 +1134,14 @@ class TestMinhashIndex:
         }
         assert got == want
 
-    def test_direct_operator_avoids_shuffles_and_matches_ungated(self, spark):
+    def test_direct_operator_avoids_shuffles_and_matches_ungated(
+        self, spark, no_broadcast
+    ):
         """r17 (§1.2/§3.1): minhash_dedup_against carries the index
         probe's measured-gate contract — with a small candidate count the
         verify sides are semi-pre-filtered and the verify/anti joins are
         broadcast-planned (no SortMergeJoin over the shingle arrays).
-        Gate off (broadcast_candidates_max=0) must yield identical
-        survivors."""
+        Gate off (no_broadcast) must yield identical survivors."""
         from sat_bucket_spark.operators.dedup import minhash_dedup_against
 
         corpus, batch = self._corpus_and_batch(spark)
@@ -1133,11 +1154,12 @@ class TestMinhashIndex:
         assert "SortMergeJoin" not in plan
         assert "LeftSemi" in plan, "verify-side candidate pre-filter missing"
         got = sorted(r["doc_id"] for r in out.collect())
-        ungated = minhash_dedup_against(
-            batch, corpus, n_hashes=8, n_bands=4, shingle_size=8,
-            min_jaccard=0.5, broadcast_candidates_max=0,
-        )
-        assert sorted(r["doc_id"] for r in ungated.collect()) == got
+        with no_broadcast():
+            ungated = minhash_dedup_against(
+                batch, corpus, n_hashes=8, n_bands=4, shingle_size=8,
+                min_jaccard=0.5,
+            )
+            assert sorted(r["doc_id"] for r in ungated.collect()) == got
 
     def test_append_makes_new_docs_visible(self, spark, tmp_path):
         """After appending a batch's survivors, an exact re-submission of
@@ -1190,8 +1212,8 @@ class TestMinhashIndex:
         assert "shingle_set" in plan
         assert out.count() > 0
 
-    def test_probe_broadcast_guard(self, spark, tmp_path):
-        """Above ``broadcast_candidates_max`` the candidate-id filter must
+    def test_probe_broadcast_guard(self, spark, tmp_path, no_broadcast):
+        """Above the broadcast threshold the candidate-id filter must
         NOT be hinted broadcast (a backfill batch could exceed the 8 GB
         broadcast ceiling) — and both postures are output-identical."""
         from sat_bucket_spark.operators.dedup import (
@@ -1208,10 +1230,10 @@ class TestMinhashIndex:
         hinted = minhash_dedup_against_index(
             batch, idx, min_jaccard=0.5, pushdown_max_rows=0
         )
-        guarded = minhash_dedup_against_index(
-            batch, idx, min_jaccard=0.5, broadcast_candidates_max=0,
-            pushdown_max_rows=0,
-        )
+        with no_broadcast():
+            guarded = minhash_dedup_against_index(
+                batch, idx, min_jaccard=0.5, pushdown_max_rows=0
+            )
         # the guarded plan carries no user broadcast hint (AQE may still
         # choose broadcast from runtime stats — that is the safe, bounded
         # path; the hazard is the unconditional hint)
@@ -2523,7 +2545,7 @@ class TestSimhashDedup:
         assert n_dropped > 0  # non-vacuous: the fixture has near-dups
 
     def test_expansion_joins_avoid_row_shuffle_when_sigs_small(
-        self, spark, documents
+        self, spark, documents, no_broadcast
     ):
         """r17 (§3.1): keep_first_by_signature's step-3 expansion must be
         PLANNED broadcast when the measured distinct-signature count fits
@@ -2545,11 +2567,12 @@ class TestSimhashDedup:
         sigs = add_simhash(docs, n_bits=24).select("doc_id", "simhash")
         from sat_bucket_spark.operators.dedup import keep_first_by_signature
 
-        ungated = keep_first_by_signature(
-            sigs, id_col="doc_id", sig_col="simhash", n_bits=24,
-            max_hamming=3, n_bands=4, broadcast_signatures_max=0,
-        )
-        assert sorted(map(tuple, ungated.collect())) == got
+        with no_broadcast():
+            ungated = keep_first_by_signature(
+                sigs, id_col="doc_id", sig_col="simhash", n_bits=24,
+                max_hamming=3, n_bands=4,
+            )
+            assert sorted(map(tuple, ungated.collect())) == got
 
     def test_consistent_with_pair_list(self, spark, documents):
         from sat_bucket_spark.operators.dedup import (
@@ -3484,15 +3507,76 @@ class TestSemanticDedupAgainstIndex:
         got = sorted(r["vec_id"] for r in out.collect())
         assert got == sorted(r["vec_id"] for r in fresh.collect())
 
+    def test_unverified_anti_join_gated_on_id_width(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """The unverified posture's contaminated set is ids only, so its
+        anti-join gate reads the probe frame's row count x the id width,
+        not the LUT-wide probe frame's bytes: at a threshold between the
+        two the probe join is not broadcast while the anti-join still is,
+        and the survivors equal the default posture's."""
+        from sat_bucket_spark.operators import similarity
+
+        cents, books = self._fixed_books(spark)
+        archive = self._codebook_exact_rows(
+            spark, books, [i % 4 for i in range(40)], 0
+        )
+        idx = str(tmp_path / "sem_ids")
+        similarity.build_ivfpq_index(
+            archive, idx, dim=64, centroids=cents, codebooks=books
+        )
+        batch = archive.where(F.col("vec_id") < 10).select(
+            (F.col("vec_id") + 1000).alias("vec_id"), "embedding"
+        ).unionByName(
+            self._codebook_exact_rows(spark, books, [4, 5, 6, 7], 2000)
+        )
+        measured = []
+        real = similarity.measured_stage
+
+        def spy(df, *extra, **kw):
+            cached, metrics = real(df, *extra, **kw)
+            measured.append(metrics)
+            return cached, metrics
+
+        monkeypatch.setattr(similarity, "measured_stage", spy)
+        kw = dict(max_adist=0.001, adc_margin=0.0)
+        default = sorted(
+            r["vec_id"]
+            for r in similarity.semantic_dedup_against_index(batch, idx, **kw).collect()
+        )
+        (probe,) = measured
+        ids_bytes = probe["n"] * 8  # one long id per row
+        assert 0 < ids_bytes < probe["bytes"]
+        keys = (
+            "spark.sql.autoBroadcastJoinThreshold",
+            "spark.sql.adaptive.autoBroadcastJoinThreshold",
+        )
+        prev = {k: spark.conf.get(k, None) for k in keys}
+        spark.conf.set(keys[0], str(ids_bytes))
+        spark.conf.set(keys[1], "-1")  # no runtime rescue of a missing hint
+        try:
+            out = similarity.semantic_dedup_against_index(batch, idx, **kw)
+            got = sorted(r["vec_id"] for r in out.collect())
+            joins = _executed_joins(out)
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        assert got == default == [2000, 2001, 2002, 2003]
+        assert ("BroadcastHashJoinExec", "LeftAnti") in joins, joins
+        assert not [j for j in joins if j[1] == "Inner" and "Broadcast" in j[0]], joins
+
     def test_probe_avoids_batch_shuffle_and_prefilters_verify(
-        self, spark, tmp_path
+        self, spark, tmp_path, no_broadcast
     ):
         """r17 (§1.2/§3.1): mirror of the MinHash-probe pin — with a
         measured-small candidate set the final anti-join must be PLANNED
         broadcast (no SortMergeJoin over the batch's fat vectors) and the
         verify-side norm/vector projection must sit behind a LeftSemi
-        candidate pre-filter. Gate off (broadcast_candidates_max=0) must
-        produce identical survivors."""
+        candidate pre-filter. Gate off (no_broadcast) must produce
+        identical survivors."""
         from sat_bucket_spark.operators.similarity import (
             build_ivfpq_index,
             semantic_dedup_against_index,
@@ -3527,11 +3611,12 @@ class TestSemanticDedupAgainstIndex:
         assert "LeftAnti" in plan
         assert "LeftSemi" in plan, "verify-side candidate pre-filter missing"
         got = sorted(r["vec_id"] for r in out.collect())
-        ungated = semantic_dedup_against_index(
-            batch, idx, min_cosine=0.9, n_probe=2, adc_margin=None,
-            verify_vectors="index", broadcast_candidates_max=0,
-        )
-        assert sorted(r["vec_id"] for r in ungated.collect()) == got
+        with no_broadcast():
+            ungated = semantic_dedup_against_index(
+                batch, idx, min_cosine=0.9, n_probe=2, adc_margin=None,
+                verify_vectors="index",
+            )
+            assert sorted(r["vec_id"] for r in ungated.collect()) == got
 
     def test_verified_full_probe_equals_brute_force(self, spark, embeddings, tmp_path):
         """n_probe = n_clusters + an unbounded ADC margin makes the verified
@@ -3642,9 +3727,11 @@ class TestSemanticDedupAgainstIndex:
         )
         assert got == [9001, 9002]
 
-    def test_fallback_postures_identical(self, spark, embeddings, tmp_path):
-        """Forcing the shuffled-join + semi-join fallbacks (both broadcast
-        gates at 0) must not change the survivor set."""
+    def test_fallback_postures_identical(
+        self, spark, embeddings, tmp_path, no_broadcast
+    ):
+        """Forcing the shuffled-join + semi-join fallbacks (every broadcast
+        gate off) must not change the survivor set."""
         from sat_bucket_spark.operators.similarity import (
             build_ivfpq_index,
             semantic_dedup_against_index,
@@ -3667,13 +3754,11 @@ class TestSemanticDedupAgainstIndex:
             r["vec_id"]
             for r in semantic_dedup_against_index(batch, idx, **kw).collect()
         )
-        fallback = sorted(
-            r["vec_id"]
-            for r in semantic_dedup_against_index(
-                batch, idx, broadcast_batch_max=0,
-                broadcast_candidates_max=0, **kw,
-            ).collect()
-        )
+        with no_broadcast():
+            fallback = sorted(
+                r["vec_id"]
+                for r in semantic_dedup_against_index(batch, idx, **kw).collect()
+            )
         assert default == fallback
 
     def test_probe_prunes_code_partitions(self, spark, embeddings, tmp_path):
@@ -3822,8 +3907,12 @@ class TestSemanticDedupAgainstIndex:
         assert spark.read.parquet(f"{idx}/vectors").count() == 100
         assert spark.read.parquet(f"{idx}/codes").count() == 100
 
-    def test_cache_registry_lifetime(self, spark, embeddings, tmp_path):
-        from sat_bucket_spark.caching import release_stage_cache
+    def test_stage_scope_lifetime(
+        self, spark, embeddings, tmp_path, cached_rdd_ids
+    ):
+        """The probe frame and candidate set live while the scope is open
+        and are freed on exit."""
+        from sat_bucket_spark.caching import stage_scope
         from sat_bucket_spark.operators.similarity import (
             build_ivfpq_index,
             semantic_dedup_against_index,
@@ -3835,14 +3924,14 @@ class TestSemanticDedupAgainstIndex:
         )
         idx = str(tmp_path / "sem_reg")
         build_ivfpq_index(emb, idx, dim=64, centroids=cents, codebooks=books)
-        reg: list = []
-        out = semantic_dedup_against_index(
-            emb.limit(10), idx, verify_vectors=emb, cache_registry=reg
-        )
-        out.count()
-        assert len(reg) == 2  # probe frame + candidate set
-        for cached in reg:
-            release_stage_cache(cached, destructive=True)
+        before = cached_rdd_ids()
+        with stage_scope():
+            out = semantic_dedup_against_index(
+                emb.limit(10), idx, verify_vectors=emb
+            )
+            out.count()
+            assert len(cached_rdd_ids() - before) == 2
+        assert not cached_rdd_ids() - before
 
 
 class TestUrlNormalize:

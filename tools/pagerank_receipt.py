@@ -44,7 +44,7 @@ def main() -> None:
     )
     os.makedirs(out_dir, exist_ok=True)
 
-    real = graph_mod._eager_cache
+    real = graph_mod.round_cache
 
     def run_captured(label, fn):
         captured = []
@@ -54,11 +54,11 @@ def main() -> None:
             captured.append(frame._jdf.queryExecution().executedPlan().toString())
             return out
 
-        graph_mod._eager_cache = capturing
+        graph_mod.round_cache = capturing
         try:
             fn()
         finally:
-            graph_mod._eager_cache = real
+            graph_mod.round_cache = real
         return captured
 
     # --- q_pagerank: 10 rounds, fuse 8 -> blocks at rounds 8 and 10 ----
