@@ -219,8 +219,9 @@ def _round_num(path: str) -> int:
     return int(m.group(1)) if m else -1
 
 
-# Keep in sync with bench.py FILE_COUNT_BOUND (not imported: bench.py's
-# module import pulls the full entry registry + Spark session machinery).
+# The keys of benchcases.py's file_count_bound cases (not imported: that
+# module pulls the full entry registry + Spark machinery);
+# tests/test_benchcases.py pins the two equal.
 # These keys' timings track the host's metadata-storage state — hundreds
 # of small-file commits/opens per run — so a band breach here inside an
 # artifact whose own smallfiles canary reads elevated (while the CPU

@@ -19,7 +19,8 @@ Checks, in order:
    not in the driver's CORRECTNESS run.
 4. `bench.py` at `$PREFLIGHT_BENCH_SF_DIR` (default sf0.001 for speed):
    rc == 0 and the output tail parses as the one-line JSON contract with
-   a per-query timing for every headline query.
+   a timing for every key a full run records (benchcases.bench_keys():
+   the registry keys and the composed cases alike).
 
 Usage:  python preflight.py            # full pre-flight (~4 min)
         python preflight.py --no-bench # parity only
@@ -93,9 +94,9 @@ def run_bench() -> None:
     for key in ("metric", "value", "unit", "queries", "sf"):
         if key not in parsed:
             fail(f"bench JSON missing key {key!r}")
-    import bench as bench_mod
+    import benchcases
 
-    missing = [q for q in bench_mod.HEADLINE if q not in parsed["queries"]]
+    missing = [q for q in benchcases.bench_keys() if q not in parsed["queries"]]
     if missing:
         fail(f"bench JSON missing per-query timings: {missing}")
     print(f"preflight: bench ok — {len(parsed['queries'])} queries, "

@@ -4,17 +4,19 @@
 The driver ships testdata up to sf0.1 only, so this probe synthesizes an
 sf1-EQUIVALENT corpus by replicating the sf0.1 tables ``--replicas`` times
 (default 10) with id remapping (copy i shifts ids by i * stride), then runs
-the flagship COMPOSED keys once cold and once warm, reporting the warm
-reading. One JSON line, mirroring bench.py's contract:
+the flagship COMPOSED keys; registry and video keys run once cold and once
+warm, reporting the warm reading. One JSON line, mirroring bench.py's
+contract:
 
   {"metric": "probe_total_sec", "value": N, "unit": "sec",
    "queries": {...}, "recall": {"ann_recall_build": ..,
    "ann_recall_append": ..}, "replicas": R, "base_sf": 0.1,
    "canary": {...}}
 
-The recall block is UNTIMED gates (floor-asserted in-run); the canary
-block is the host-factor reading shared with bench.py. Neither is part
-of "value".
+The recall block is UNTIMED gate values (floor-asserted in-run); the
+canary block is the host-factor reading shared with bench.py. Neither is
+part of "value". The cases and their gates live in benchcases.py; the
+probe runs them with ``ctx.probe`` set.
 
 Caveats, by design (record them with the readings in BASELINE.md):
 
@@ -26,18 +28,8 @@ Caveats, by design (record them with the readings in BASELINE.md):
   (semantics are "all pairs"); ``image_dedup`` on the same data is the
   scale path and should grow ~R. The probe runs both so BASELINE.md can
   show the divergence.
-- wet_curate / bucket stages mirror bench.py's composed pipelines
-  (same library calls); the fixture build is outside the timed window.
-- Graph keys: ``pagerank`` runs 10x the edge volume over a bounded node
-  set (custkeys + 800 order buckets), so it measures per-round shuffle
-  growth; ``pagerank_directed`` does the same for the DIRECTED loop with
-  real per-round dangling-mass broadcasts (800 strictly-dangling
-  nodes); ``host_rank``'s host set is fixed by the derivation moduli, so
-  it measures the explode+DISTINCT edge extraction at 10x pages; the
-  replicated documents make every text a 10-copy cluster, which pushes
-  ``dup_clusters``' pair volume past the 200k driver union-find
-  threshold onto the distributed star rounds — the routing flip this
-  probe exists to observe.
+- The graph, routing and growth caveats sit with the probe-only rows in
+  benchcases.py.
 
 Usage: python probe_sf1.py [--replicas 10] [--keys k1,k2,...]
 """
@@ -47,18 +39,13 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import re
 import shutil
 import sys
 import tempfile
-import time
 
 os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-import __spark_entry__ as entry_mod  # noqa: E402
-from pyspark.sql import functions as F  # noqa: E402
-
-from sat_bucket_spark.session import get_spark  # noqa: E402
+import benchcases as bc  # noqa: E402
 
 DEFAULT_KEYS = [
     "minhash_lsh_dedup",
@@ -91,1817 +78,14 @@ DEFAULT_KEYS = [
     "stream_vector_gate",
 ]
 
-# Recall@10 floor for the persisted-ANN rows, after build AND after
-# append. Pinned from the measured healthy value on the replicated
-# corpus shape (see ann_index_stages docstring for the tie caveat);
-# chance level is k/N ~ 2e-4 at 10 replicas.
-ANN_RECALL_FLOOR = 0.10
-
-
-def _materialize(df):
-    df.write.format("noop").mode("overwrite").save()
-
-
-def _release(spark):
-    spark.catalog.clearCache()
-    for _id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-        rdd.unpersist()
-
-
-def replicate_table(spark, src_dir, out_dir, table, id_col, replicas):
-    df = spark.read.parquet(os.path.join(src_dir, f"{table}.parquet"))
-    if id_col is None:
-        scaled = df
-        for _ in range(replicas - 1):
-            scaled = scaled.unionByName(df)
-    else:
-        stride = df.agg(F.max(id_col)).collect()[0][0] + 1
-        parts = [
-            df.withColumn(id_col, (F.col(id_col) + F.lit(i * stride)).cast("long"))
-            for i in range(replicas)
-        ]
-        scaled = parts[0]
-        for p in parts[1:]:
-            scaled = scaled.unionByName(p)
-    scaled.write.mode("overwrite").parquet(os.path.join(out_dir, f"{table}.parquet"))
-
-
-def timed_entry(spark, name, sf_dir):
-    fn = entry_mod.queries()[name]
-    _materialize(fn(spark, sf_dir))  # cold
-    _release(spark)
-    t0 = time.perf_counter()
-    _materialize(fn(spark, sf_dir))
-    sec = round(time.perf_counter() - t0, 3)
-    _release(spark)
-    return sec
-
-
-def wet_curate_stage(spark, sf_dir, workdir):
-    """Mirrors bench.py's wet_curate stage verbatim (same library calls,
-    same funnel) at the scaled corpus; the crawl fixture is built OUTSIDE
-    the timed window. Single shot — the stage's cost is its two writes
-    plus the funnel, not JVM warmup (the probe session is already warm)."""
-    from sat_bucket_spark.operators.dedup import remove_duplicate_spans
-    from sat_bucket_spark.operators.metrics import observe_funnel
-    from sat_bucket_spark.operators.text import gopher_quality_flags
-    from sat_bucket_spark.operators.urls import url_quality_flags
-    from sat_bucket_spark.warc import build_warc_bytes, read_wet
-    from sat_bucket_spark.writers import write_jsonl_shards
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    crawl = os.path.join(workdir, "crawl")
-    os.makedirs(crawl, exist_ok=True)
-    fixture = docs.select(
-        "doc_id",
-        F.concat("text", F.lit(" wetdoc"), F.col("doc_id")).alias("text"),
-        F.concat(
-            F.lit("http://"),
-            F.when(F.col("doc_id") % 7 == 0, F.lit("spam.example"))
-            .otherwise(F.concat(F.lit("host"), F.col("doc_id") % 13, F.lit(".example"))),
-            F.lit("/d"), "doc_id",
-        ).alias("url"),
-    ).collect()
-    n_fixture = len(fixture)
-    n_segments = 32  # sf1-scale crawl: more segments, same per-file size class
-    for s in range(n_segments):
-        recs = [
-            {
-                "type": "conversion",
-                "payload": r["text"].encode(),
-                "WARC-Target-URI": r["url"],
-                "WARC-Date": "2026-08-01T00:00:00Z",
-            }
-            for i, r in enumerate(fixture)
-            if i % n_segments == s
-        ]
-        with open(os.path.join(crawl, f"seg-{s}.warc.gz"), "wb") as fh:
-            fh.write(build_warc_bytes(recs, gzip_members=True))
-
-    staging = os.path.join(workdir, "staged")
-    export = os.path.join(workdir, "export")
-    t0 = time.perf_counter()
-    read_wet(spark, crawl).write.parquet(staging)
-    staged = spark.read.parquet(staging)
-    funnel = observe_funnel(
-        staged,
-        [
-            (
-                "quality",
-                lambda d: gopher_quality_flags(
-                    d, min_words=20, min_stopword_hits=1,
-                    passthrough=("url", "text"),
-                ).where("keep").select("doc_id", "url", "text"),
-            ),
-            (
-                "url",
-                lambda d: url_quality_flags(
-                    d, blocked_domains=("spam.example",),
-                    passthrough=("text",),
-                ).where("keep").select("doc_id", "url", "text"),
-            ),
-            (
-                "dup_spans",
-                lambda d: remove_duplicate_spans(
-                    d, k=4, min_count=2, removed_count_col="n_removed"
-                ),
-            ),
-        ],
-    )
-    write_jsonl_shards(funnel.df, export, n_shards=8, compression=None)
-    sec = round(time.perf_counter() - t0, 3)
-    counts = funnel.counts()
-    if counts["input"] != n_fixture:
-        raise AssertionError(f"wet ingest lost rows: {counts} != {n_fixture}")
-    if not (counts["input"] >= counts["quality"] >= counts["url"]):
-        raise AssertionError(f"funnel not monotone: {counts}")
-    return sec
-
-
-def video_stage(spark, sf_dir, key):
-    """Mirrors bench.py's video keys on the replicated corpus (same
-    fixture builder, so every planted clip cluster is replicas x bigger —
-    the keep-first collapse must stay signature-bounded). Cold + warm,
-    warm reported, like timed_entry."""
-    from bench import video_corpus
-    from sat_bucket_spark.operators.imagehash import video_dedup, video_hash_table
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    corpus = video_corpus(docs)
-
-    def run():
-        if key == "video_hash":
-            _materialize(video_hash_table(corpus, every_n=1, n_frames=3))
-        else:
-            _materialize(
-                video_dedup(corpus, every_n=1, n_frames=3, max_hamming=6, n_bands=8)
-            )
-
-    run()  # cold
-    _release(spark)
-    t0 = time.perf_counter()
-    run()
-    sec = round(time.perf_counter() - t0, 3)
-    _release(spark)
-    return sec
-
-
-def html_curate_stage(spark, sf_dir, workdir):
-    """Mirrors bench.py's warc_html_curate stage at the scaled corpus
-    (same library calls, same funnel: URL keep-first dedup -> quality ->
-    host-authority gate -> span dedup; same integrity gates; crawl
-    fixture built OUTSIDE the timed window; 32 segments at sf1 scale
-    like wet_curate's)."""
-    from sat_bucket_spark.operators.dedup import remove_duplicate_spans
-    from sat_bucket_spark.operators.graph import pagerank
-    from sat_bucket_spark.operators.metrics import observe_funnel
-    from sat_bucket_spark.operators.text import gopher_quality_flags
-    from sat_bucket_spark.operators.urls import (
-        host_link_edges,
-        url_dedup,
-        url_host_expr,
-    )
-    from sat_bucket_spark.warc import build_warc_bytes, read_warc_html
-    from sat_bucket_spark.writers import write_jsonl_shards
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    crawl = os.path.join(workdir, "crawl")
-    os.makedirs(crawl, exist_ok=True)
-    fixture = docs.select(
-        "doc_id",
-        F.concat("text", F.lit(" htmldoc"), F.col("doc_id")).alias("text"),
-    ).collect()
-    n_fix = len(fixture)
-    n_mirror = sum(1 for r in fixture if r["doc_id"] % 9 == 0)
-
-    def _resp(doc_id, text):
-        ref = f"http://h{(doc_id * 7 + 1) % 12}.example/x".encode()
-        nav = (
-            b"<div class='nav'><a href='/'>Home</a> <a href='/a'>A</a>"
-            b" <a href='" + ref + b"'>Ref</a></div>"
-        )
-        if doc_id % 13 == 0:
-            body = (
-                b"<p>\x93legacy\x94 " + text.encode("cp1252", errors="replace") + b"</p>"
-            )
-            ctype = "text/html; charset=windows-1252"
-        else:
-            body = b"<p>" + text.encode() + b"</p>"
-            ctype = "text/html; charset=utf-8"
-        head = f"HTTP/1.1 200 OK\r\nContent-Type: {ctype}\r\n\r\n".encode()
-        return {
-            "type": "response",
-            "WARC-Target-URI": f"http://h{doc_id % 13}.example/d{doc_id}",
-            "Content-Type": "application/http; msgtype=response",
-            "payload": head + nav + body,
-        }
-
-    def _mirror(rec, doc_id):
-        out = dict(rec)
-        out["WARC-Target-URI"] = (
-            f"http://H{doc_id % 13}.EXAMPLE/d{doc_id}/?utm_source=probe&gclid=x#m"
-        )
-        out["payload"] = rec["payload"] + b"<p>mirror of this page</p>"
-        return out
-
-    n_seg = 32
-    for s in range(n_seg):
-        recs = []
-        for i, r in enumerate(fixture):
-            if i % n_seg != s:
-                continue
-            rec = _resp(r["doc_id"], r["text"])
-            recs.append(rec)
-            if r["doc_id"] % 9 == 0:
-                recs.append(_mirror(rec, r["doc_id"]))
-        with open(os.path.join(crawl, f"seg-{s}.warc.gz"), "wb") as fh:
-            fh.write(build_warc_bytes(recs, gzip_members=True))
-
-    staging = os.path.join(workdir, "staged")
-    export = os.path.join(workdir, "export")
-    t0 = time.perf_counter()
-    read_warc_html(spark, crawl, links=True).write.parquet(staging)
-    staged = spark.read.parquet(staging)
-    hedges = host_link_edges(staged, url_col="url", links_col="links")
-    hranks = pagerank(
-        hedges, src="src_host", dst="dst_host",
-        damping=0.85, iterations=4, directed=True,
-    )
-    keep_hosts = hranks.where(F.col("rank") >= 0.02).select(
-        F.col("node").alias("__keep_host")
-    )
-    funnel = observe_funnel(
-        staged.select("doc_id", "url", "text"),
-        [
-            (
-                "url_dedup",
-                lambda d: url_dedup(d, url_col="url", id_col="doc_id")
-                .where("kept")
-                .select("doc_id", "url", "text"),
-            ),
-            (
-                "quality",
-                lambda d: gopher_quality_flags(
-                    d, min_words=20, min_stopword_hits=1,
-                    passthrough=("url", "text"),
-                ).where("keep").select("doc_id", "url", "text"),
-            ),
-            (
-                "authority",
-                lambda d: d.join(
-                    F.broadcast(keep_hosts),
-                    url_host_expr(F.col("url")) == F.col("__keep_host"),
-                    "left_semi",
-                ),
-            ),
-            (
-                "dup_spans",
-                lambda d: remove_duplicate_spans(
-                    d, k=4, min_count=2, removed_count_col="n_removed"
-                ),
-            ),
-        ],
-    )
-    write_jsonl_shards(funnel.df, export, n_shards=8, compression=None)
-    sec = round(time.perf_counter() - t0, 3)
-    counts = funnel.counts()
-    if counts["input"] != n_fix + n_mirror:
-        raise AssertionError(f"html ingest lost pages: {counts} != {n_fix}+{n_mirror}")
-    if counts["url_dedup"] != n_fix:
-        raise AssertionError(f"URL dedup vacuous/lossy: {counts} != {n_fix}")
-    if not 0 < counts["authority"] < counts["quality"]:
-        raise AssertionError(f"authority gate vacuous: {counts}")
-    n_legacy = (
-        spark.read.json(os.path.join(export, "shard=*"))
-        .where(F.col("text").contains("“legacy”"))
-        .count()
-    )
-    if n_legacy == 0:
-        raise AssertionError("no windows-1252 page survived with intact quotes")
-    return sec
-
-
-def media_curate_stage(spark, sf_dir, workdir):
-    """Mirrors bench.py's media_curate stage at the scaled corpus (same
-    library calls, same thresholds, same funnel shape): payload staging
-    -> per-modality REAL-decode quality gates -> keep-first perceptual
-    dedup (images, videos) -> survivor export. Replication shifts
-    doc_ids, but every payload derivation is doc_id%50 / md5(text) /
-    doc_id-ordinal bounded, so the planted duplicate CLUSTERS grow
-    replicas x while the distinct-signature cardinality stays fixed —
-    the keep-first collapse (signature-bounded by design) is exactly
-    what this row watches. Single shot like the composed crawl stages
-    (the cost is decode + two writes, not JVM warmup)."""
-    import __spark_entry__ as entry_mod
-    from bench import video_corpus
-    from sat_bucket_spark.operators.audio import audio_quality_features
-    from sat_bucket_spark.operators.dedup import keep_first_by_signature
-    from sat_bucket_spark.operators.imagehash import image_profile_table, video_dedup
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    vcorpus = video_corpus(docs)
-    images = docs.select(
-        "doc_id", F.lit("image").alias("kind"),
-        entry_mod._bmp_payload_expr().alias("payload"),
-    )
-    audio = docs.select(
-        "doc_id", F.lit("audio").alias("kind"),
-        entry_mod._wav_payload_expr().alias("payload"),
-    )
-    videos = vcorpus.select("doc_id", F.lit("video").alias("kind"), "payload")
-    mstage = os.path.join(workdir, "staged")
-    mexport = os.path.join(workdir, "export")
-
-    t0 = time.perf_counter()
-    images.unionByName(audio).unionByName(videos).write.parquet(mstage)
-    staged = spark.read.parquet(mstage)
-    img = staged.where(F.col("kind") == "image")
-    prof = image_profile_table(img)
-    img_pass = prof.where(
-        (F.element_at("feature", 1) < 104.0 / 255)
-        & (F.element_at("feature", 2) >= 57.5 / 255)
-    ).select("doc_id", "phash")
-    img_kept = (
-        keep_first_by_signature(
-            img_pass.where(F.col("phash").isNotNull()),
-            id_col="doc_id", sig_col="phash",
-            n_bits=64, max_hamming=6, n_bands=8,
-        )
-        .where("kept")
-        .select("doc_id", F.lit("image").alias("kind"))
-    )
-    aud_kept = (
-        audio_quality_features(staged.where(F.col("kind") == "audio"))
-        .where((F.col("silence_frac") < 0.5) & (F.col("duration_s") >= 0.08))
-        .select("doc_id", F.lit("audio").alias("kind"))
-    )
-    vid_kept = (
-        video_dedup(
-            staged.where(F.col("kind") == "video"),
-            every_n=1, n_frames=3, max_hamming=6, n_bands=8,
-        )
-        .where("kept")
-        .select("doc_id", F.lit("video").alias("kind"))
-    )
-    img_kept.unionByName(aud_kept).unionByName(vid_kept).write.partitionBy(
-        "kind"
-    ).parquet(mexport)
-    sec = round(time.perf_counter() - t0, 3)
-
-    # integrity gates (outside the timed window), bench.py's minus the
-    # audio-export equality (vacuous to recheck here)
-    n_docs = docs.count()
-    if staged.count() != 2 * n_docs + vcorpus.count():
-        raise AssertionError("media staging lost rows")
-    back = spark.read.parquet(mexport).groupBy("kind").count().collect()
-    by_kind = {r["kind"]: r["count"] for r in back}
-    if by_kind.get("image", 0) > 30:
-        raise AssertionError(f"image keep-first did not collapse: {by_kind}")
-    if not 1 <= by_kind.get("video", 0) <= 24:
-        raise AssertionError(f"video keep-first did not collapse: {by_kind}")
-    if not 0 < by_kind.get("audio", 0) < n_docs:
-        raise AssertionError(f"audio silence gate vacuous: {by_kind}")
-    return sec
-
-
-def ann_index_stages(spark, sf_dir, workdir, replicas):
-    """IVFADC persisted-index rows (VERDICT r8 task #3 'probe row if
-    cheap'): ``ann_index_build`` = train + corpus encode + partitioned
-    write over the replicated vectors; ``ann_index_search`` mirrors
-    bench.py's serving stage (LUT + probed-partition scan + ADC rank)
-    with the SAME plan gates. The query modulus scales with replicas so
-    the query count stays fixed and the search row isolates corpus
-    growth (10x vectors per probed cluster), not query-batch growth.
-
-    Recall rows (VERDICT r9 task #6, UNTIMED): recall@10 vs brute-force
-    squared-L2 ground truth over the live corpus, measured on the timed
-    search result AND again after ``append_to_ivfpq_index`` — IVF recall
-    under data growth at fixed n_clusters is the known silent-drift mode.
-    Tie structure, measured before pinning the gates (queries are corpus
-    MEMBERS and replication makes every vector an exact R-copy): at
-    R >= k each query's ground-truth top-k is its own k copies and a
-    healthy index returns exactly those (identical codes, id-asc
-    tiebreak), so recall saturates at 1.0 — a naive recall-after-append
-    gate is VACUOUS (a broken append only drops one copy: 1.0 -> 0.9,
-    and with the appended slice id-shifted ABOVE the originals it loses
-    every tie and recall stays 1.0 no matter what the append wrote). The
-    sharp append gate is therefore PRESENCE: the index is built on
-    copies 2..R, copy 1 — the tie-WINNING smallest ids — arrives as the
-    append batch, and EVERY query's appended first-copy id must appear
-    in its post-append top-k (healthy: rank 1 by the id-asc tiebreak;
-    wrong cluster or stale codebook: absent). recall_append is still
-    reported for the drift record; the hit-rate assertion is the teeth.
-    """
-    from pyspark.sql import functions as F
-
-    from sat_bucket_spark.operators.similarity import (
-        append_to_ivfpq_index,
-        brute_force_topk,
-        build_ivfpq_index,
-        ivfpq_index_topk,
-        recall_at_k,
-    )
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).withColumn(
-        "embedding", F.transform("embedding", lambda x: x.cast("double"))
-    )
-    aidx = os.path.join(workdir, "index")
-    t0 = time.perf_counter()
-    build_ivfpq_index(emb, aidx, dim=64, n_clusters=16, m=4, ksub=16)
-    build_sec = round(time.perf_counter() - t0, 3)
-
-    queries = emb.where(F.col("vec_id") % (97 * replicas) == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    t0 = time.perf_counter()
-    res = ivfpq_index_topk(spark, aidx, queries, k=10, n_probe=2)
-    _materialize(res)
-    search_sec = round(time.perf_counter() - t0, 3)
-
-    import re as _re
-
-    plan = res._jdf.queryExecution().executedPlan().toString()
-    pf = _re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
-    if not pf or "__cluster" not in pf.group(1):
-        raise AssertionError("index search scan is not partition-pruned")
-    n_q = queries.count()
-    if res.groupBy("query_id").count().count() != n_q:
-        raise AssertionError("search lost queries")
-
-    # ---- untimed recall gates ----
-    recall_build = recall_at_k(res, brute_force_topk(emb, queries, k=10, metric="l2"))
-    # append gate (tie design per docstring): index built WITHOUT copy 1,
-    # then copy 1 — the tie-WINNING smallest ids — arrives as the append
-    # batch, encoded with the fixed codebooks
-    if replicas < 2:
-        raise ValueError("the ANN append/compaction gates need --replicas >= 2")
-    stride = (emb.agg(F.max("vec_id")).collect()[0][0] + 1) // replicas
-    first_copy = emb.where(F.col("vec_id") < stride)
-    aidx2 = os.path.join(workdir, "index_append")
-    build_ivfpq_index(
-        emb.where(F.col("vec_id") >= stride), aidx2, dim=64,
-        n_clusters=16, m=4, ksub=16,
-    )
-    append_to_ivfpq_index(first_copy, aidx2)
-    res2 = ivfpq_index_topk(spark, aidx2, queries, k=10, n_probe=2)
-    recall_append = recall_at_k(res2, brute_force_topk(emb, queries, k=10, metric="l2"))
-    # presence gate (the sharp one — see docstring): every query's appended
-    # first-copy id must surface in its post-append top-k
-    expected = queries.select(
-        "query_id", (F.col("query_id") % stride).alias("vec_id")
-    )
-    n_hits = res2.join(expected, ["query_id", "vec_id"], "left_semi").count()
-    if n_hits != n_q:
-        raise AssertionError(
-            f"appended copies missing from post-append search: "
-            f"{n_hits}/{n_q} queries surfaced their appended id"
-        )
-
-    # maintenance gate: compacting the append-fragmented cluster partitions
-    # must rewrite at least one partition and leave search results IDENTICAL
-    from sat_bucket_spark.operators.similarity import compact_ivfpq_index
-
-    before = sorted(tuple(r) for r in res2.collect())
-    if compact_ivfpq_index(spark, aidx2) < 1:
-        raise AssertionError("append left no fragmented cluster to compact")
-    after = sorted(
-        tuple(r)
-        for r in ivfpq_index_topk(spark, aidx2, queries, k=10, n_probe=2).collect()
-    )
-    if after != before:
-        raise AssertionError("compaction changed search results")
-    return build_sec, search_sec, round(recall_build, 4), round(recall_append, 4)
-
-
-def ivfpq_drift_stage(spark, sf_dir, workdir, replicas):
-    """Codebook-drift maintenance row (r14 — VERDICT r13 task #4): the
-    ANN analogue of the BM25 compaction row. Appends keep an IVFPQ index
-    CURRENT; nothing before this round watched what appends do to
-    ACCURACY once the embedding distribution leaves the frozen codebooks
-    behind. The row: build on the base distribution, append a
-    distribution-SHIFTED batch (offset outside the base ball — it lands
-    in one stale coarse cluster and quantizes to near-constant codes),
-    gate recall@10 vs brute force DEGRADED (the drift signal a plan gate
-    cannot see), retrain_ivfpq_index from the refine store (generational
-    swap, standing index serves until the commit), gate recall RESTORED,
-    fsck green. Shifted rows carry a vec_id-derived jitter so their
-    values are DISTINCT across replica copies — the ground truth is
-    tie-free, and the replicated base's exact copies never enter a
-    shifted query's true top-k (the shifted population is far away).
-
-    Gates pinned from measurement (two drafts measured before pinning):
-    a ~8%-mass shifted blob read retrain recall 0.074 -> 0.090 — PQ
-    capacity allocation is population-proportional, so the fixture
-    gives the drifted distribution real mass (~1/3); and ABSOLUTE
-    recall shrinks with corpus size at fixed PQ capacity (0.353
-    restored at 500 vectors, 0.174 at 20k — the bench's healthy floor
-    is 0.10 at sf0.1), so the restore gate is RELATIVE: degraded
-    < 0.2 (the random-tie floor), restored >= 2.5x degraded AND >= 0.8x
-    a FRESH rebuild over the same mixed corpus (the gold standard any
-    retrain could at best achieve, measured in-stage on the same
-    queries) — "restored" means retraining recovered what a from-scratch
-    rebuild would."""
-    from sat_bucket_spark.operators.similarity import (
-        append_to_ivfpq_index,
-        brute_force_topk,
-        build_ivfpq_index,
-        check_ivfpq_recall,
-        ivfpq_index_topk,
-        recall_at_k,
-        retrain_ivfpq_index,
-    )
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    max_id = emb.agg(F.max("vec_id")).collect()[0][0]
-    idx = os.path.join(workdir, "drift_index")
-    build_ivfpq_index(
-        emb, idx, dim=64, n_clusters=16, m=4, ksub=16, store_vectors=True
-    )
-    # the nightly watch (r15, VERDICT r14 Missing #2): the retrain
-    # DECISION is made by the library op, not harness arithmetic — record
-    # the post-build reading as the baseline here, re-check after the
-    # drifted append below and require the op to recommend the retrain
-    watch_baseline = check_ivfpq_recall(spark, idx, n_queries=200)["recall"]
-    # ~1/3 of the corpus shifts: drift maintenance is a rebuild DECISION —
-    # it fires when the new distribution carries real mass (PQ capacity
-    # allocation is population-proportional, so a 2% blob can't claim
-    # codebook range at any engine's retrain). The per-row jitter
-    # (vec_id-derived, ~1e-4) keeps values DISTINCT across replica
-    # copies, so the brute-force ground truth is tie-free while the
-    # neighbor structure stays dominated by the 0.5-scaled base spread.
-    jit = (F.col("vec_id") % 997).cast("double") * 1e-4
-    shifted = emb.where(F.col("vec_id") % 3 == 0).select(
-        (F.col("vec_id") + max_id + 1).alias("vec_id"),
-        F.transform("embedding", lambda x: x * 0.5 + 2.0 + jit).alias(
-            "embedding"
-        ),
-    )
-    shifted_path = os.path.join(workdir, "shifted")
-    shifted.write.parquet(shifted_path)
-    shifted = spark.read.parquet(shifted_path)
-    append_to_ivfpq_index(shifted, idx)
-
-    corpus = emb.unionByName(shifted)
-    # query modulus scales with replicas (the ann-stage convention): the
-    # query count stays fixed so the row isolates corpus growth
-    queries = shifted.where(F.col("vec_id") % (16 * replicas) == 0).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
-    )
-    exact = brute_force_topk(corpus, queries, k=10, metric="l2")
-    r_before = recall_at_k(
-        ivfpq_index_topk(spark, idx, queries, k=10, n_probe=2), exact
-    )
-    if not r_before < 0.2:
-        raise AssertionError(
-            f"drift fixture vacuous: degraded recall reads {r_before:.3f} "
-            "(expected the random-tie floor < 0.2)"
-        )
-    # the op-level gate must agree with the stage's measured degradation:
-    # ~1/3 of the corpus drifted, so the corpus-wide sampled reading drops
-    # to ~2/3 of baseline — under the 0.8x default
-    watch = check_ivfpq_recall(spark, idx, n_queries=200, baseline=watch_baseline)
-    if watch["retrain_recommended"] is not True:
-        raise AssertionError(
-            f"check_ivfpq_recall did not recommend the retrain: baseline "
-            f"{watch_baseline:.3f}, drifted {watch['recall']:.3f}"
-        )
-    t0 = time.perf_counter()
-    retrain_ivfpq_index(spark, idx)
-    retrain_sec = round(time.perf_counter() - t0, 3)
-    r_after = recall_at_k(
-        ivfpq_index_topk(spark, idx, queries, k=10, n_probe=2), exact
-    )
-    # gold-standard reference: a FRESH build over the same mixed corpus
-    # (the best any retrain could achieve), same queries, same ground
-    # truth. NOT base-distribution queries — replication makes every
-    # base vector an exact R-copy, so base queries' top-k is their own
-    # copies and recall saturates at 1.0 (the ann-stage's documented tie
-    # trap), which would gate the shifted queries against a vacuous 1.0.
-    fresh = os.path.join(workdir, "fresh_index")
-    build_ivfpq_index(
-        corpus, fresh, dim=64, n_clusters=16, m=4, ksub=16
-    )
-    r_fresh = recall_at_k(
-        ivfpq_index_topk(spark, fresh, queries, k=10, n_probe=2), exact
-    )
-    if not (r_after >= 2.5 * r_before and r_after >= 0.8 * r_fresh):
-        raise AssertionError(
-            f"retrain did not restore recall: {r_before:.3f} -> "
-            f"{r_after:.3f} (fresh-rebuild reference {r_fresh:.3f})"
-        )
-    # capacity lever (untimed receipt): at 10x the capacity-matched
-    # restore equals the gold standard but BOTH are PQ-capacity-bound
-    # (fixed m*ksub resolution over a 10x corpus). Drift response at
-    # scale is retrain + re-spec, and retrain owns the knobs — show the
-    # same operator lifting recall by raising ksub, gated strictly above
-    # the capacity-matched reading.
-    retrain_ivfpq_index(spark, idx, ksub=64)
-    r_cap = recall_at_k(
-        ivfpq_index_topk(spark, idx, queries, k=10, n_probe=2), exact
-    )
-    if not r_cap > r_after:
-        raise AssertionError(
-            f"ksub=64 retrain did not lift capacity-bound recall: "
-            f"{r_after:.3f} -> {r_cap:.3f}"
-        )
-    _fsck_gate(spark, idx)
-    return (
-        retrain_sec,
-        round(r_before, 4),
-        round(r_after, 4),
-        round(r_fresh, 4),
-        round(r_cap, 4),
-    )
-
-
-def _fsck_gate(spark, *index_dirs):
-    """Standing fsck gate (r13): every persisted-index leg the probe
-    builds must report healthy at the end of its stage — replay
-    duplication, missing components, or stale generations fail the run
-    loudly, giving the healers a regression surface outside unit tests."""
-    from sat_bucket_spark.maintenance import index_report
-
-    for d in index_dirs:
-        r = index_report(spark, d, scan=True)
-        if not r["healthy"]:
-            raise AssertionError(f"index fsck failed for {d}: {r['issues']}")
-
-
-def minhash_index_stages(spark, sf_dir, workdir):
-    """Persisted MinHash dedup index at the replicated corpus (r10): build
-    the standing index once over a corpus where EVERY text is an R-copy
-    cluster (the band-collision worst case), then probe a nightly batch
-    (half planted near-dups, half fresh). Gates: the probe drops exactly
-    the near-dup half's texts (non-vacuous both ways) and its plan never
-    scans the corpus parquet."""
-    from sat_bucket_spark.operators.dedup import (
-        build_minhash_index,
-        minhash_dedup_against_index,
-    )
-
-    corpus = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
-    batch_path = os.path.join(workdir, "batch")
-    corpus.where(F.col("doc_id") % 101 == 0).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"),
-        F.when(F.col("doc_id") % 2 == 0, F.concat(F.col("text"), F.lit(" tail")))
-        .otherwise(F.concat(F.lit("fresh "), F.col("doc_id"))).alias("text"),
-    ).write.parquet(batch_path)
-    batch = spark.read.parquet(batch_path)
-    n_batch = batch.count()
-
-    idx = os.path.join(workdir, "index")
-    t0 = time.perf_counter()
-    build_minhash_index(corpus, idx, n_hashes=8, n_bands=4, shingle_size=8)
-    build_sec = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    surv = minhash_dedup_against_index(batch, idx, min_jaccard=0.5)
-    n_surv = surv.count()
-    probe_sec = round(time.perf_counter() - t0, 3)
-
-    if not 0 < n_surv < n_batch:
-        raise AssertionError(f"index probe vacuous: {n_surv}/{n_batch}")
-    plan = surv._jdf.queryExecution().executedPlan().toString()
-    if "documents.parquet" in plan:
-        raise AssertionError("index probe scanned the corpus parquet")
-
-    # maintenance gate (r11): two nightly appends fragment bands/ and
-    # shingles/; compaction must fold the files back WITHOUT changing any
-    # probe result — the same contract as the IVFPQ append+compact
-    # search-equality gate above. The gate probe mixes re-keyed known
-    # texts (all dropped: corpus + appended survivors) with novel docs
-    # (all survive), so equality is non-vacuous in both directions.
-    import glob
-
-    from sat_bucket_spark.operators.dedup import (
-        append_to_minhash_index,
-        compact_minhash_index,
-    )
-
-    def band_frag() -> int:
-        root = os.path.join(idx, "bands")
-        return max(
-            len(glob.glob(os.path.join(root, d, "*.parquet")))
-            for d in os.listdir(root)
-            if d.startswith("band_idx=")
-        )
-
-    append_to_minhash_index(surv, idx)
-    append_to_minhash_index(
-        surv.select((F.col("doc_id") + 20_000_000).alias("doc_id"), "text"),
-        idx,
-    )
-    novel = spark.range(200).select(
-        (F.col("id") + 40_000_000).alias("doc_id"),
-        F.concat(
-            F.lit("novel probe content block "), F.col("id"),
-            F.lit(" with enough running words to shingle"),
-        ).alias("text"),
-    )
-    gate_probe = batch.select(
-        (F.col("doc_id") + 30_000_000).alias("doc_id"), "text"
-    ).unionByName(novel)
-    before = sorted(
-        r["doc_id"]
-        for r in minhash_dedup_against_index(
-            gate_probe, idx, min_jaccard=0.5
-        ).collect()
-    )
-    if not before:
-        raise AssertionError("maintenance-gate probe vacuous (no survivors)")
-    frag_before = band_frag()
-    t0 = time.perf_counter()
-    stats = compact_minhash_index(spark, idx)
-    compact_sec = round(time.perf_counter() - t0, 3)
-    frag_after = band_frag()
-    if stats["band_partitions"] < 1:
-        raise AssertionError("appends left no fragmented band to compact")
-    if not frag_after < frag_before:
-        raise AssertionError(
-            f"band fragmentation did not drop: {frag_before} -> {frag_after}"
-        )
-    sh_before, sh_after = stats["shingle_files"]
-    if not sh_after < sh_before:
-        raise AssertionError(
-            f"shingle fragmentation did not drop: {sh_before} -> {sh_after}"
-        )
-    after = sorted(
-        r["doc_id"]
-        for r in minhash_dedup_against_index(
-            gate_probe, idx, min_jaccard=0.5
-        ).collect()
-    )
-    if after != before:
-        raise AssertionError("compaction changed probe results")
-    _fsck_gate(spark, idx)
-    return build_sec, probe_sec, compact_sec, frag_before, frag_after
-
-
-def bloom_index_stages(spark, sf_dir, workdir):
-    """Persisted Bloom exact-dedup index at the replicated corpus (r11):
-    the bitmap is bounded at n_bits/64 rows REGARDLESS of corpus size, so
-    the scale questions are (a) the one-time build scan at 10x, (b) the
-    probe staying batch-bounded with ZERO corpus access (plan-gated), and
-    (c) the append staying bitmap-sized (no corpus rescan — its job reads
-    only the staged survivors and the few-MB bitmap). Gates: the probe
-    drops exactly the planted dup half; post-append re-submission drops
-    to zero; the probe plan never references the corpus path."""
-    from sat_bucket_spark.operators.dedup import (
-        append_to_bloom_index,
-        build_bloom_index,
-        dedup_exact_against_bloom_index,
-    )
-
-    corpus_path = os.path.join(sf_dir, "documents.parquet")
-    corpus = spark.read.parquet(corpus_path)
-    batch_path = os.path.join(workdir, "batch")
-    dups = corpus.where(F.col("doc_id") % 101 == 0).select(
-        (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
-    )
-    novel = corpus.where(F.col("doc_id") % 103 == 0).select(
-        (F.col("doc_id") + 20_000_000).alias("doc_id"),
-        F.concat(F.lit("novel "), F.col("doc_id"), F.col("text")).alias("text"),
-    )
-    dups.unionByName(novel).write.parquet(batch_path)
-    batch = spark.read.parquet(batch_path)
-    n_batch = batch.count()
-    n_novel = novel.count()
-
-    idx = os.path.join(workdir, "bloom_index")
-    t0 = time.perf_counter()
-    build_bloom_index(corpus, idx, ["text"])
-    build_sec = round(time.perf_counter() - t0, 3)
-
-    t0 = time.perf_counter()
-    surv = dedup_exact_against_bloom_index(batch, idx)
-    n_surv = surv.count()
-    probe_sec = round(time.perf_counter() - t0, 3)
-    if n_surv != n_novel or not 0 < n_surv < n_batch:
-        raise AssertionError(
-            f"bloom probe wrong: {n_surv} survivors, expected {n_novel} of {n_batch}"
-        )
-    plan = surv._jdf.queryExecution().executedPlan().toString()
-    if "documents.parquet" in plan:
-        raise AssertionError("bloom probe scanned the corpus parquet")
-
-    surv_path = os.path.join(workdir, "bloom_survivors")
-    surv.write.parquet(surv_path)  # staged, per the append contract
-    t0 = time.perf_counter()
-    append_to_bloom_index(spark.read.parquet(surv_path), idx)
-    append_sec = round(time.perf_counter() - t0, 3)
-    resubmit = spark.read.parquet(surv_path).select(
-        (F.col("doc_id") + 30_000_000).alias("doc_id"), "text"
-    )
-    if dedup_exact_against_bloom_index(resubmit, idx).count() != 0:
-        raise AssertionError("appended keys not visible to the next probe")
-    _fsck_gate(spark, idx)
-
-    # saturation -> rebuild receipt (r15, VERDICT r14 Missing #1): the
-    # Bloom leg's accuracy cell exercised end-to-end at 10x — an
-    # UNDERSIZED bitmap over the replicated corpus must trip the fsck
-    # fill watch, and rebuild_bloom_index at a larger width must heal it
-    # (fill back under threshold, members still dropped, non-members
-    # passing again) — the same detect->remediate->re-gate shape as the
-    # IVFPQ drift row
-    from sat_bucket_spark.maintenance import index_report
-    from sat_bucket_spark.operators.dedup import rebuild_bloom_index
-
-    sat_idx = os.path.join(workdir, "bloom_sat")
-    n_keys = corpus.select("text").distinct().count()
-    # ~1.44 bits/key -> fill ~0.97: decisively saturated
-    under_bits = 1 << max(10, int(n_keys * 1.44).bit_length())
-    build_bloom_index(corpus, sat_idx, ["text"], n_bits=under_bits)
-    r = index_report(spark, sat_idx, scan=True)
-    if not any("bitmap saturated" in i for i in r["issues"]):
-        raise AssertionError(
-            f"undersized bitmap not flagged: fill {r.get('fill_factor')}"
-        )
-    kept_sat = dedup_exact_against_bloom_index(novel, sat_idx).count()
-    t0 = time.perf_counter()
-    rebuild_bloom_index(spark, sat_idx, corpus, n_bits=under_bits * 16)
-    rebuild_sec = round(time.perf_counter() - t0, 3)
-    healed = index_report(spark, sat_idx, scan=True)
-    if not healed["healthy"] or healed["fill_factor"] > 0.5:
-        raise AssertionError(
-            f"rebuild did not heal saturation: {healed['issues']} "
-            f"fill {healed.get('fill_factor')}"
-        )
-    if dedup_exact_against_bloom_index(dups, sat_idx).count() != 0:
-        raise AssertionError("rebuilt bitmap lost member keys")
-    kept = dedup_exact_against_bloom_index(novel, sat_idx).count()
-    if not (kept >= 0.99 * n_novel and kept > kept_sat):
-        raise AssertionError(
-            f"rebuild did not restore the non-member pass rate: "
-            f"{kept_sat} -> {kept} of {n_novel}"
-        )
-    return build_sec, probe_sec, append_sec, rebuild_sec
-
-
-def stream_sessionize_stage(spark, sf_dir, workdir, replicas):
-    """Streaming stateful sessionization at 10x (VERDICT r10 "What's
-    missing" #3): the last stateful component with only fixture-scale
-    tests. Source: the scaled events table keyed by user, written as
-    ``4 * replicas`` TIME-ORDERED files (range-sliced on event time,
-    mtimes staggered) so with ``maxFilesPerTrigger=1`` the BATCH COUNT
-    scales with replicas — the scale-faithful stream model, same
-    convention as :func:`stream_ingest_stage`; ordered slices keep a
-    0-second watermark exact (nothing late), so correctness gates stay
-    sharp. Runs cold + warm, reports the WARM reading plus per-batch cost
-    and PEAK STATE ROWS (from stateOperators progress) — the
-    fixed-vs-linear split: per-batch cost flat/falling with batch count =
-    linear; growing = state-store overhead rising with batches.
-
-    Gates (outside the timed window): emitted sessions are a SUBSET of
-    the batch lag-window sessionization of the same rows (same gap rule:
-    > gap splits), and a SUPERSET of the sessions the watermark provably
-    closed (end + gap strictly before the global max event time) — the
-    emit-on-close contract from both directions, plus non-vacuity.
-    Reference semantics: W1 gap sessionization,
-    /root/reference/satbucket/analysis.py:258-288."""
-    from pyspark.sql import Window
-
-    from sat_bucket_spark.streaming.sessions import streaming_sessionize_stateful
-
-    gap_s = 600.0
-    n_files = 4 * replicas
-    ev = entry_mod._events(spark, sf_dir).select(
-        "user_id", F.col("ts").alias("time")
-    )
-
-    # time-ordered slices: exact range bucketing on the event time (min/max
-    # from one aggregate), one file per slice via a slice-keyed repartition
-    src = os.path.join(workdir, "sess_src")
-    staged = os.path.join(workdir, "sess_sliced")
-    lo, hi = ev.agg(
-        F.min(F.col("time").cast("double")), F.max(F.col("time").cast("double"))
-    ).collect()[0]
-    n_ev = ev.count()
-    span = max(hi - lo, 1e-9)
-    sliced = ev.withColumn(
-        "slice",
-        F.least(
-            F.lit(n_files - 1),
-            F.floor((F.col("time").cast("double") - F.lit(lo)) / F.lit(span)
-                    * F.lit(n_files)).cast("int"),
-        ),
-    )
-    sliced.repartition(n_files, "slice").write.partitionBy("slice").parquet(staged)
-    os.makedirs(src)
-    moved = 0
-    for d in sorted(os.listdir(staged)):
-        if not d.startswith("slice="):
-            continue
-        i = int(d.split("=")[1])
-        parts = sorted(
-            f for f in os.listdir(os.path.join(staged, d))
-            if f.endswith(".parquet")
-        )
-        for j, f in enumerate(parts):
-            dst = os.path.join(src, f"{i:04d}_{j}.parquet")
-            os.rename(os.path.join(staged, d, f), dst)
-            os.utime(dst, (1e9 + i * 100, 1e9 + i * 100))
-            moved += 1
-    schema = spark.read.parquet(src).schema
-    n_src = spark.read.parquet(src).count()
-
-    sec = n_batches = peak_state = None
-    emitted_name = None
-    for attempt in ("cold", "warm"):
-        name = f"sess_probe_{attempt}"
-        t0 = time.perf_counter()
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        out = streaming_sessionize_stateful(
-            stream, ["user_id"], time="time", gap=gap_s, watermark="0 seconds"
-        )
-        q = (
-            out.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        sec = round(time.perf_counter() - t0, 3)
-        progress = q.recentProgress
-        n_batches = sum(1 for p in progress if p["numInputRows"] > 0) or len(progress)
-        peak_state = max(
-            (p["stateOperators"][0]["numRowsTotal"]
-             for p in progress if p.get("stateOperators")),
-            default=0,
-        )
-        emitted_name = name
-        _release(spark)
-
-    emitted = spark.sql(f"SELECT * FROM {emitted_name}")
-    n_emitted = emitted.count()
-    if not 0 < n_emitted:
-        raise AssertionError("stream sessionize emitted nothing")
-    # batch oracle: lag-window gap sessionization over the SAME rows.
-    # staging-completeness compares against the ORIGINAL events frame
-    # (src vs src would be vacuous)
-    rows = spark.read.parquet(src)
-    if n_src != n_ev:
-        raise AssertionError(f"slice staging lost rows: {n_src} != {n_ev}")
-    w = Window.partitionBy("user_id").orderBy("time")
-    t_us = F.col("time").cast("double")
-    batch_sessions = (
-        rows.withColumn(
-            "sid",
-            F.sum(
-                F.when(t_us - F.lag(t_us).over(w) > F.lit(gap_s), 1).otherwise(0)
-            ).over(w),
-        )
-        .groupBy("user_id", "sid")
-        .agg(
-            F.min("time").alias("session_start"),
-            F.max("time").alias("session_end"),
-            F.count(F.lit(1)).alias("n_rows"),
-        )
-        .drop("sid")
-    )
-    cols = ["user_id", "session_start", "session_end", "n_rows"]
-    phantom = emitted.select(cols).join(
-        batch_sessions.select(cols), cols, "left_anti"
-    ).count()
-    if phantom:
-        raise AssertionError(
-            f"{phantom}/{n_emitted} emitted sessions not in the batch oracle"
-        )
-    global_max = rows.agg(F.max(t_us)).collect()[0][0]
-    must_close = batch_sessions.where(
-        F.col("session_end").cast("double") + F.lit(gap_s) < F.lit(global_max)
-    )
-    n_must = must_close.count()
-    missing = must_close.select(cols).join(
-        emitted.select(cols), cols, "left_anti"
-    ).count()
-    if missing:
-        raise AssertionError(
-            f"{missing}/{n_must} watermark-closed sessions never emitted"
-        )
-    if not 0 < n_must <= n_emitted:
-        raise AssertionError(f"closure gate vacuous: must={n_must}")
-    per_batch = round(sec / max(n_batches, 1), 3)
-    return sec, n_batches, per_batch, peak_state
-
-
-def stream_ingest_stage(spark, sf_dir, workdir, replicas):
-    """Streaming ingest -> compaction at 10x (VERDICT r9 task #3): the
-    last composed stage without a growth reading. Mirrors bench.py's
-    bucket_stream_ingest (same library calls, availableNow trigger,
-    repartition=8 keyed micro-batch writes) but the SOURCE FILE COUNT
-    scales with replicas (4 per replica, one file per trigger) — the
-    scale-faithful model of a stream: 10x data arrives as 10x
-    micro-batches of the same size, so the row resolves the
-    fixed-vs-linear split of per-batch commit + sink-log overhead
-    (seconds/batch flat = linear; growing = sink-log scan cost rising
-    with batch count — the drift mode availableNow can't amortize).
-    Runs cold + warm into separate sink/checkpoint dirs and reports the
-    WARM reading, matching timed_entry's convention (measured cold/warm
-    at 1x: 13.9 / 8.6 s — the cold shot charges streaming-machinery
-    init to the row). Reference semantics: incremental bucket update,
-    /root/reference/satbucket/routines.py:580-587."""
-    import glob as _glob
-
-    from sat_bucket_spark import LonLatPartitioning, merge_granule_buckets
-    from sat_bucket_spark.streaming.ingest import stream_write_bucket
-
-    ev = entry_mod._with_coords(entry_mod._events(spark, sf_dir)).withColumnRenamed(
-        "ts", "time"
-    )
-    p = LonLatPartitioning(size=(10, 10))
-    src = os.path.join(workdir, "stream_src")
-    ev.repartition(4 * replicas).write.parquet(src)
-    n_src = spark.read.parquet(src).count()
-    schema = spark.read.parquet(src).schema
-
-    sec = None
-    for attempt in ("cold", "warm"):
-        sbucket = os.path.join(workdir, f"stream_bucket_{attempt}")
-        smerged = os.path.join(workdir, f"stream_merged_{attempt}")
-        t0 = time.perf_counter()
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = stream_write_bucket(
-            stream, sbucket, p,
-            checkpoint_dir=os.path.join(workdir, f"ckpt_{attempt}"),
-            x="lon", y="lat", trigger={"availableNow": True}, repartition=8,
-        )
-        q.awaitTermination()
-        merge_granule_buckets(spark, sbucket, smerged, temporal_partitioning="month")
-        sec = round(time.perf_counter() - t0, 3)
-
-        # integrity gates (outside the timed window), bench.py's contract
-        n_stream = spark.read.parquet(sbucket).count()
-        n_merged = (
-            spark.read.option("pathGlobFilter", "*.parquet").parquet(smerged).count()
-        )
-        if not (n_stream == n_merged == n_src):
-            raise AssertionError(
-                f"stream-ingest round trip diverged: src={n_src} "
-                f"stream={n_stream} merged={n_merged}"
-            )
-        if not _glob.glob(f"{smerged}/**/*.parquet", recursive=True):
-            raise AssertionError("stream merge produced no files")
-        _release(spark)
-    return sec
-
-
-def bm25_index_stages(spark, sf_dir, workdir):
-    """Persisted BM25 index at the replicated corpus (r12 — fourth leg's
-    10x row). Scale question: the probe's cost must track MATCHED POSTING
-    rows (query-term df), never corpus size — its inputs are the pushed
-    In(term) slice of the postings table plus a query-terms-sized read of
-    terms/. Gates: (a) the probe plan scans no corpus parquet and carries
-    the pushed In(term); (b) append-equals-rebuild holds at scale (build
-    on 9 replicas + append 1 == scores from the full build — df/stats are
-    exact sums); (c) results non-empty."""
-    from sat_bucket_spark.operators.relevance import (
-        append_to_bm25_index,
-        bm25_index_topk,
-        build_bm25_index,
-    )
-
-    corpus = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    terms = ["data", "model", "the"]
-    idx = os.path.join(workdir, "bm25_full")
-    t0 = time.perf_counter()
-    build_bm25_index(corpus, idx)
-    build_sec = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    full = sorted(
-        map(tuple, bm25_index_topk(spark, idx, terms, k=None).collect())
-    )
-    probe_sec = round(time.perf_counter() - t0, 3)
-    if not full:
-        raise AssertionError("bm25 index probe vacuous: no matches")
-    out = bm25_index_topk(spark, idx, terms, k=None)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    if "documents.parquet" in plan:
-        raise AssertionError("bm25 probe scanned the corpus parquet")
-    if "PushedFilters: [In(term" not in plan:
-        raise AssertionError("bm25 probe lost the pushed In(term) filter")
-
-    # append-equals-rebuild at scale: split one replica out by id range
-    split = corpus.agg(F.expr("percentile_approx(doc_id, 0.9)")).collect()[0][0]
-    inc = os.path.join(workdir, "bm25_inc")
-    build_bm25_index(corpus.where(F.col("doc_id") <= split), inc)
-    t0 = time.perf_counter()
-    append_to_bm25_index(corpus.where(F.col("doc_id") > split), inc)
-    append_sec = round(time.perf_counter() - t0, 3)
-    got = sorted(
-        map(tuple, bm25_index_topk(spark, inc, terms, k=None).collect())
-    )
-    if got != full:
-        raise AssertionError("bm25 append-equals-rebuild diverged at scale")
-
-    # append-heavy fragmentation row (r13): many nightly appends shrink
-    # posting files until the pushed In(term) point-lookup pays a footer
-    # open per file; compact_bm25_index must restore the few-files
-    # term-range layout with scores bit-identical to the fragmented index
-    # AND to the single build (exact-sum non-vacuity)
-    from sat_bucket_spark.maintenance import index_report
-    from sat_bucket_spark.operators.relevance import compact_bm25_index
-
-    frag_idx = os.path.join(workdir, "bm25_frag")
-    splits = 10
-    build_bm25_index(corpus.where(F.col("doc_id") % splits == 0), frag_idx)
-    for part in range(1, splits):
-        append_to_bm25_index(
-            corpus.where(F.col("doc_id") % splits == part), frag_idx
-        )
-    frag_row = index_report(spark, frag_idx)["components"]["postings"]
-    if frag_row["files"] < splits:
-        raise AssertionError(
-            f"append-heavy index unexpectedly unfragmented: {frag_row}"
-        )
-    t0 = time.perf_counter()
-    frag_scores = sorted(
-        map(tuple, bm25_index_topk(spark, frag_idx, terms, k=None).collect())
-    )
-    probe_frag_sec = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    cstats = compact_bm25_index(spark, frag_idx)
-    compact_sec = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    cmp_scores = sorted(
-        map(tuple, bm25_index_topk(spark, frag_idx, terms, k=None).collect())
-    )
-    probe_cmp_sec = round(time.perf_counter() - t0, 3)
-    if cmp_scores != frag_scores or cmp_scores != full:
-        raise AssertionError("bm25 compaction changed probe scores")
-    if not cstats["posting_files"][1] < cstats["posting_files"][0]:
-        raise AssertionError(
-            f"bm25 compaction did not reduce files: {cstats['posting_files']}"
-        )
-    _fsck_gate(spark, idx, inc, frag_idx)
-    return (
-        build_sec, probe_sec, append_sec,
-        probe_frag_sec, probe_cmp_sec, compact_sec,
-        cstats["posting_files"],
-    )
-
-
-def semantic_index_stages(spark, sf_dir, workdir):
-    """Persisted IVFPQ semantic-dedup gate at the replicated embedding
-    corpus (r12 — the embedding leg's 10x row). Scale questions: (a) the
-    probe reads ONLY the probed clusters' code partitions (plan-gated
-    partition In) — its codes I/O is ~n_probe/n_clusters of the corpus
-    and the payload is m small ints per row; (b) the exact verify is
-    candidate-bounded (candidate-complete margin here — the replicated
-    random-vector corpus is the PQ worst case; production codebooks
-    bound candidates by a finite margin); (c) learn closure: appending
-    the survivors makes a re-keyed resubmission of the same content drop
-    to ZERO. Gates: survivors == the planted novel half exactly (copies
-    carry cosine 1.0 with a guaranteed-probed twin; negated vectors top
-    out far below the 0.9 threshold), partition pruning in the plan,
-    post-append resubmission count 0."""
-    from sat_bucket_spark.operators.similarity import (
-        append_to_ivfpq_index,
-        build_ivfpq_index,
-        semantic_dedup_against_index,
-    )
-
-    archive_path = os.path.join(sf_dir, "embeddings.parquet")
-    archive = spark.read.parquet(archive_path).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    dups = archive.where(F.col("vec_id") % 101 == 0).select(
-        (F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding"
-    )
-    novel = archive.where(F.col("vec_id") % 103 == 0).select(
-        (F.col("vec_id") + 20_000_000).alias("vec_id"),
-        F.transform("embedding", lambda x: -x).alias("embedding"),
-    )
-    batch_path = os.path.join(workdir, "batch")
-    dups.unionByName(novel).write.parquet(batch_path)
-    batch = spark.read.parquet(batch_path)
-    n_batch = batch.count()
-    n_novel = novel.count()
-
-    idx = os.path.join(workdir, "sem_index")
-    t0 = time.perf_counter()
-    build_ivfpq_index(
-        archive, idx, dim=64, n_clusters=8, m=4, ksub=16, store_vectors=True
-    )
-    build_sec = round(time.perf_counter() - t0, 3)
-
-    t0 = time.perf_counter()
-    surv = semantic_dedup_against_index(
-        batch, idx, min_cosine=0.9, n_probe=2, adc_margin=None,
-        verify_vectors="index",
-    )
-    n_surv = surv.count()
-    probe_sec = round(time.perf_counter() - t0, 3)
-    if n_surv != n_novel or not 0 < n_surv < n_batch:
-        raise AssertionError(
-            f"semantic probe wrong: {n_surv} survivors, expected {n_novel} "
-            f"of {n_batch}"
-        )
-    # plan gate on the UNVERIFIED posture: the verified path's eager
-    # candidate cache hides the (pruned) codes scan from the final plan
-    plan = (
-        semantic_dedup_against_index(batch, idx, min_cosine=0.9, n_probe=2)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    pfs = re.findall(r"PartitionFilters: \[([^\]]*)\]", plan)
-    if not any("__cluster" in pf and " IN " in pf for pf in pfs):
-        raise AssertionError("semantic probe lost its partition pruning")
-
-    surv_path = os.path.join(workdir, "sem_survivors")
-    surv.write.parquet(surv_path)  # staged, per the append contract
-    t0 = time.perf_counter()
-    append_to_ivfpq_index(spark.read.parquet(surv_path), idx)
-    append_sec = round(time.perf_counter() - t0, 3)
-    resubmit = spark.read.parquet(surv_path).select(
-        (F.col("vec_id") + 30_000_000).alias("vec_id"), "embedding"
-    )
-    n_re = semantic_dedup_against_index(
-        resubmit, idx, min_cosine=0.9, n_probe=2, adc_margin=None,
-        verify_vectors="index",  # the appended store carries the survivors
-    ).count()
-    if n_re != 0:
-        raise AssertionError(
-            f"appended vectors not visible to the next probe ({n_re} kept)"
-        )
-    _fsck_gate(spark, idx)
-    return build_sec, probe_sec, append_sec
-
-
-def pagerank_update_stages(spark, sf_dir):
-    """Warm-start rank refresh at the replicated corpus (r13). Scale
-    question: rank mass is global, so the refresh cannot skip the corpus
-    — what it buys is ROUNDS, and at 10x graph size each round is a
-    corpus-sized shuffle. Gates: (a) accuracy — warm-4-rounds lands at
-    least 2x closer (L1) to a 16-round reference than cold-4-rounds, so
-    the standing seed genuinely replaces rounds at scale; (b) mass —
-    warm ranks sum to 1 (the seed fold renormalized exactly); (c) the
-    warm wall-clock tracks the cold run of equal rounds (the seed join
-    must stay a one-time cost, not a per-round term)."""
-    from sat_bucket_spark.operators.graph import pagerank, update_pagerank
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id"
-    )
-    # heavy-tailed degrees (hub nodes with ~corpus/4093 spokes) — the
-    # crawl/dup-graph shape warm starting exists for. On a near-regular
-    # graph the fixpoint IS the uniform vector, i.e. the cold start
-    # already sits at the answer and the receipt would be vacuous.
-    old = docs.select(
-        F.col("doc_id").alias("src"),
-        (F.col("doc_id") % 4093).alias("dst"),
-    ).unionByName(
-        docs.select(
-            F.col("doc_id").alias("src"),
-            ((F.col("doc_id") * 7 + 1) % 50_000).alias("dst"),
-        )
-    )
-    # the nightly batch: fixed base-id window wiring 211 brand-new hubs
-    new = docs.where(F.col("doc_id") < 2000).select(
-        F.col("doc_id").alias("src"),
-        ((F.col("doc_id") * 13 + 5) % 211 + 10_000_000).alias("dst"),
-    )
-    full = old.unionByName(new)
-    # the standing map is CONVERGED state (last night's run ended many
-    # rounds deep): 16 rounds leaves a 0.85^16 ~ 7% residual, so the
-    # warm seed's distance to the new fixpoint is dominated by the
-    # batch's perturbation, not by standing-map sloppiness
-    standing = pagerank(old, iterations=16, driver_threshold=0)
-
-    t0 = time.perf_counter()
-    warm = {
-        r["node"]: r["rank"]
-        for r in update_pagerank(
-            standing, full, iterations=4, driver_threshold=0
-        ).collect()
-    }
-    warm_sec = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    cold = {
-        r["node"]: r["rank"]
-        for r in pagerank(full, iterations=4, driver_threshold=0).collect()
-    }
-    cold_sec = round(time.perf_counter() - t0, 3)
-    truth = {
-        r["node"]: r["rank"]
-        for r in pagerank(full, iterations=24, driver_threshold=0).collect()
-    }
-    l1_warm = sum(abs(warm[k] - truth[k]) for k in truth)
-    l1_cold = sum(abs(cold[k] - truth[k]) for k in truth)
-    if not l1_warm < 0.5 * l1_cold:
-        raise AssertionError(
-            f"warm start did not buy rounds at scale: L1 warm {l1_warm:.6f} "
-            f"vs cold {l1_cold:.6f}"
-        )
-    mass = sum(warm.values())
-    if abs(mass - 1.0) > 1e-6:
-        raise AssertionError(f"warm ranks mass {mass} != 1")
-    return warm_sec, cold_sec, round(l1_warm / l1_cold, 4)
-
-
-def cc_update_stages(spark, sf_dir, workdir):
-    """Incremental cluster-map maintenance at the replicated corpus (r12).
-    Scale question: a nightly batch's merge into a CORPUS-SIZED standing
-    map must not recompute components over the corpus's accumulated edge
-    history. The update contracts standing components to their
-    representatives (batch-sized solve — legitimately driver-routed) and
-    applies the merges with ONE broadcast pass over the standing map; the
-    comparison number is the full recompute over (old ∪ new) on the
-    DISTRIBUTED route — the only route a corpus-scale edge history has
-    (forced driver_threshold=0, same framing as the pagerank probe).
-    Gates: the updated map equals the full recompute map exactly."""
-    from sat_bucket_spark.operators.graph import (
-        connected_components,
-        update_connected_components,
-    )
-
-    docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id"
-    )
-    old = docs.select(
-        F.col("doc_id").alias("src"),
-        (F.col("doc_id") - F.col("doc_id") % 4).alias("dst"),
-    )
-    standing_path = os.path.join(workdir, "standing")
-    connected_components(old).write.parquet(standing_path)
-    standing = spark.read.parquet(standing_path)
-    # the nightly batch: FIXED size regardless of replicas (base-id window)
-    base = docs.where(F.col("doc_id") < 4000)
-    new = (
-        base.where(F.col("doc_id") % 8 == 0)
-        .select(F.col("doc_id").alias("src"), (F.col("doc_id") + 4).alias("dst"))
-        .unionByName(
-            base.where(F.col("doc_id") % 10 == 0).select(
-                (F.col("doc_id") + 10_000_000).alias("src"),
-                (F.col("doc_id") - F.col("doc_id") % 4).alias("dst"),
-            )
-        )
-    )
-
-    t0 = time.perf_counter()
-    upd = update_connected_components(standing, new)
-    got = {r["node"]: r["component"] for r in upd.collect()}
-    update_sec = round(time.perf_counter() - t0, 3)
-
-    t0 = time.perf_counter()
-    full = connected_components(
-        old.unionByName(new), driver_threshold=0
-    )
-    expected = {r["node"]: r["component"] for r in full.collect()}
-    full_sec = round(time.perf_counter() - t0, 3)
-    if got != expected:
-        diff = {k for k in expected if got.get(k) != expected[k]}
-        raise AssertionError(
-            f"incremental map diverged from full recompute on {len(diff)} "
-            f"nodes (e.g. {sorted(diff)[:5]})"
-        )
-    return update_sec, full_sec
-
-
-def archive_gate_stage(spark, sf_dir, workdir, replicas):
-    """stream_dedup_against_indexes(learn=True) growth row (VERDICT r11
-    task #3): the archive gate appends to the MinHash index at TRIGGER
-    frequency, so fragmentation grows much faster than the nightly
-    posture the compaction receipts assume. This row runs ~4x``replicas``
-    learn micro-batches (one file per trigger) against indexes built over
-    the replicated corpus and resolves three questions:
-
-    - per-batch cost trend (first-5 vs last-5 trigger durations from the
-      query's own progress records — flat = the per-batch probe cost is
-      fixed; growing = index fragmentation or state is leaking into the
-      hot path);
-    - band-partition file-count growth across the learn appends (the
-      fragmentation the in-stream compaction cadence must reclaim);
-    - an IN-STREAM compaction receipt: the stream is split into two
-      availableNow segments sharing one checkpoint; between them,
-      ``compact_minhash_index`` runs and a fixed gate-probe must return
-      BIT-IDENTICAL survivors across the compaction, then segment B
-      resumes learning from the same checkpoint (mid-stream maintenance
-      is exactly how a production gate would run it — triggers pause,
-      compaction folds the fragments, the query restarts from offsets);
-    - the ``compact_every`` cadence receipt: segment A runs WITHOUT
-      maintenance (measuring the raw fragmentation-driven growth term —
-      r12 first reading: per-batch 3.76 -> 5.18 s over 20 uncompacted
-      learn batches), segment B runs WITH the gate's own in-stream
-      cadence, and the stage GATES that segment B's tail per-batch cost
-      does not ratchet past segment A's uncompacted tail (1.25x bound —
-      the cadence compactions ride inside B's own trigger durations).
-
-    Correctness gates (all non-vacuous both ways): exact corpus dups drop
-    at the Bloom leg, near-dups drop at the MinHash leg, copies of an
-    EARLIER batch's survivors drop only via learn, and every novel doc
-    survives — pinned by exact id-set equality over the whole run.
-    Reference analogue: incremental update,
-    /root/reference/satbucket/routines.py:580-587.
-    """
-    import glob as _glob
-
-    from sat_bucket_spark.operators.dedup import (
-        build_bloom_index,
-        build_minhash_index,
-        compact_minhash_index,
-        minhash_dedup_against_index,
-    )
-    from sat_bucket_spark.streaming.curation import stream_dedup_against_indexes
-
-    corpus = spark.read.parquet(os.path.join(sf_dir, "documents.parquet")).select(
-        "doc_id", "text"
-    )
-    # near-dup seeds must be long enough that a suffix edit stays >= 0.5
-    # Jaccard — one short doc would break the drop gate
-    seeds = corpus.where(F.length("text") >= 200)
-    bidx = os.path.join(workdir, "bloom_idx")
-    midx = os.path.join(workdir, "mh_idx")
-    build_bloom_index(corpus, bidx, ["text"])
-    build_minhash_index(corpus, midx, n_hashes=8, n_bands=4, shingle_size=8)
-
-    def band_frag() -> int:
-        root = os.path.join(midx, "bands")
-        return max(
-            len(_glob.glob(os.path.join(root, d, "*.parquet")))
-            for d in os.listdir(root)
-            if d.startswith("band_idx=")
-        )
-
-    # micro-batch source: one file per trigger. Batch i carries
-    #   2 exact corpus dups      -> Bloom leg drops
-    #   2 near-dups of corpus    -> MinHash leg drops
-    #   2 copies of batch i-1's novels -> LEARN drops (standing state)
-    #   6 novel docs             -> survive (and get learned)
-    n_batches = 4 * replicas
-    seed_rows = seeds.orderBy("doc_id").limit(2 * n_batches + 2).collect()
-    if len(seed_rows) < 2 * n_batches + 2:
-        raise AssertionError("not enough long docs to seed the gate batches")
-    src = os.path.join(workdir, "src")
-    os.makedirs(src, exist_ok=True)
-
-    def novel_text(i: int, j: int) -> str:
-        return f"novelgate b{i} d{j} " + " ".join(
-            f"tok{i}x{j}y{w}" for w in range(18)
-        )
-
-    expected_kept: set[int] = set()
-    for i in range(n_batches):
-        rows = []
-        for j in range(2):  # exact corpus dups
-            r = seed_rows[2 * i + j]
-            rows.append((1_000_000 + 100 * i + j, r["text"]))
-        for j in range(2):  # near-dups of corpus (suffix edit)
-            r = seed_rows[2 * i + j]
-            rows.append((2_000_000 + 100 * i + j, r["text"] + " tailtok"))
-        if i > 0:  # exact copies of the previous batch's novels
-            for j in range(2):
-                rows.append((3_000_000 + 100 * i + j, novel_text(i - 1, j)))
-        for j in range(6):  # novel docs
-            doc_id = 4_000_000 + 100 * i + j
-            rows.append((doc_id, novel_text(i, j)))
-            expected_kept.add(doc_id)
-        sub = os.path.join(workdir, f"b{i}")
-        spark.createDataFrame(rows, "doc_id long, text string").coalesce(
-            1
-        ).write.mode("overwrite").parquet(sub)
-        part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(sub, part), os.path.join(src, f"{i:04d}.parquet"))
-        os.utime(
-            os.path.join(src, f"{i:04d}.parquet"), (1e9 + i * 100, 1e9 + i * 100)
-        )
-
-    # two segments sharing one checkpoint; segment split by hiding the
-    # second half of the files until segment B
-    half = n_batches // 2
-    hidden = os.path.join(workdir, "hidden")
-    os.makedirs(hidden, exist_ok=True)
-    for i in range(half, n_batches):
-        os.rename(
-            os.path.join(src, f"{i:04d}.parquet"),
-            os.path.join(hidden, f"{i:04d}.parquet"),
-        )
-
-    sink = os.path.join(workdir, "sink")
-    ckpt = os.path.join(workdir, "ckpt")
-    schema = "doc_id long, text string"
-    seg_durations: dict[str, list[float]] = {}
-
-    def run_segment(tag: str, compact_every: int | None = None) -> float:
-        t0 = time.perf_counter()
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = stream_dedup_against_indexes(
-            stream, sink, ckpt,
-            bloom_index_dir=bidx, minhash_index_dir=midx,
-            min_jaccard=0.5, learn=True, trigger={"availableNow": True},
-            compact_every=compact_every,
-        )
-        q.awaitTermination()
-        durations = seg_durations.setdefault(tag, [])
-        for prog in q.recentProgress:
-            d = (prog.get("durationMs") or {}).get("triggerExecution")
-            if d is not None and prog.get("numInputRows", 0) > 0:
-                durations.append(d / 1000.0)
-        return time.perf_counter() - t0
-
-    # segment A runs WITHOUT in-stream maintenance — it measures the raw
-    # growth term (per-batch cost vs accumulating fragmentation)
-    sec_a = run_segment("a")
-    frag_mid = band_frag()
-
-    # in-stream compaction receipt: fixed gate probe bit-identical across
-    # compact_minhash_index, then the stream RESUMES from the checkpoint
-    gate_rows = (
-        [(9_000_000 + j, novel_text(0, j)) for j in range(4)]  # learned in seg A
-        + [(9_100_000 + j, seed_rows[j]["text"] + " tailtok") for j in range(4)]
-        + [(9_200_000 + j, f"gateprobe fresh {j} " + " ".join(f"g{j}w{w}" for w in range(18))) for j in range(4)]
-    )
-    gate_probe = spark.createDataFrame(gate_rows, schema)
-    before = sorted(
-        r["doc_id"]
-        for r in minhash_dedup_against_index(gate_probe, midx, min_jaccard=0.5).collect()
-    )
-    t0 = time.perf_counter()
-    stats = compact_minhash_index(spark, midx)
-    compact_sec = round(time.perf_counter() - t0, 3)
-    frag_compacted = band_frag()
-    after = sorted(
-        r["doc_id"]
-        for r in minhash_dedup_against_index(gate_probe, midx, min_jaccard=0.5).collect()
-    )
-    if after != before or not before:
-        raise AssertionError("in-stream compaction changed gate-probe results")
-    if stats["band_partitions"] < 1 or not frag_compacted < frag_mid:
-        raise AssertionError(
-            f"learn appends did not fragment / compaction did not fold: "
-            f"{frag_mid} -> {frag_compacted}"
-        )
-
-    for i in range(half, n_batches):
-        os.rename(
-            os.path.join(hidden, f"{i:04d}.parquet"),
-            os.path.join(src, f"{i:04d}.parquet"),
-        )
-    # segment B runs WITH the gate's own compaction cadence — it receipts
-    # the knob: per-batch cost should stay bounded instead of re-ratcheting
-    sec_b = run_segment("b", compact_every=max(half // 4, 2))
-    frag_end = band_frag()
-
-    kept = {
-        r["doc_id"]
-        for r in spark.read.option("basePath", sink)
-        .parquet(f"{sink}/batch=*")
-        .collect()
-    }
-    if kept != expected_kept:
-        extra = sorted(kept - expected_kept)[:5]
-        missing = sorted(expected_kept - kept)[:5]
-        raise AssertionError(
-            f"archive gate diverged: {len(kept)} kept vs "
-            f"{len(expected_kept)} expected (extra={extra} missing={missing})"
-        )
-    dur_a, dur_b = seg_durations.get("a", []), seg_durations.get("b", [])
-    k = max(1, min(5, len(dur_a) // 2))
-    per_batch_first = round(sum(dur_a[:k]) / k, 3)
-    per_batch_last = round(sum(dur_a[-k:]) / k, 3)
-    kb = max(1, min(5, len(dur_b) // 2))
-    per_batch_b_last = round(sum(dur_b[-kb:]) / kb, 3)
-    # the cadence must keep segment B's tail from re-ratcheting past
-    # segment A's uncompacted tail (generous 1.25x: host noise, and the
-    # cadence compactions themselves ride inside B's trigger durations)
-    if per_batch_b_last > 1.25 * max(per_batch_last, 0.001):
-        raise AssertionError(
-            f"compact_every did not bound per-batch growth: segment B tail "
-            f"{per_batch_b_last} vs segment A tail {per_batch_last}"
-        )
-    total = round(sec_a + compact_sec + sec_b, 3)
-    return (
-        total, n_batches, per_batch_first, per_batch_last, per_batch_b_last,
-        frag_mid, frag_compacted, frag_end, compact_sec,
-    )
-
-
-def vector_gate_stage(spark, sf_dir, workdir, replicas):
-    """The streaming archive gate's SEMANTIC leg under trigger frequency
-    (r12 — the vector analogue of the text gate's growth row): an
-    ivfpq-only ``stream_dedup_against_indexes(learn=True)`` over
-    2x``replicas`` vector micro-batches against an index built on the
-    replicated embedding corpus. Resolves the same three questions as the
-    text row — per-batch cost trend, code-partition fragmentation under
-    learn appends, and an in-stream ``compact_ivfpq_index`` receipt
-    (fixed gate probe bit-identical across the compaction, stream resumes
-    from the same checkpoint, segment B under the gate's own
-    ``compact_every`` cadence). Correctness gates: exact copies of the
-    archive drop, copies of an EARLIER batch's survivors drop only via
-    learn, every novel vector survives — exact id-set equality."""
-    import glob as _glob
-
-    from sat_bucket_spark.operators.similarity import (
-        build_ivfpq_index,
-        compact_ivfpq_index,
-        semantic_dedup_against_index,
-    )
-    from sat_bucket_spark.streaming.curation import stream_dedup_against_indexes
-
-    emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet")).select(
-        "vec_id",
-        F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
-    )
-    vidx = os.path.join(workdir, "ivfpq_idx")
-    build_ivfpq_index(
-        emb, vidx, dim=64, n_clusters=8, m=4, ksub=16, store_vectors=True
-    )
-
-    def code_frag() -> int:
-        root = os.path.join(vidx, "codes")
-        return max(
-            len(_glob.glob(os.path.join(root, d, "*.parquet")))
-            for d in os.listdir(root)
-            if d.startswith("__cluster=")
-        )
-
-    n_batches = 2 * replicas
-    seed_rows = emb.orderBy("vec_id").limit(2 * n_batches + 8).collect()
-
-    # batch i: 2 exact archive copies (drop), 2 copies of batch i-1's
-    # novels (drop via learn), 2 novel vectors (survive + learn)
-    src = os.path.join(workdir, "src")
-    os.makedirs(src, exist_ok=True)
-    expected_kept: set[int] = set()
-    novel_cache: dict[tuple, list[float]] = {}
-
-    def novel(i: int, j: int) -> list[float]:
-        key = (i, j)
-        if key not in novel_cache:
-            base = seed_rows[(2 * i + j) % (2 * n_batches)]["embedding"]
-            # a deterministic sign-flip pattern unique to (i, j): flips
-            # of disjoint coordinate blocks keep mutual cosines far from
-            # 1.0 while staying unit-norm
-            v = list(base)
-            start = (7 * i + 13 * j) % 48
-            for w in range(start, start + 16):
-                v[w] = -v[w]
-            novel_cache[key] = [-x for x in v]
-        return novel_cache[key]
-
-    for i in range(n_batches):
-        rows = []
-        for j in range(2):  # exact archive copies
-            r = seed_rows[2 * i + j]
-            rows.append((1_000_000 + 100 * i + j, r["embedding"]))
-        if i > 0:  # copies of the previous batch's novels
-            for j in range(2):
-                rows.append((3_000_000 + 100 * i + j, novel(i - 1, j)))
-        for j in range(2):  # novel vectors
-            vec_id = 4_000_000 + 100 * i + j
-            rows.append((vec_id, novel(i, j)))
-            expected_kept.add(vec_id)
-        sub = os.path.join(workdir, f"vb{i}")
-        spark.createDataFrame(
-            rows, "vec_id long, embedding array<double>"
-        ).coalesce(1).write.mode("overwrite").parquet(sub)
-        part = [f for f in os.listdir(sub) if f.endswith(".parquet")][0]
-        os.rename(os.path.join(sub, part), os.path.join(src, f"{i:04d}.parquet"))
-        os.utime(
-            os.path.join(src, f"{i:04d}.parquet"), (1e9 + i * 100, 1e9 + i * 100)
-        )
-
-    half = n_batches // 2
-    hidden = os.path.join(workdir, "hidden")
-    os.makedirs(hidden, exist_ok=True)
-    for i in range(half, n_batches):
-        os.rename(
-            os.path.join(src, f"{i:04d}.parquet"),
-            os.path.join(hidden, f"{i:04d}.parquet"),
-        )
-
-    sink = os.path.join(workdir, "sink")
-    ckpt = os.path.join(workdir, "ckpt")
-    schema = "vec_id long, embedding array<double>"
-    durations: dict[str, list[float]] = {}
-
-    def run_segment(tag: str, compact_every: int | None = None) -> float:
-        t0 = time.perf_counter()
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-        q = stream_dedup_against_indexes(
-            stream, sink, ckpt,
-            ivfpq_index_dir=vidx, min_cosine=0.9, n_probe=2,
-            ivfpq_verify="index", adc_margin=None,
-            learn=True, trigger={"availableNow": True},
-            compact_every=compact_every,
-        )
-        q.awaitTermination()
-        ds = durations.setdefault(tag, [])
-        for prog in q.recentProgress:
-            d = (prog.get("durationMs") or {}).get("triggerExecution")
-            if d is not None and prog.get("numInputRows", 0) > 0:
-                ds.append(d / 1000.0)
-        return time.perf_counter() - t0
-
-    run_segment("a")
-    frag_mid = code_frag()
-
-    # in-stream compaction receipt: a fixed semantic probe (learned novels
-    # + archive copies + fresh) must return bit-identical survivors across
-    # compact_ivfpq_index, then the stream resumes from the checkpoint
-    probe_rows = (
-        [(9_000_000 + j, novel(0, j)) for j in range(2)]       # learned in seg A
-        + [(9_100_000 + j, seed_rows[j]["embedding"]) for j in range(2)]  # archive copies
-        + [(9_200_000 + j, novel(n_batches + 1 + j, 0)) for j in range(2)]  # fresh
-    )
-    gate_probe = spark.createDataFrame(probe_rows, schema)
-
-    def probe_ids():
-        return sorted(
-            r["vec_id"]
-            for r in semantic_dedup_against_index(
-                gate_probe, vidx, min_cosine=0.9, n_probe=2,
-                adc_margin=None, verify_vectors="index",
-            ).collect()
-        )
-
-    before = probe_ids()
-    # non-vacuous: learned seg-A novels AND archive copies drop, fresh keep
-    if before != [9_200_000, 9_200_001]:
-        raise AssertionError(f"gate probe not discriminating: {before}")
-    t0 = time.perf_counter()
-    n_comp = compact_ivfpq_index(spark, vidx)
-    compact_sec = round(time.perf_counter() - t0, 3)
-    frag_comp = code_frag()
-    after = probe_ids()
-    if after != before or not before:
-        raise AssertionError("in-stream IVFPQ compaction changed probe results")
-    if n_comp < 1 or not frag_comp < frag_mid:
-        raise AssertionError(
-            f"learn appends did not fragment / compaction did not fold: "
-            f"{frag_mid} -> {frag_comp}"
-        )
-
-    for i in range(half, n_batches):
-        os.rename(
-            os.path.join(hidden, f"{i:04d}.parquet"),
-            os.path.join(src, f"{i:04d}.parquet"),
-        )
-    run_segment("b", compact_every=max(half // 4, 2))
-    frag_end = code_frag()
-
-    kept = {
-        r["vec_id"]
-        for r in spark.read.option("basePath", sink)
-        .parquet(f"{sink}/batch=*")
-        .collect()
-    }
-    if kept != expected_kept:
-        extra = sorted(kept - expected_kept)[:5]
-        missing = sorted(expected_kept - kept)[:5]
-        raise AssertionError(
-            f"vector gate diverged: {len(kept)} kept vs "
-            f"{len(expected_kept)} expected (extra={extra} missing={missing})"
-        )
-    total = round(sum(sum(v) for v in durations.values()), 3)
-    d_all = durations.get("a", []) + durations.get("b", [])
-    first = round(sum(d_all[:3]) / max(len(d_all[:3]), 1), 3)
-    last = round(sum(d_all[-3:]) / max(len(d_all[-3:]), 1), 3)
-    return total, n_batches, first, last, frag_mid, frag_comp, frag_end, compact_sec
-
-
-def bucket_stages(spark, sf_dir, workdir):
-    from sat_bucket_spark import (
-        LonLatPartitioning,
-        merge_granule_buckets,
-        write_bucket,
-    )
-
-    ev = entry_mod._with_coords(entry_mod._events(spark, sf_dir)).withColumnRenamed(
-        "ts", "time"
-    )
-    p = LonLatPartitioning(size=(10, 10))
-    bucket = os.path.join(workdir, "bucket")
-    merged = os.path.join(workdir, "merged")
-    t0 = time.perf_counter()
-    write_bucket(ev, bucket, p, x="lon", y="lat")
-    w = round(time.perf_counter() - t0, 3)
-    t0 = time.perf_counter()
-    merge_granule_buckets(spark, bucket, merged, temporal_partitioning="month")
-    m = round(time.perf_counter() - t0, 3)
-    return w, m
+# (table, id column shifted per copy) — None: copies stay exact duplicates
+SCALED_TABLES = [
+    ("documents", "doc_id"),
+    ("events", None),
+    ("orders", "o_orderkey"),
+    ("embeddings", "vec_id"),
+]
+CANARY_KINDS = ("host", "write")
 
 
 def main() -> int:
@@ -1912,228 +96,34 @@ def main() -> int:
     keys = [k for k in args.keys.split(",") if k]
 
     base = os.environ["SPARK_GRAFT_SF_DIR"]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="sat-bucket-spark-probe-sf1",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if str(cpus).isdigit() else 32,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # host-factor canary shared with bench.py (same frozen workload, same
-    # pinned reference) — probe readings carry the same co-tenant noise as
+    spark = bc.session("sat-bucket-spark-probe-sf1")
+    # host-factor canaries shared with bench.py (same frozen workloads, same
+    # pinned references) — probe readings carry the same co-tenant noise as
     # bench readings, so they get the same self-normalization
-    from bench import (
-        CANARY_REF_SEC,
-        WRITE_CANARY_REF_SEC,
-        _canary_median,
-        _write_canary_median,
-    )
-
     work = tempfile.mkdtemp(prefix="probe_sf1_")
-    canary_pre = _canary_median(spark, work)
-    write_pre = _write_canary_median(spark, work)
-    timings: dict[str, float] = {}
-    recalls: dict[str, float] = {}
+    pre = {k: bc.canary_median(spark, work, k) for k in CANARY_KINDS}
     try:
         scaled = os.path.join(work, "scaled")
-        replicate_table(spark, base, scaled, "documents", "doc_id", args.replicas)
-        replicate_table(spark, base, scaled, "events", None, args.replicas)
-        if "pagerank" in keys or "pagerank_directed" in keys:
-            replicate_table(spark, base, scaled, "orders", "o_orderkey", args.replicas)
-        if (
-            "ann_index_search" in keys
-            or "ann_index_build" in keys
-            or "semantic_index_probe" in keys
-            or "ivfpq_drift_retrain" in keys
-            or "stream_vector_gate" in keys
-        ):
-            replicate_table(
-                spark, base, scaled, "embeddings", "vec_id", args.replicas
-            )
-
-        for name in keys:
-            if name == "wet_curate":
-                timings[name] = wet_curate_stage(
-                    spark, scaled, os.path.join(work, "wet")
-                )
-            elif name == "warc_html_curate":
-                timings[name] = html_curate_stage(
-                    spark, scaled, os.path.join(work, "html")
-                )
-            elif name == "media_curate":
-                timings[name] = media_curate_stage(
-                    spark, scaled, os.path.join(work, "media")
-                )
-            elif name in ("video_hash", "video_dedup"):
-                timings[name] = video_stage(spark, scaled, name)
-            elif name in ("ann_index_build", "ann_index_search"):
-                if "ann_index_search" in timings:
-                    continue
-                b, srch, rec_b, rec_a = ann_index_stages(
-                    spark, scaled, os.path.join(work, "ann"), args.replicas
-                )
-                timings["ann_index_build"], timings["ann_index_search"] = b, srch
-                recalls["ann_recall_build"] = rec_b
-                recalls["ann_recall_append"] = rec_a
-                for label, rec in recalls.items():
-                    if not rec >= ANN_RECALL_FLOOR:
-                        raise AssertionError(
-                            f"{label} recall@10 degraded at {args.replicas}x: "
-                            f"{rec:.4f} < {ANN_RECALL_FLOOR}"
-                        )
-            elif name == "minhash_index_probe":
-                b, pr, cmp_sec, frag_b, frag_a = minhash_index_stages(
-                    spark, scaled, os.path.join(work, "mhidx")
-                )
-                timings["minhash_index_build"] = b
-                timings["minhash_index_probe"] = pr
-                timings["minhash_index_compact"] = cmp_sec
-                # fragmentation receipt rides the recall dict (gate values,
-                # not timings): max files per band partition before/after
-                recalls["minhash_frag_before"] = frag_b
-                recalls["minhash_frag_after"] = frag_a
-            elif name in ("bucket_write", "bucket_merge"):
-                if "bucket_write" in timings or "bucket_merge" in timings:
-                    continue
-                w, m = bucket_stages(spark, scaled, os.path.join(work, "bucket"))
-                timings["bucket_write"], timings["bucket_merge"] = w, m
-            elif name == "bucket_stream_ingest":
-                timings[name] = stream_ingest_stage(
-                    spark, scaled, os.path.join(work, "stream"), args.replicas
-                )
-            elif name == "bloom_index_probe":
-                b, pr, ap, rb = bloom_index_stages(
-                    spark, scaled, os.path.join(work, "bloomidx")
-                )
-                timings["bloom_index_build"] = b
-                timings["bloom_index_probe"] = pr
-                timings["bloom_index_append"] = ap
-                timings["bloom_rebuild"] = rb
-            elif name == "stream_archive_gate":
-                (
-                    g_total, g_nb, g_first, g_last, g_b_last,
-                    g_frag_mid, g_frag_cmp, g_frag_end, g_cmp_sec,
-                ) = archive_gate_stage(
-                    spark, scaled, os.path.join(work, "gate"), args.replicas
-                )
-                timings["stream_archive_gate"] = g_total
-                timings["stream_archive_compact"] = g_cmp_sec
-                # growth receipts ride the recall dict (gate values, not
-                # timings): per-batch trend + band fragmentation trajectory;
-                # segment A = no maintenance (raw growth), segment B =
-                # compact_every cadence (bounded tail)
-                recalls["gate_batches"] = g_nb
-                recalls["gate_per_batch_first"] = g_first
-                recalls["gate_per_batch_last"] = g_last
-                recalls["gate_per_batch_cadenced"] = g_b_last
-                recalls["gate_frag_mid"] = g_frag_mid
-                recalls["gate_frag_compacted"] = g_frag_cmp
-                recalls["gate_frag_end"] = g_frag_end
-            elif name == "bm25_index_probe":
-                b, pr, ap, pf, pc, cs, pfiles = bm25_index_stages(
-                    spark, scaled, os.path.join(work, "bm25idx")
-                )
-                timings["bm25_index_build"] = b
-                timings["bm25_index_probe"] = pr
-                timings["bm25_index_append"] = ap
-                timings["bm25_probe_fragmented"] = pf
-                timings["bm25_probe_compacted"] = pc
-                timings["bm25_index_compact"] = cs
-                recalls["bm25_posting_files"] = list(pfiles)
-            elif name == "semantic_index_probe":
-                b, pr, ap = semantic_index_stages(
-                    spark, scaled, os.path.join(work, "semidx")
-                )
-                timings["semantic_index_build"] = b
-                timings["semantic_index_probe"] = pr
-                timings["semantic_index_append"] = ap
-            elif name == "ivfpq_drift_retrain":
-                rt, rb, ra, rf, rc = ivfpq_drift_stage(
-                    spark, scaled, os.path.join(work, "drift"), args.replicas
-                )
-                timings["ivfpq_retrain"] = rt
-                # drift receipt rides the recall dict (gate values, not
-                # timings): degraded, restored, fresh-rebuild reference,
-                # capacity-lever (ksub=64) reading
-                recalls["ivfpq_drift_recall_before"] = rb
-                recalls["ivfpq_drift_recall_after"] = ra
-                recalls["ivfpq_drift_recall_fresh"] = rf
-                recalls["ivfpq_drift_recall_ksub64"] = rc
-            elif name == "cc_update":
-                u, fu = cc_update_stages(
-                    spark, scaled, os.path.join(work, "ccupd")
-                )
-                timings["cc_update"] = u
-                timings["cc_update_full"] = fu
-            elif name == "pagerank_update":
-                w, c, ratio = pagerank_update_stages(spark, scaled)
-                timings["pagerank_update_warm"] = w
-                timings["pagerank_update_cold"] = c
-                recalls["pagerank_update_l1_ratio"] = ratio
-            elif name == "stream_vector_gate":
-                (
-                    v_total, v_nb, v_first, v_last,
-                    v_frag_mid, v_frag_cmp, v_frag_end, v_cmp_sec,
-                ) = vector_gate_stage(
-                    spark, scaled, os.path.join(work, "vgate"), args.replicas
-                )
-                timings["stream_vector_gate"] = v_total
-                timings["stream_vector_compact"] = v_cmp_sec
-                recalls["vgate_batches"] = v_nb
-                recalls["vgate_per_batch_first"] = v_first
-                recalls["vgate_per_batch_last"] = v_last
-                recalls["vgate_frag_mid"] = v_frag_mid
-                recalls["vgate_frag_compacted"] = v_frag_cmp
-                recalls["vgate_frag_end"] = v_frag_end
-            elif name == "stream_sessionize":
-                s_sec, s_nb, s_pb, s_state = stream_sessionize_stage(
-                    spark, scaled, os.path.join(work, "sess"), args.replicas
-                )
-                timings["stream_sessionize"] = s_sec
-                # growth receipts ride the recall dict (gate values, not
-                # timings): batch count, per-batch cost, peak state rows
-                recalls["sessionize_batches"] = s_nb
-                recalls["sessionize_per_batch_sec"] = s_pb
-                recalls["sessionize_peak_state_rows"] = s_state
-            else:
-                timings[name] = timed_entry(spark, name, scaled)
-            _release(spark)
-        canary_post = _canary_median(spark, work)
-        write_post = _write_canary_median(spark, work)
+        for table, id_col in SCALED_TABLES:
+            bc.replicate_table(spark, base, scaled, table, id_col, args.replicas)
+        ctx = bc.Ctx(spark, scaled, probe=True, replicas=args.replicas)
+        for case in bc.resolve(keys, probe=True):
+            ctx.run_case(case)
+        post = {k: bc.canary_median(spark, work, k) for k in CANARY_KINDS}
     finally:
         shutil.rmtree(work, ignore_errors=True)
 
-    canary_med = round((canary_pre + canary_post) / 2, 3)
-    write_med = round((write_pre + write_post) / 2, 3)
     print(
         json.dumps(
             {
                 "metric": "probe_total_sec",
-                "value": round(sum(timings.values()), 3),
+                "value": round(sum(ctx.timings.values()), 3),
                 "unit": "sec",
-                "queries": timings,
-                "recall": recalls,
+                "queries": ctx.timings,
+                "recall": ctx.recall,
                 "replicas": args.replicas,
                 "base_sf": 0.1,
-                "canary": {
-                    "pre_sec": canary_pre,
-                    "post_sec": canary_post,
-                    "ref_sec": CANARY_REF_SEC,
-                    "host_factor": (
-                        round(canary_med / CANARY_REF_SEC, 3)
-                        if CANARY_REF_SEC
-                        else None
-                    ),
-                    "write_pre_sec": write_pre,
-                    "write_post_sec": write_post,
-                    "write_ref_sec": WRITE_CANARY_REF_SEC,
-                    "write_factor": (
-                        round(write_med / WRITE_CANARY_REF_SEC, 3)
-                        if WRITE_CANARY_REF_SEC
-                        else None
-                    ),
-                },
+                "canary": bc.canary_fields(pre, post),
             }
         )
     )

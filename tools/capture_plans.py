@@ -18,18 +18,11 @@ os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 def main():
     tag = sys.argv[1]
     names = sys.argv[2:]
-    import __spark_entry__ as entry_mod
-    from sat_bucket_spark.session import get_spark
+    import benchcases as bc
 
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="plan-capture",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    queries = entry_mod.queries()
+    spark = bc.session("plan-capture")
+    queries = bc.entry_mod.queries()
     if not names:
         names = list(queries)
     out_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", tag)

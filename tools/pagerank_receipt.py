@@ -27,18 +27,12 @@ os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     import __spark_entry__ as entry_mod
+    import benchcases as bc
     import sat_bucket_spark.operators.graph as graph_mod
     from sat_bucket_spark.operators.graph import pagerank, update_pagerank
-    from sat_bucket_spark.session import get_spark
 
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="pagerank-receipt",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus) if str(cpus).isdigit() else 32,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bc.session("pagerank-receipt")
     out_dir = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r17"
     )

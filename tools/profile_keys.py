@@ -3,7 +3,7 @@
 
 Usage: python tools/profile_keys.py KEY[,KEY...] [reps]
 For each registered query: run with the bench methodology (noop sink,
-_release_state between reps), then report median seconds, the number of
+benchcases.release_state between reps), then report median seconds, the number of
 Spark jobs/stages the action scheduled, and a node histogram of the FINAL
 adaptive physical plan (Exchange / Sort / SortAggregate / HashAggregate /
 *EvalPython / join strategies) — the host-independent receipts the
@@ -39,27 +39,13 @@ def plan_census(df) -> dict:
 def main():
     keys = sys.argv[1].split(",")
     reps = int(sys.argv[2]) if len(sys.argv) > 2 else 3
-    import __spark_entry__ as entry_mod
-    from sat_bucket_spark.session import get_spark
+    import benchcases as bc
 
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="profile-keys", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = bc.session("profile-keys")
     sc = spark.sparkContext
-    queries = entry_mod.queries()
-
-    def _release():
-        spark.catalog.clearCache()
-        for _id, rdd in sc._jsc.getPersistentRDDs().items():
-            rdd.unpersist()
-
-    queries["distinct_sort"](spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    queries = bc.entry_mod.queries()
+    bc.materialize(queries["distinct_sort"](spark, sf_dir))
     for key in keys:
         fn = queries[key]
         secs, jobs, stages = [], None, None
@@ -69,7 +55,7 @@ def main():
             sc.setJobGroup(group, key)
             t0 = time.perf_counter()
             df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
+            bc.materialize(df)
             secs.append(round(time.perf_counter() - t0, 3))
             tracker = sc.statusTracker()
             job_ids = tracker.getJobIdsForGroup(group)
@@ -81,7 +67,7 @@ def main():
             if census is None:
                 census = plan_census(df)
             sc.setJobGroup(f"prof-{key}-done", "")
-            _release()
+            bc.release_state(spark)
         print(
             json.dumps(
                 {

@@ -21,17 +21,11 @@ os.environ.setdefault("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def main():
-    import __spark_entry__ as entry_mod
-    from sat_bucket_spark.session import get_spark
+    import benchcases as bc
 
     sf_dir = os.environ["SPARK_GRAFT_SF_DIR"]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="runtime-plan-census", master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    qs = entry_mod.queries()
+    spark = bc.session("runtime-plan-census")
+    qs = bc.entry_mod.queries()
     keys = sys.argv[1].split(",") if len(sys.argv) > 1 else sorted(qs)
     out_path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -66,9 +60,7 @@ def main():
             out.write(json.dumps(rec) + "\n")
             out.flush()
             print(json.dumps(rec))
-            spark.catalog.clearCache()
-            for _id, rdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-                rdd.unpersist()
+            bc.release_state(spark)
     print("FLAGGED (smj/cartesian):", flagged)
 
 
