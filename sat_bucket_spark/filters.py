@@ -264,7 +264,7 @@ def extent_around_point(lon: float, lat: float, distance: float | None = None, s
 
 
 def point_in_polygon_expr(
-    polygon: list[tuple[float, float]], x: str | Column = "lon", y: str | Column = "lat"
+    polygon: list[tuple[float, float]], x: str = "lon", y: str = "lat"
 ) -> Column:
     """Even-odd ray-cast point-in-polygon predicate, pure Column expression.
 
@@ -285,7 +285,9 @@ def point_in_polygon_expr(
     Cost: O(n_vertices) comparisons per row, all codegen — for polygons
     with thousands of vertices, pre-simplify driver-side; the 100 TB plan
     is bbox partition-pruning first (see :func:`filter_by_polygon`), exact
-    test only on surviving rows.
+    test only on surviving rows. The predicate is built as ONE SQL string
+    parsed once (``D``-suffixed double literals), not ~20 Column calls per
+    vertex, each a py4j round trip.
 
     Antimeridian: vertices are taken at face value on the flat lon/lat
     plane. A region crossing ±180° must be split into its east and west
@@ -294,19 +296,29 @@ def point_in_polygon_expr(
     """
     if len(polygon) < 3:
         raise ValueError("polygon needs at least 3 vertices")
-    px = F.col(x) if isinstance(x, str) else x
-    py = F.col(y) if isinstance(y, str) else y
-    crossings = F.lit(0)
+    if not all(math.isfinite(float(v)) for vertex in polygon for v in vertex):
+        raise ValueError("polygon vertices must be finite")
+    return F.expr(_ray_cast_sql(polygon, f"`{x}`", f"`{y}`", "D"))
+
+
+def _ray_cast_sql(polygon: list[tuple[float, float]], x: str, y: str, suffix: str) -> str:
+    """Even-odd crossing test over the polygon's edges as one SQL predicate.
+
+    ``x``/``y`` are SQL column references; ``suffix`` types the vertex
+    literals: ``D`` makes them Spark doubles, the DuckDB oracle keeps them
+    plain.
+    """
     n = len(polygon)
+    terms = []
     for i in range(n):
-        x1, y1 = (float(v) for v in polygon[i])
-        x2, y2 = (float(v) for v in polygon[(i + 1) % n])
-        straddles = (F.lit(y1) > py) != (F.lit(y2) > py)
-        x_at_y = (F.lit(x2) - F.lit(x1)) * (py - F.lit(y1)) / (
-            F.lit(y2) - F.lit(y1)
-        ) + F.lit(x1)
-        crossings = crossings + F.when(straddles & (px < x_at_y), 1).otherwise(0)
-    return crossings % 2 == 1
+        x1, y1 = (f"{float(v)!r}{suffix}" for v in polygon[i])
+        x2, y2 = (f"{float(v)!r}{suffix}" for v in polygon[(i + 1) % n])
+        terms.append(
+            f"(CASE WHEN (({y1} > {y}) != ({y2} > {y})) AND "
+            f"({x} < ({x2} - {x1}) * ({y} - {y1}) / ({y2} - {y1}) + {x1}) "
+            f"THEN 1 ELSE 0 END)"
+        )
+    return "((" + " + ".join(terms) + ") % 2 = 1)"
 
 
 def polygon_bbox(polygon: list[tuple[float, float]]) -> list[float]:
@@ -340,17 +352,7 @@ def point_in_polygon_sql(
     polygon: list[tuple[float, float]], x: str = "lon", y: str = "lat"
 ) -> str:
     """ANSI-SQL replay of :func:`point_in_polygon_expr` (DuckDB oracle)."""
-    n = len(polygon)
-    terms = []
-    for i in range(n):
-        x1, y1 = (float(v) for v in polygon[i])
-        x2, y2 = (float(v) for v in polygon[(i + 1) % n])
-        terms.append(
-            f"(CASE WHEN (({y1!r} > {y}) != ({y2!r} > {y})) AND "
-            f"({x} < ({x2!r} - {x1!r}) * ({y} - {y1!r}) / ({y2!r} - {y1!r}) + {x1!r}) "
-            f"THEN 1 ELSE 0 END)"
-        )
-    return "((" + " + ".join(terms) + ") % 2 = 1)"
+    return _ray_cast_sql(polygon, x, y, "")
 
 
 def apply_spatial_filters(df: DataFrame, spatial_filters: dict | None, x="lon", y="lat") -> DataFrame:

@@ -41,8 +41,7 @@ __all__ = [
 ]
 
 
-def _bucket_partition_cols(spark: SparkSession, bucket_dir: str) -> list[str]:
-    df = read_bucket_dataframe(spark, bucket_dir)
+def _bucket_partition_cols(df: DataFrame, bucket_dir: str) -> list[str]:
     cols = []
     try:
         p = get_bucket_spatial_partitioning(bucket_dir)
@@ -77,9 +76,13 @@ def bucket_file_stats(
     metadata-derived — are selected besides it, so the underlying parquet
     column scan is empty.
     """
-    if partition_cols is None:
-        partition_cols = _bucket_partition_cols(spark, bucket_dir)
     df = read_bucket_dataframe(spark, bucket_dir)
+    if partition_cols is None:
+        partition_cols = _bucket_partition_cols(df, bucket_dir)
+    return _file_stats(df, partition_cols)
+
+
+def _file_stats(df: DataFrame, partition_cols: list[str]) -> DataFrame:
     per_file = (
         df.select(
             *[F.col(c) for c in partition_cols],
@@ -121,13 +124,16 @@ def compact_bucket(
     qualifying partition — O(#partitions) metadata, the same order as the
     file index Spark already holds.
     """
+    # one open (one listing) serves the partition columns, the stats and
+    # the rewrite's read-back
+    df = read_bucket_dataframe(spark, bucket_dir)
     if partition_cols is None:
-        partition_cols = _bucket_partition_cols(spark, bucket_dir)
+        partition_cols = _bucket_partition_cols(df, bucket_dir)
     if not partition_cols:
         raise ValueError("compact_bucket requires at least one partition column")
     target = parse_size(target_file_size)
     victims = (
-        bucket_file_stats(spark, bucket_dir, partition_cols)
+        _file_stats(df, partition_cols)
         .where(
             (F.col("n_files") >= F.lit(min_files))
             & (F.col("total_bytes") / F.col("n_files") < F.lit(float(target)))
@@ -147,10 +153,9 @@ def compact_bucket(
             for row in victims
         ),
     )
-    df = read_bucket_dataframe(spark, bucket_dir).where(pred)
     writer_kwargs.setdefault("max_file_size", target)
     write_partitioned_dataset(
-        df,
+        df.where(pred),
         bucket_dir,
         partitions=partition_cols,
         mode="overwrite_partitions",

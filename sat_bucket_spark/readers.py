@@ -5,22 +5,40 @@ plan. Where the reference hand-implements plan/prune stages (partition label
 enumeration -> directory listing -> per-file scan -> post-filter;
 readers.py:239-279), we emit::
 
-    spark.read.parquet(bucket_dir)
+    spark.read.schema(<footer schema>)        # no schema-inference job
+        .parquet(bucket_dir/<partition glob>) # lists only the touched dirs
         .where(<partition-label predicate>)   # Catalyst hive partition pruning
         .limit(n_rows)                        # scan-time row cap (reference parity)
         .where(<exact bbox / point-radius>)   # row-level post filter
         .where(<user filter expressions>)     # pushed to parquet scan
         .select(columns)
 
-and Catalyst performs partition pruning, predicate pushdown, and column pruning
+The label sets of the partition predicates also build one Hadoop brace glob
+under ``basePath``, so the open lists the partitions the query can touch,
+not the bucket; the schema is read from one footer on the driver, because
+Spark's own "single footer" inference is a distributed job. Building the
+plan therefore launches no job and costs what the query touches. Catalyst
+then performs partition pruning, predicate pushdown, and column pruning
 (the scan shows PushedFilters/ReadSchema; verified in tests/test_plans.py).
 """
 
 from __future__ import annotations
 
+import json
+import os
+import re
+
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (
+    ArrayType,
+    DataType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from sat_bucket_spark.extents import extend_extent, get_continent_extent, get_country_extent
 from sat_bucket_spark.filters import (
@@ -48,35 +66,49 @@ def read_bucket_dataframe(
     Hive-flavor buckets (``name=label`` dirs): Spark's partition-type inference
     would parse ``lon_bin=-5.0`` as a double and ``tile=007`` as an int,
     breaking the reference's string-label contract (labels are strings;
-    reference partitioning.py:899-910). We read the footer schema once, force
-    every partition level to StringType, and re-read with an explicit schema
-    (partition columns honor user-provided schemas).
+    reference partitioning.py:899-910). The open passes an explicit schema —
+    the data columns plus every partition level as StringType (partition
+    columns honor user-provided schemas).
 
     Directory-flavor buckets (bare label dirs — the reference *default* for
     XY/Tile partitionings, reference partitioning.py:206-207, 253-257) carry no
     hive metadata on disk, so Spark partition discovery cannot see the labels:
     pass ``partitioning`` (flavor != "hive") and the read globs depth-n data
     files and reconstructs the label columns from ``input_file_name()``,
-    honoring ``partitioning.order``. ``subdirs`` optionally restricts such a
-    read to specific partition directories — driver-side pruning, mirroring
-    the reference's own directory enumeration (readers.py:269-279).
+    honoring ``partitioning.order``.
+
+    ``subdirs`` restricts the open to partition directories relative to the
+    bucket root, Hadoop globs allowed (``lon_bin={-5.0,5.0}/lat_bin=15.0``) —
+    driver-side pruning, mirroring the reference's own directory enumeration
+    (readers.py:269-279). A list that matches nothing (``[]`` included)
+    returns an empty frame with the bucket's full schema.
 
     The default glob skips the ``bucket_info.yaml`` metadata header sitting at
     the table root (reference: io.py:58-73).
     """
     glob = path_glob or "*.parquet"
-    if partitioning is not None and getattr(partitioning, "flavor", "hive") != "hive":
-        return _read_directory_bucket(
-            spark, bucket_dir, partitioning, glob, subdirs, paths, merge_schema
+    hive = partitioning is None or getattr(partitioning, "flavor", "hive") == "hive"
+    levels = list(levels or []) if hive else []
+    sample = paths[0] if paths else _first_data_file(bucket_dir, glob)
+    if subdirs is not None and not subdirs:
+        return _empty_bucket_frame(
+            spark, bucket_dir, levels, glob, partitioning, sample, merge_schema
         )
     if paths is not None:
         # Explicit file list (filename-level filtering): basePath keeps the
         # hive partition columns discoverable from the file paths.
-        reader = spark.read.option("basePath", bucket_dir)
         src = paths
+        reader = spark.read.option("basePath", bucket_dir) if hive else spark.read
     else:
+        if subdirs is not None:
+            src = [os.path.join(bucket_dir, d) for d in subdirs]
+        elif hive:
+            src = [bucket_dir]
+        else:
+            src = [os.path.join(bucket_dir, *(["*"] * len(partitioning.order)))]
         reader = spark.read.option("pathGlobFilter", glob)
-        src = [bucket_dir]
+        if hive and subdirs is not None:
+            reader = reader.option("basePath", bucket_dir)
     if merge_schema:
         # Schema drift (columns added to the archive over the years): a
         # single-footer schema would pin the archive to ONE file and silently
@@ -84,26 +116,93 @@ def read_bucket_dataframe(
         # footers (a footer pass over the bucket — the documented price of
         # drift-aware reads).
         reader = reader.option("mergeSchema", "true")
-    if not levels:
-        return reader.parquet(*src)
-    # String-typing the partition levels needs the schema up front. Reading
-    # the bucket once to inspect df.schema and AGAIN with the corrected
-    # schema lists every partition directory twice — the dominant driver
-    # cost of opening a many-thousand-directory bucket (and two full
-    # object-store LIST passes at scale). So unless the footers must be
-    # merged, read ONE data file's footer (Spark's own inference also reads
-    # a single footer when mergeSchema is off) and open the bucket exactly
-    # once with the explicit schema. Non-local URIs have no cheap first file
-    # and fall back to inferring the schema from a first open.
-    sample = None if merge_schema else (paths[0] if paths else _first_data_file(bucket_dir, glob))
-    base = spark.read.parquet(sample) if sample is not None else reader.parquet(*src)
+    # The schema comes from ONE footer, read on the driver. Spark's own
+    # "single footer" inference is a distributed job (one per open), and
+    # with string-typed levels it also lists the bucket twice (infer, then
+    # re-open with the corrected schema). Spark-written files store their
+    # Spark schema under a footer key, which is exactly what Spark's
+    # inference returns, so the open is one listing and no job. Files
+    # without the key (pyarrow-written archives), non-local URIs (no cheap
+    # first file) and merged-footer reads keep Spark's inference.
+    schema = None
+    if not merge_schema and sample is not None:
+        schema = _footer_schema(sample)
+        if schema is None and levels:
+            schema = spark.read.parquet(sample).schema
+    try:
+        if schema is None and levels:
+            schema = reader.parquet(*src).schema
+        if schema is not None:
+            reader = reader.schema(_with_string_levels(schema, levels))
+        df = reader.parquet(*src)
+    except AnalysisException as exc:
+        # a pruning glob that matches no partition directory
+        if subdirs is None or exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        return _empty_bucket_frame(
+            spark, bucket_dir, levels, glob, partitioning, sample, merge_schema
+        )
+    if not hive:
+        df = _with_directory_labels(df, partitioning.order)
+    return df
+
+
+def _empty_bucket_frame(spark, bucket_dir, levels, glob, partitioning, sample, merge_schema):
+    """No partition matches: the bucket's full schema over zero rows.
+
+    Opens the one sample file (its path carries the partition columns), not
+    the bucket — the root only when there is no local sample; the
+    always-false filter plans as an empty local relation, so the frame lists
+    and scans nothing when run.
+    """
+    return read_bucket_dataframe(
+        spark, bucket_dir, levels=levels, path_glob=glob, partitioning=partitioning,
+        paths=[sample] if sample is not None else None, merge_schema=merge_schema,
+    ).where(F.lit(False))
+
+
+def _with_string_levels(schema: StructType, levels: list[str]) -> StructType:
     fields = [
         StructField(f.name, StringType(), True) if f.name in levels else f
-        for f in base.schema.fields
+        for f in schema.fields
     ]
     present = {f.name for f in fields}
     fields += [StructField(lvl, StringType(), True) for lvl in levels if lvl not in present]
-    return reader.schema(StructType(fields)).parquet(*src)
+    return StructType(fields)
+
+
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """The schema Spark infers for a Spark-written parquet file, without a job.
+
+    Spark's writer stores the row schema as JSON under a footer key, and its
+    inference returns that value when the key is present; file-source reads
+    then relax every field to nullable. None when the file has no such key.
+    """
+    import pyarrow.parquet as pq
+
+    raw = (pq.read_metadata(path).metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None:
+        return None
+    try:
+        return _as_nullable(StructType.fromJson(json.loads(raw)))
+    except (ValueError, KeyError, TypeError):
+        return None  # a key this pyspark cannot parse: Spark infers it
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """Spark's ``DataType.asNullable``: every field, element and value nullable."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
 
 
 def _first_data_file(bucket_dir: str, glob: str = "*.parquet", max_depth: int = 8) -> str | None:
@@ -113,7 +212,6 @@ def _first_data_file(bucket_dir: str, glob: str = "*.parquet", max_depth: int = 
     bucket; returns None for non-local URIs (callers fall back to Spark's
     own inference+reread)."""
     import fnmatch
-    import os
 
     root = bucket_dir
     if root.startswith("file://"):
@@ -139,50 +237,92 @@ def _first_data_file(bucket_dir: str, glob: str = "*.parquet", max_depth: int = 
     return None
 
 
-def _read_directory_bucket(
-    spark: SparkSession,
-    bucket_dir: str,
-    partitioning,
-    glob: str,
-    subdirs: list[str] | None,
-    paths: list[str] | None = None,
-    merge_schema: bool = False,
-) -> DataFrame:
-    """Directory-flavor read: depth-n glob + label reconstruction from paths.
+def _with_directory_labels(df: DataFrame, order: list[str]) -> DataFrame:
+    """Directory-flavor labels, reconstructed from each row's file path.
 
     Labels become plain string columns (not hive partition columns), so
     Catalyst cannot directory-prune them; extent pruning happens driver-side
     via ``subdirs`` (the reference's strategy: enumerate intersecting
     partition dirs, readers.py:269-279) — the same file-skipping outcome.
     """
-    import os
-
-    order = list(partitioning.order)
     n = len(order)
-    if paths is None:
-        if subdirs is not None:
-            paths = [os.path.join(bucket_dir, d) for d in subdirs]
-            paths = [p for p in paths if os.path.isdir(p)]
-            if not paths:
-                # No partition dir intersects: empty frame with the full schema.
-                full = _read_directory_bucket(
-                    spark, bucket_dir, partitioning, glob, None,
-                    merge_schema=merge_schema,
-                )
-                return full.where(F.lit(False))
-        else:
-            paths = [os.path.join(bucket_dir, *(["*"] * n))]
-    reader = spark.read.option("pathGlobFilter", glob)
-    if merge_schema:
-        # drift-aware read: union all footers, same contract as the hive
-        # branch (previously this flag was silently ignored here)
-        reader = reader.option("mergeSchema", "true")
-    df = reader.parquet(*paths)
     # .../<label_order0>/<label_order1>/part-*.parquet
     segs = F.split(F.input_file_name(), "/")
     for i, level in enumerate(order):
         df = df.withColumn(level, F.element_at(segs, F.lit(i - n - 1)))
     return df
+
+
+# Time-prefix alternatives beyond this open every time_part directory of the
+# selected cells instead (an open-ended day window spans ~47 000 prefixes; a
+# brace glob that long costs more to match than the listing it saves).
+_MAX_TIME_ALTERNATIVES = 366
+
+
+def _has_time_level(bucket_dir: str, path_glob: str | None) -> bool:
+    """Whether data files sit under ``time_part=`` directories: a merged
+    archive, not one flattened to the reference's file naming."""
+    sample = _first_data_file(bucket_dir, path_glob or "*.parquet")
+    root = bucket_dir[len("file://"):] if bucket_dir.startswith("file://") else bucket_dir
+    return sample is not None and "time_part=" in os.path.relpath(sample, root)
+
+
+def _glob_alternatives(labels) -> str:
+    escaped = [re.sub(r"([\\{}\[\]*?,])", r"\\\1", str(lab)) for lab in labels]
+    return escaped[0] if len(escaped) == 1 else "{" + ",".join(escaped) + "}"
+
+
+def _partition_glob(partitioning, parts, time_prefixes) -> list[str] | None:
+    """``subdirs`` for the partition directories a query can touch.
+
+    ``parts`` is None (every cell), a dict of level -> kept labels (an
+    extent: every combination is kept) or a list of per-cell label tuples in
+    ``partitioning.order`` (a polygon's cells). ``time_prefixes`` lists the
+    kept ``time_part`` labels, None for all. Returns ``[]`` when nothing can
+    match, None when no level narrows (open the root), else one brace glob:
+    ``lon_bin={-5.0,5.0}/lat_bin=15.0/time_part={2021_7_1,2021_7_2}``. Cells
+    that are not a rectangle nest per first-level label:
+    ``{lon_bin=-5.0/lat_bin={5.0,15.0},lon_bin=5.0/lat_bin=15.0}``.
+    """
+    hive = getattr(partitioning, "flavor", "hive") == "hive"
+    order = list(partitioning.order)
+    n_labels = {
+        lvl: len(labels)
+        for lvl, labels in partitioning.get_partitions_by_extent(list(partitioning.extent)).items()
+    }
+
+    def seg(level, labels=()):
+        labels = sorted(set(labels))
+        alt = _glob_alternatives(labels) if 0 < len(labels) < n_labels[level] else "*"
+        return f"{level}={alt}" if hive else alt
+
+    everything = [seg(lvl) for lvl in order]
+    if isinstance(parts, list):
+        groups: dict = {}
+        for cell in parts:
+            groups.setdefault(cell[0], set()).add(cell[1:])
+        if len(set(map(frozenset, groups.values()))) <= 1:
+            # empty, one level, or a rectangle of cells: one label set per level
+            rest = next(iter(groups.values()), set())
+            parts = {order[0]: list(groups)}
+            parts.update({lvl: [t[i] for t in rest] for i, lvl in enumerate(order[1:])})
+    if isinstance(parts, list):
+        segs = ["{" + ",".join(
+            f"{seg(order[0], [a])}/{seg(order[1], [t[0] for t in groups[a]])}"
+            for a in sorted(groups)
+        ) + "}"]
+    elif parts is None:
+        segs = list(everything)
+    elif any(not parts[lvl] for lvl in order):
+        return []
+    else:
+        segs = [seg(lvl, parts[lvl]) for lvl in order]
+    if time_prefixes is not None:
+        if not time_prefixes:
+            return []
+        if len(time_prefixes) <= _MAX_TIME_ALTERNATIVES:
+            segs.append(f"time_part={_glob_alternatives(sorted(time_prefixes))}")
+    return None if segs == everything else ["/".join(segs)]
 
 
 def read(
@@ -284,21 +424,44 @@ def read(
         else:
             query_extent = extent_around_point(lon0, lat0, size=size)
 
-    # Directory-flavor buckets prune driver-side: only intersecting partition
-    # dirs are opened (labels are not hive partition columns there).
-    subdirs = None
-    if (
-        query_extent is not None
-        and use_pruning
-        and getattr(partitioning, "flavor", "hive") != "hive"
-    ):
-        if query_polygon is not None:
-            # cell-exact: only dirs whose rectangle meets the polygon
-            subdirs = partitioning.directories_by_polygon(query_polygon)
-        else:
-            subdirs = partitioning.directories_by_extent(query_extent)
+    # --- partition labels the query can touch (driver-side planning) --------
+    # One label set per level feeds both the open (a brace glob: only these
+    # directories are listed) and the partition predicates below.
+    hive = getattr(partitioning, "flavor", "hive") == "hive"
+    time_prefixes = None
+    if start_time is not None or end_time is not None:
+        from sat_bucket_spark.checks import check_start_end_time
 
+        start_time, end_time = check_start_end_time(
+            start_time if start_time is not None else "1970-01-01",
+            end_time if end_time is not None else "2100-01-01",
+        )
+        temporal = info.get("temporal_partitioning")
+        if temporal:
+            from sat_bucket_spark.functions.temporal import (
+                get_partitioning_boundaries,
+                get_time_prefix,
+            )
+
+            time_prefixes = sorted(
+                {
+                    get_time_prefix(b, temporal)
+                    for b in get_partitioning_boundaries(start_time, end_time, temporal)
+                    if b < end_time  # a boundary at/after the exclusive end opens no needed period
+                }
+            )
+    parts = None
+    if query_extent is not None and use_pruning:
+        if query_polygon is not None:
+            # cell-exact: only cells whose rectangle meets the polygon
+            labels = partitioning._labels_for_cells(
+                *partitioning._cells_by_polygon(query_polygon)
+            )
+            parts = list(zip(*(labels[lvl].tolist() for lvl in partitioning.order)))
+        else:
+            parts = partitioning.get_partitions_by_extent(query_extent)
     paths = None
+    subdirs = None
     if file_extension is not None or glob_pattern is not None or regex_pattern is not None:
         from sat_bucket_spark.io import _filepaths_by_partition
 
@@ -313,7 +476,9 @@ def read(
         paths = sorted(f for files in by_partition.values() for f in files)
         if not paths:
             raise ValueError("No files available matching your request.")
-        subdirs = None  # the explicit file list already encodes the pruning
+    elif use_pruning:
+        timed = time_prefixes is not None and _has_time_level(bucket_dir, path_glob)
+        subdirs = _partition_glob(partitioning, parts, time_prefixes if timed else None)
 
     df = read_bucket_dataframe(
         spark,
@@ -327,31 +492,14 @@ def read(
     )
 
     # --- partition-level pruning (before the n_rows scan cap) --------------
-    if start_time is not None or end_time is not None:
-        from sat_bucket_spark.checks import check_start_end_time
-        from sat_bucket_spark.functions.temporal import get_time_prefix
+    if time_prefixes is not None and "time_part" in df.columns:
+        # partition-column predicate -> Catalyst prunes time_part dirs
+        df = df.where(F.col("time_part").isin(time_prefixes))
 
-        start_time, end_time = check_start_end_time(
-            start_time if start_time is not None else "1970-01-01",
-            end_time if end_time is not None else "2100-01-01",
-        )
-        temporal = info.get("temporal_partitioning")
-        if temporal and "time_part" in df.columns:
-            from sat_bucket_spark.functions.temporal import get_partitioning_boundaries
-
-            prefixes = sorted(
-                {
-                    get_time_prefix(b, temporal)
-                    for b in get_partitioning_boundaries(start_time, end_time, temporal)
-                    if b < end_time  # a boundary at/after the exclusive end opens no needed period
-                }
-            )
-            # partition-column predicate -> Catalyst prunes time_part dirs
-            df = df.where(F.col("time_part").isin(prefixes))
-
-    # hive pruning via Catalyst; skipped when subdirs already restricted a
-    # directory-flavor read.
-    if query_extent is not None and use_pruning and subdirs is None:
+    # hive pruning via Catalyst; directory-flavor labels are not partition
+    # columns, so there the glob alone prunes (an explicit file list was
+    # already pruned by extent and keeps the label filter).
+    if parts is not None and (hive or paths is not None):
         if query_polygon is not None:
             # cell-exact polygon pruning (per-column y lists, not the bbox
             # cross product) — still a pure partition-column predicate

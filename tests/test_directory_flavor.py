@@ -81,6 +81,24 @@ class TestDirectoryRead:
         assert df.count() == 0
         assert "xbin" in df.columns
 
+    @pytest.mark.parametrize(
+        "query",
+        [
+            {"extent": [5, 8, 0, 20]},
+            {"polygon": [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)]},
+            {"extent": [-180, 180, -90, 90]},
+            {"polygon": [(500.0, 500.0), (501.0, 500.0), (500.5, 501.0)]},
+        ],
+        ids=["extent", "polygon", "whole_world", "empty_cell_set"],
+    )
+    def test_pruned_equals_unpruned(self, spark, dir_bucket, query):
+        """The directory flavor opens the same glob as the hive flavor,
+        without ``level=``: pruned rows and schema equal the unpruned read."""
+        pruned = read(spark, dir_bucket, **query)
+        unpruned = read(spark, dir_bucket, use_pruning=False, **query)
+        assert pruned.schema == unpruned.schema
+        assert sorted(map(tuple, pruned.collect())) == sorted(map(tuple, unpruned.collect()))
+
     def test_append_merges_into_label_dirs(self, spark, orbit_df, tmp_path_factory):
         d = str(tmp_path_factory.mktemp("dirappend"))
         p = XYPartitioning(size=(10, 10), extent=[-180, 180, -90, 90])

@@ -200,6 +200,145 @@ class TestPolygonRead:
             read(spark, bucket_dir, polygon=self.TRI, extent=[0, 1, 0, 1])
 
 
+def _sorted_rows(df):
+    return sorted(tuple(r) for r in df.collect())
+
+
+class TestQuerySizedOpen:
+    """``read`` opens only the partition directories a query can touch (one
+    brace glob) with the schema read from one footer: the pruned read must
+    equal the unpruned one, schema included, and building it runs no job."""
+
+    TRI = [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)]
+    OFF_WORLD = [(500.0, 500.0), (501.0, 500.0), (500.5, 501.0)]  # no cell
+    QUERIES = {
+        "extent": {"extent": [5, 8, 0, 20]},
+        "whole_world": {"extent": [-180, 180, -90, 90]},
+        "no_dir_on_disk": {"extent": [100, 110, 50, 60]},
+        "polygon": {"polygon": TRI},
+        "empty_cell_set": {"polygon": OFF_WORLD},
+        "point_distance": {"point": (5.0, 10.0), "distance": 500_000.0},
+        "point_size": {"point": (5.0, 10.0), "size": 8},
+    }
+
+    @pytest.mark.parametrize("name", sorted(QUERIES))
+    def test_pruned_equals_unpruned(self, spark, bucket_dir, name):
+        query = self.QUERIES[name]
+        pruned = read(spark, bucket_dir, **query)
+        unpruned = read(spark, bucket_dir, use_pruning=False, **query)
+        assert pruned.schema == unpruned.schema
+        rows = _sorted_rows(pruned)
+        assert rows == _sorted_rows(unpruned)
+        assert bool(rows) == (name not in ("no_dir_on_disk", "empty_cell_set"))
+
+    def test_one_level_tile_partitioning(self, spark, orbit_df, tmp_path):
+        from sat_bucket_spark import TilePartitioning
+
+        d = str(tmp_path / "tiles")
+        p = TilePartitioning(size=10, extent=[-180, 180, -90, 90], n_levels=1, flavor="hive")
+        write_bucket(orbit_df, d, p, x="lon", y="lat")
+        for query in ({"extent": [5, 8, 0, 20]}, {"polygon": self.TRI}):
+            pruned = read(spark, d, **query)
+            assert _sorted_rows(pruned) == _sorted_rows(read(spark, d, use_pruning=False, **query))
+            assert len(pruned.inputFiles()) < len(read(spark, d).inputFiles())
+
+    def test_plan_construction_launches_no_job(self, spark, bucket_dir):
+        sc = spark.sparkContext
+        sc.setJobGroup("read-open-gate", "building read()'s plan must launch no job")
+        try:
+            for query in ({}, self.QUERIES["extent"], self.QUERIES["polygon"],
+                          self.QUERIES["point_distance"], self.QUERIES["no_dir_on_disk"]):
+                read(spark, bucket_dir, **query)
+        finally:
+            sc.setJobGroup("read-open-gate-done", "")
+        assert len(sc.statusTracker().getJobIdsForGroup("read-open-gate")) == 0
+
+    def test_footer_schema_equals_spark_inference(self, spark, tmp_path):
+        import glob
+
+        from sat_bucket_spark.readers import _footer_schema
+
+        out = str(tmp_path / "types")
+        spark.sql(
+            "SELECT TIMESTAMP'2021-07-05 01:02:03' AS ts,"
+            " TIMESTAMP_NTZ'2021-07-05 01:02:03' AS ntz,"
+            " CAST(1.5 AS DECIMAL(38, 9)) AS dec,"
+            " array(named_struct('a', 1, 'b', 'x')) AS arr,"
+            " map('k', 2.0D) AS m,"
+            " CAST('raw' AS BINARY) AS bin,"
+            " 7L AS id"  # a non-nullable literal: file reads relax it
+        ).coalesce(1).write.parquet(out)
+        (f,) = glob.glob(f"{out}/*.parquet")
+        assert _footer_schema(f) == spark.read.parquet(f).schema
+
+    def test_pyarrow_file_opens_through_inference(self, spark, tmp_path):
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        from sat_bucket_spark.readers import _footer_schema, read_bucket_dataframe
+
+        leaf = tmp_path / "bucket" / "lon_bin=5.0" / "lat_bin=5.0"
+        leaf.mkdir(parents=True)
+        pq.write_table(pa.table({"lon": [5.5], "lat": [4.5], "v": [1.0]}), leaf / "0.parquet")
+        assert _footer_schema(str(leaf / "0.parquet")) is None
+        df = read_bucket_dataframe(
+            spark, str(tmp_path / "bucket"), levels=["lon_bin", "lat_bin"],
+            subdirs=["lon_bin={5.0,15.0}/lat_bin=5.0"],
+        )
+        assert df.dtypes == [
+            ("lon", "double"), ("lat", "double"), ("v", "double"),
+            ("lon_bin", "string"), ("lat_bin", "string"),
+        ]
+        assert [tuple(r) for r in df.collect()] == [(5.5, 4.5, 1.0, "5.0", "5.0")]
+
+
+class TestPartitionGlob:
+    """The open's glob, built from the same label sets as the predicates."""
+
+    def _cells(self, p, polygon):
+        labels = p._labels_for_cells(*p._cells_by_polygon(polygon))
+        return list(zip(*(labels[lvl].tolist() for lvl in p.order)))
+
+    def test_forms(self):
+        from sat_bucket_spark.readers import _partition_glob
+
+        p = LonLatPartitioning(size=(10, 10))
+        extent = p.get_partitions_by_extent([5, 8, 1, 19])
+        assert _partition_glob(p, extent, None) == ["lon_bin=5.0/lat_bin={15.0,5.0}"]
+        assert _partition_glob(p, extent, ["2021_7"]) == [
+            "lon_bin=5.0/lat_bin={15.0,5.0}/time_part=2021_7"
+        ]
+        # a level that keeps every label does not narrow; nothing narrows -> root
+        world = p.get_partitions_by_extent([-180, 180, -90, 90])
+        assert _partition_glob(p, world, None) is None
+        assert _partition_glob(p, None, ["2021", "2023"]) == [
+            "lon_bin=*/lat_bin=*/time_part={2021,2023}"
+        ]
+        # an open-ended day window is too many alternatives to narrow the glob
+        assert _partition_glob(p, None, [str(i) for i in range(1000)]) is None
+        # nothing can match
+        assert _partition_glob(p, [], None) == []
+        assert _partition_glob(p, None, []) == []
+        # a polygon's cells: cell-exact nesting per first-level label
+        assert _partition_glob(p, self._cells(p, [(1, 1), (29, 1), (1, 19)]), None) == [
+            "{lon_bin=15.0/lat_bin={15.0,5.0},lon_bin=25.0/lat_bin=5.0,"
+            "lon_bin=5.0/lat_bin={15.0,5.0}}"
+        ]
+
+    def test_order_and_directory_flavor(self):
+        from sat_bucket_spark import XYPartitioning
+        from sat_bucket_spark.readers import _partition_glob
+
+        swapped = LonLatPartitioning(size=(10, 10), order=["lat_bin", "lon_bin"])
+        assert _partition_glob(
+            swapped, swapped.get_partitions_by_extent([5, 8, 1, 19]), None
+        ) == ["lat_bin={15.0,5.0}/lon_bin=5.0"]
+        bare = XYPartitioning(size=(10, 10), extent=[-180, 180, -90, 90])
+        assert _partition_glob(bare, self._cells(bare, [(1, 1), (29, 1), (1, 19)]), None) == [
+            "{15.0/{15.0,5.0},25.0/5.0,5.0/{15.0,5.0}}"
+        ]
+
+
 class TestJsonlShardExport:
     def test_round_trip_deterministic_shards(self, spark, tmp_path):
         from sat_bucket_spark.operators.sampling import assign_shards

@@ -212,6 +212,41 @@ def _footers(spark, bucket_dir):
     return out
 
 
+@pytest.fixture(scope="module")
+def staged_orbit(spark, orbit_df, tmp_path_factory):
+    src = str(tmp_path_factory.mktemp("stage"))
+    write_bucket(orbit_df, src, LonLatPartitioning(size=(10, 10)), x="lon", y="lat")
+    return src
+
+
+class TestTemporalQueryOpen:
+    """The time prefixes narrow the open's glob (``time_part={...}`` under
+    the spatial levels): at every granularity the pruned read equals the
+    unpruned one (``use_pruning=False`` opens the root)."""
+
+    QUERIES = [
+        # time only: both granules of 2021, July 5 to August 5
+        {"start_time": "2021-07-05", "end_time": "2021-08-06"},
+        # open-ended: too many day prefixes for the glob, the predicate prunes
+        {"start_time": "2021-08-01"},
+        {"extent": [-35, 10, -25, 25], "start_time": "2021-07-01", "end_time": "2021-08-01"},
+        {"polygon": [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)],
+         "start_time": "2023-01-01", "end_time": "2024-01-01"},
+        {"point": (10.0, 0.0), "size": 10, "start_time": "2021-01-01", "end_time": "2024-01-01"},
+    ]
+
+    @pytest.mark.parametrize("granularity", ["year", "month", "quarter", "day"])
+    def test_pruned_equals_unpruned(self, spark, staged_orbit, tmp_path, granularity):
+        dst = str(tmp_path / granularity)
+        merge_granule_buckets(spark, staged_orbit, dst, temporal_partitioning=granularity)
+        for query in self.QUERIES:
+            pruned = read(spark, dst, **query)
+            unpruned = read(spark, dst, use_pruning=False, **query)
+            assert pruned.schema == unpruned.schema, query
+            rows = sorted(map(tuple, pruned.collect()))
+            assert rows and rows == sorted(map(tuple, unpruned.collect())), query
+
+
 class TestMergeWriterOptions:
     """update=True is the same partitioned write as update=False, so it
     honours the same writer options."""
