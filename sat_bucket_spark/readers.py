@@ -31,14 +31,7 @@ import re
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    DataType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import StringType, StructField, StructType
 
 from sat_bucket_spark.extents import extend_extent, get_continent_extent, get_country_extent
 from sat_bucket_spark.filters import (
@@ -151,13 +144,14 @@ def _empty_bucket_frame(spark, bucket_dir, levels, glob, partitioning, sample, m
     """No partition matches: the bucket's full schema over zero rows.
 
     Opens the one sample file (its path carries the partition columns), not
-    the bucket — the root only when there is no local sample; the
-    always-false filter plans as an empty local relation, so the frame lists
-    and scans nothing when run.
+    the bucket — the root when there is no local sample, or when the schema
+    is the union of every footer (``merge_schema``); the always-false filter
+    plans as an empty local relation, so the frame scans nothing when run.
     """
+    one_file = sample is not None and not merge_schema
     return read_bucket_dataframe(
         spark, bucket_dir, levels=levels, path_glob=glob, partitioning=partitioning,
-        paths=[sample] if sample is not None else None, merge_schema=merge_schema,
+        paths=[sample] if one_file else None, merge_schema=merge_schema,
     ).where(F.lit(False))
 
 
@@ -178,8 +172,9 @@ def _footer_schema(path: str) -> StructType | None:
     """The schema Spark infers for a Spark-written parquet file, without a job.
 
     Spark's writer stores the row schema as JSON under a footer key, and its
-    inference returns that value when the key is present; file-source reads
-    then relax every field to nullable. None when the file has no such key.
+    inference returns that value when the key is present (file-source reads
+    relax it to nullable, as they do any user-specified schema). None when
+    the file has no such key.
     """
     import pyarrow.parquet as pq
 
@@ -187,22 +182,9 @@ def _footer_schema(path: str) -> StructType | None:
     if raw is None:
         return None
     try:
-        return _as_nullable(StructType.fromJson(json.loads(raw)))
+        return StructType.fromJson(json.loads(raw))
     except (ValueError, KeyError, TypeError):
         return None  # a key this pyspark cannot parse: Spark infers it
-
-
-def _as_nullable(dt: DataType) -> DataType:
-    """Spark's ``DataType.asNullable``: every field, element and value nullable."""
-    if isinstance(dt, StructType):
-        return StructType(
-            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt.fields]
-        )
-    if isinstance(dt, ArrayType):
-        return ArrayType(_as_nullable(dt.elementType), True)
-    if isinstance(dt, MapType):
-        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
-    return dt
 
 
 def _first_data_file(bucket_dir: str, glob: str = "*.parquet", max_depth: int = 8) -> str | None:
@@ -251,20 +233,6 @@ def _with_directory_labels(df: DataFrame, order: list[str]) -> DataFrame:
     for i, level in enumerate(order):
         df = df.withColumn(level, F.element_at(segs, F.lit(i - n - 1)))
     return df
-
-
-# Time-prefix alternatives beyond this open every time_part directory of the
-# selected cells instead (an open-ended day window spans ~47 000 prefixes; a
-# brace glob that long costs more to match than the listing it saves).
-_MAX_TIME_ALTERNATIVES = 366
-
-
-def _has_time_level(bucket_dir: str, path_glob: str | None) -> bool:
-    """Whether data files sit under ``time_part=`` directories: a merged
-    archive, not one flattened to the reference's file naming."""
-    sample = _first_data_file(bucket_dir, path_glob or "*.parquet")
-    root = bucket_dir[len("file://"):] if bucket_dir.startswith("file://") else bucket_dir
-    return sample is not None and "time_part=" in os.path.relpath(sample, root)
 
 
 def _glob_alternatives(labels) -> str:
@@ -320,8 +288,7 @@ def _partition_glob(partitioning, parts, time_prefixes) -> list[str] | None:
     if time_prefixes is not None:
         if not time_prefixes:
             return []
-        if len(time_prefixes) <= _MAX_TIME_ALTERNATIVES:
-            segs.append(f"time_part={_glob_alternatives(sorted(time_prefixes))}")
+        segs.append(f"time_part={_glob_alternatives(sorted(time_prefixes))}")
     return None if segs == everything else ["/".join(segs)]
 
 
@@ -476,9 +443,19 @@ def read(
         paths = sorted(f for files in by_partition.values() for f in files)
         if not paths:
             raise ValueError("No files available matching your request.")
-    elif use_pruning:
-        timed = time_prefixes is not None and _has_time_level(bucket_dir, path_glob)
-        subdirs = _partition_glob(partitioning, parts, time_prefixes if timed else None)
+    elif use_pruning and not (merge_schema and hive):
+        # (a merged hive schema unions every footer of the bucket: that read
+        # opens the root and leaves the pruning to Catalyst)
+        glob_times = None
+        if time_prefixes is not None:
+            # time_part directories hold a merged archive's files, not those
+            # of one flattened to the reference's {prefix}_{i}.parquet naming
+            sample = _first_data_file(bucket_dir, path_glob or "*.parquet")
+            if sample is not None and os.path.basename(os.path.dirname(sample)).startswith(
+                "time_part="
+            ):
+                glob_times = time_prefixes
+        subdirs = _partition_glob(partitioning, parts, glob_times)
 
     df = read_bucket_dataframe(
         spark,
@@ -493,8 +470,13 @@ def read(
 
     # --- partition-level pruning (before the n_rows scan cap) --------------
     if time_prefixes is not None and "time_part" in df.columns:
-        # partition-column predicate -> Catalyst prunes time_part dirs
-        df = df.where(F.col("time_part").isin(time_prefixes))
+        # partition-column predicate -> Catalyst prunes time_part dirs. One
+        # parsed IN list: Column.isin makes ~4 py4j calls per literal, and an
+        # open-ended day window has ~29 000 prefixes.
+        quoted = ", ".join(
+            "'" + p.replace("\\", "\\\\").replace("'", "\\'") + "'" for p in time_prefixes
+        )
+        df = df.where(F.expr(f"time_part IN ({quoted})"))
 
     # hive pruning via Catalyst; directory-flavor labels are not partition
     # columns, so there the glob alone prunes (an explicit file list was

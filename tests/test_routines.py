@@ -227,7 +227,7 @@ class TestTemporalQueryOpen:
     QUERIES = [
         # time only: both granules of 2021, July 5 to August 5
         {"start_time": "2021-07-05", "end_time": "2021-08-06"},
-        # open-ended: too many day prefixes for the glob, the predicate prunes
+        # open-ended: ~29 000 day prefixes, in the glob and in the predicate
         {"start_time": "2021-08-01"},
         {"extent": [-35, 10, -25, 25], "start_time": "2021-07-01", "end_time": "2021-08-01"},
         {"polygon": [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)],
@@ -244,6 +244,20 @@ class TestTemporalQueryOpen:
             unpruned = read(spark, dst, use_pruning=False, **query)
             assert pruned.schema == unpruned.schema, query
             rows = sorted(map(tuple, pruned.collect()))
+            assert rows and rows == sorted(map(tuple, unpruned.collect())), query
+
+    def test_flattened_archive_opens_without_time_level(self, spark, staged_orbit, tmp_path):
+        """Flattened to the reference's ``{prefix}_{i}.parquet`` naming, the
+        archive has no ``time_part`` directories for the glob to name."""
+        from sat_bucket_spark.maintenance import flatten_time_partitions
+
+        dst = str(tmp_path / "flat")
+        merge_granule_buckets(spark, staged_orbit, dst, temporal_partitioning="year")
+        assert flatten_time_partitions(dst) > 0
+        for query in self.QUERIES:
+            pruned = read(spark, dst, **query)
+            rows = sorted(map(tuple, pruned.collect()))
+            unpruned = read(spark, dst, use_pruning=False, **query)
             assert rows and rows == sorted(map(tuple, unpruned.collect())), query
 
 
