@@ -471,8 +471,8 @@ def read(
     # --- partition-level pruning (before the n_rows scan cap) --------------
     if time_prefixes is not None and "time_part" in df.columns:
         # partition-column predicate -> Catalyst prunes time_part dirs. One
-        # parsed IN list: Column.isin makes ~4 py4j calls per literal, and an
-        # open-ended day window has ~29 000 prefixes.
+        # parsed IN list: Column.isin makes ~4 py4j calls per literal, and a
+        # day window open at one end has tens of thousands of prefixes.
         quoted = ", ".join(
             "'" + p.replace("\\", "\\\\").replace("'", "\\'") + "'" for p in time_prefixes
         )

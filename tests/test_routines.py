@@ -227,7 +227,7 @@ class TestTemporalQueryOpen:
     QUERIES = [
         # time only: both granules of 2021, July 5 to August 5
         {"start_time": "2021-07-05", "end_time": "2021-08-06"},
-        # open-ended: ~29 000 day prefixes, in the glob and in the predicate
+        # open-ended: ~29 000 day prefixes to 2100, in the glob and the predicate
         {"start_time": "2021-08-01"},
         {"extent": [-35, 10, -25, 25], "start_time": "2021-07-01", "end_time": "2021-08-01"},
         {"polygon": [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)],
