@@ -337,9 +337,8 @@ def filter_by_polygon(
     """Rows inside a simple polygon: bbox envelope first, then exact test.
 
     The bounding-box predicate is a plain extent filter, so on a bucket
-    table it reuses the same partition/row-group pruning as
-    :func:`filter_by_extent` (Catalyst prunes on the label columns /
-    parquet min-max stats); the O(n_vertices) ray-cast then runs only on
+    table it reuses the row-group pruning of :func:`filter_by_extent`
+    (parquet min-max stats); the O(n_vertices) ray-cast then runs only on
     rows that survive the envelope.
     """
     bbox = polygon_bbox(polygon)

@@ -114,9 +114,10 @@ def get_partition_filepaths(
     Driver-side helper mirroring reference io.py:96-109 +
     utils/directories.py:145-170 (extension/glob/regex filename filters,
     thread-parallel per-partition listing — directory listings are I/O bound,
-    so a thread pool matches the reference's ``parallel=True``). The Spark
-    query path never needs this for pruning (Catalyst prunes from predicates);
-    ``read`` uses it only when filename-level filters are requested.
+    so a thread pool matches the reference's ``parallel=True``). ``read``
+    prunes by opening only the partition directories a query touches; it
+    lists files (through :func:`_filepaths_by_partition`) only when
+    filename-level filters are requested.
     """
     by_partition = get_filepaths_by_partition(
         bucket_dir, extent, extension, glob_pattern, regex_pattern, parallel
@@ -133,33 +134,31 @@ def get_filepaths_by_partition(
     parallel: bool = True,
 ) -> dict[str, list[str]]:
     """Partition-relative dir -> sorted file list (reference: io.py:111-128)."""
+    partitioning = get_bucket_spatial_partitioning(bucket_dir)
+    dirs = (
+        partitioning.directories_by_extent(extent)
+        if extent is not None
+        else partitioning.directories
+    )
     return _filepaths_by_partition(
-        bucket_dir, get_bucket_spatial_partitioning(bucket_dir), extent,
-        extension, glob_pattern, regex_pattern, parallel,
+        bucket_dir, dirs, extension, glob_pattern, regex_pattern, parallel
     )
 
 
 def _filepaths_by_partition(
     bucket_dir: str,
-    partitioning,
-    extent=None,
+    directories: list[str],
     extension: str | None = ".parquet",
     glob_pattern: str | None = None,
     regex_pattern: str | None = None,
     parallel: bool = True,
 ) -> dict[str, list[str]]:
-    """:func:`get_filepaths_by_partition` for a caller that already holds
-    the bucket's partitioning (``readers.read``), so bucket_info.yaml is
-    not read a second time."""
+    """:func:`get_filepaths_by_partition` over the partition directories
+    (relative to the bucket root) a caller already chose, e.g. ``readers.read``
+    from the query's cells; directories absent on disk are skipped."""
     pattern = re.compile(regex_pattern) if regex_pattern is not None else None
-    rel = (
-        partitioning.directories_by_extent(extent)
-        if extent is not None
-        else partitioning.directories
-    )
-    dirs = [
-        os.path.join(bucket_dir, d) for d in rel if os.path.isdir(os.path.join(bucket_dir, d))
-    ]
+    dirs = [os.path.join(bucket_dir, d) for d in directories]
+    dirs = [d for d in dirs if os.path.isdir(d)]
 
     def one(d: str) -> tuple[str, list[str]]:
         return os.path.relpath(d, bucket_dir), sorted(

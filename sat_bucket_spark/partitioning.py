@@ -509,9 +509,10 @@ class Base2DPartitioning:
     def get_partitions_by_extent(self, extent) -> dict[str, list[str]]:
         """Level name -> sorted label list of partitions intersecting extent.
 
-        The Spark-native replacement for the reference's directory enumeration
-        (partitioning.py:599-635): feed the labels to :meth:`pruning_predicate`
-        and Catalyst prunes hive partitions before any file is opened.
+        The reference's directory enumeration (partitioning.py:599-635) as
+        label sets: ``readers.read`` builds its partition glob from them, and
+        :meth:`pruning_predicate` turns them into a partition-column predicate
+        for a frame a caller already holds.
         """
         raise NotImplementedError
 

@@ -7,19 +7,19 @@ readers.py:239-279), we emit::
 
     spark.read.schema(<footer schema>)        # no schema-inference job
         .parquet(bucket_dir/<partition glob>) # lists only the touched dirs
-        .where(<partition-label predicate>)   # Catalyst hive partition pruning
         .limit(n_rows)                        # scan-time row cap (reference parity)
         .where(<exact bbox / point-radius>)   # row-level post filter
         .where(<user filter expressions>)     # pushed to parquet scan
         .select(columns)
 
-The label sets of the partition predicates also build one Hadoop brace glob
-under ``basePath``, so the open lists the partitions the query can touch,
-not the bucket; the schema is read from one footer on the driver, because
-Spark's own "single footer" inference is a distributed job. Building the
-plan therefore launches no job and costs what the query touches. Catalyst
-then performs partition pruning, predicate pushdown, and column pruning
-(the scan shows PushedFilters/ReadSchema; verified in tests/test_plans.py).
+The query's partition label sets build one Hadoop brace glob under
+``basePath``, so the open lists the partitions the query can touch, not the
+bucket; that glob is the read's only partition pruning, as the reference's
+directory enumeration is. The schema is read from one footer on the driver,
+because Spark's own "single footer" inference is a distributed job. Building
+the plan therefore launches no job and costs what the query touches.
+Catalyst then performs predicate pushdown and column pruning (the scan shows
+PushedFilters/ReadSchema; verified in tests/test_plans.py).
 """
 
 from __future__ import annotations
@@ -82,77 +82,66 @@ def read_bucket_dataframe(
     glob = path_glob or "*.parquet"
     hive = partitioning is None or getattr(partitioning, "flavor", "hive") == "hive"
     levels = list(levels or []) if hive else []
+    root = [bucket_dir] if hive else [os.path.join(bucket_dir, *(["*"] * len(partitioning.order)))]
     sample = paths[0] if paths else _first_data_file(bucket_dir, glob)
-    if subdirs is not None and not subdirs:
-        return _empty_bucket_frame(
-            spark, bucket_dir, levels, glob, partitioning, sample, merge_schema
-        )
-    if paths is not None:
-        # Explicit file list (filename-level filtering): basePath keeps the
-        # hive partition columns discoverable from the file paths.
-        src = paths
-        reader = spark.read.option("basePath", bucket_dir) if hive else spark.read
-    else:
-        if subdirs is not None:
-            src = [os.path.join(bucket_dir, d) for d in subdirs]
-        elif hive:
-            src = [bucket_dir]
-        else:
-            src = [os.path.join(bucket_dir, *(["*"] * len(partitioning.order)))]
-        reader = spark.read.option("pathGlobFilter", glob)
-        if hive and subdirs is not None:
-            reader = reader.option("basePath", bucket_dir)
-    if merge_schema:
-        # Schema drift (columns added to the archive over the years): a
-        # single-footer schema would pin the archive to ONE file and silently
-        # drop every column that file predates. mergeSchema unions all
-        # footers (a footer pass over the bucket — the documented price of
-        # drift-aware reads).
-        reader = reader.option("mergeSchema", "true")
-    # The schema comes from ONE footer, read on the driver. Spark's own
-    # "single footer" inference is a distributed job (one per open), and
-    # with string-typed levels it also lists the bucket twice (infer, then
-    # re-open with the corrected schema). Spark-written files store their
-    # Spark schema under a footer key, which is exactly what Spark's
-    # inference returns, so the open is one listing and no job. Files
-    # without the key (pyarrow-written archives), non-local URIs (no cheap
-    # first file) and merged-footer reads keep Spark's inference.
+
+    # --- the schema: chosen apart from the files the open reads -------------
+    # One footer, read on the driver. Spark's own "single footer" inference
+    # is a distributed job (one per open), and with string-typed levels it
+    # also lists the bucket twice (infer, then re-open with the corrected
+    # schema). Spark-written files store their Spark schema under a footer
+    # key, which is exactly what Spark's inference returns, so the open is
+    # one listing and no job. Files without the key (pyarrow-written
+    # archives) have their one sample inferred by Spark.
+    #
+    # Schema drift (columns added to the archive over the years): a
+    # single-footer schema would pin the archive to ONE file and silently
+    # drop every column that file predates. ``merge_schema`` unions every
+    # footer of the bucket (a footer pass over the root, the documented
+    # price of drift-aware reads), whatever partitions the query touches.
+    # Non-local URIs (no cheap first file) infer over the root as well.
     schema = None
-    if not merge_schema and sample is not None:
+    if sample is not None and not merge_schema:
         schema = _footer_schema(sample)
         if schema is None and levels:
             schema = spark.read.parquet(sample).schema
+    elif merge_schema or levels:
+        root_reader = spark.read.option("mergeSchema", merge_schema).option("pathGlobFilter", glob)
+        schema = root_reader.parquet(*root).schema
+
+    # --- the files: an explicit list, the pruning glob or the root ----------
+    if paths is not None:
+        # filename-level filtering: the list is already pruned
+        src = paths
+        reader = spark.read
+    else:
+        src = root if subdirs is None else [os.path.join(bucket_dir, d) for d in subdirs]
+        reader = spark.read.option("pathGlobFilter", glob)
+    if hive:
+        # basePath keeps the hive partition columns discoverable from the paths
+        reader = reader.option("basePath", bucket_dir)
+    if schema is not None:
+        reader = reader.schema(_with_string_levels(schema, levels))
     try:
-        if schema is None and levels:
-            schema = reader.parquet(*src).schema
-        if schema is not None:
-            reader = reader.schema(_with_string_levels(schema, levels))
-        df = reader.parquet(*src)
+        df = reader.parquet(*src) if src else _empty_bucket_frame(reader, sample, root)
     except AnalysisException as exc:
         # a pruning glob that matches no partition directory
         if subdirs is None or exc.getCondition() != "PATH_NOT_FOUND":
             raise
-        return _empty_bucket_frame(
-            spark, bucket_dir, levels, glob, partitioning, sample, merge_schema
-        )
+        df = _empty_bucket_frame(reader, sample, root)
     if not hive:
         df = _with_directory_labels(df, partitioning.order)
     return df
 
 
-def _empty_bucket_frame(spark, bucket_dir, levels, glob, partitioning, sample, merge_schema):
-    """No partition matches: the bucket's full schema over zero rows.
+def _empty_bucket_frame(reader, sample, root) -> DataFrame:
+    """No partition matches: the bucket's schema over zero rows.
 
-    Opens the one sample file (its path carries the partition columns), not
-    the bucket — the root when there is no local sample, or when the schema
-    is the union of every footer (``merge_schema``); the always-false filter
-    plans as an empty local relation, so the frame scans nothing when run.
+    Opens the one sample file under the chosen schema (the root when there
+    is no local sample), not the bucket; the always-false filter plans as an
+    empty local relation, so the frame scans nothing when run.
     """
-    one_file = sample is not None and not merge_schema
-    return read_bucket_dataframe(
-        spark, bucket_dir, levels=levels, path_glob=glob, partitioning=partitioning,
-        paths=[sample] if one_file else None, merge_schema=merge_schema,
-    ).where(F.lit(False))
+    return reader.parquet(*([sample] if sample is not None else root)).where(F.lit(False))
 
 
 def _with_string_levels(schema: StructType, levels: list[str]) -> StructType:
@@ -344,7 +333,8 @@ def read(
     FILES by basename before the scan (reference: readers.py:218-221 +
     utils/directories.py:75-100 — extension endswith, start-anchored
     ``re.match``, Unix glob), listed driver-side in parallel over the
-    (extent-pruned) partition directories; raises when nothing matches,
+    partition directories the query touches (polygon cells cell-exactly,
+    ``time_part`` directories by window); raises when nothing matches,
     mirroring the reference's "No files available" error.
 
     ``backend``: "spark" (default, lazy DataFrame) or "pandas" (collect to
@@ -374,8 +364,8 @@ def read(
         from sat_bucket_spark.filters import polygon_bbox
 
         query_polygon = [(float(a), float(b)) for a, b in polygon]
-        # The bbox envelope drives file listing / time-prefix planning; the
-        # partition predicate and row filter below are polygon-exact.
+        # The partitions opened and the row filter below are polygon-exact;
+        # the bbox envelope only marks the query as spatial.
         query_extent = polygon_bbox(query_polygon)
     elif country is not None:
         query_extent = extend_extent(get_country_extent(country), padding)
@@ -391,11 +381,10 @@ def read(
         else:
             query_extent = extent_around_point(lon0, lat0, size=size)
 
-    # --- partition labels the query can touch (driver-side planning) --------
-    # One label set per level feeds both the open (a brace glob: only these
-    # directories are listed) and the partition predicates below.
-    hive = getattr(partitioning, "flavor", "hive") == "hive"
-    time_prefixes = None
+    # --- partitions the query can touch (driver-side planning) -------------
+    # The open names only these directories (one brace glob, or the filtered
+    # file list under them): that is the read's whole partition pruning.
+    glob_times = None
     if start_time is not None or end_time is not None:
         from sat_bucket_spark.checks import check_start_end_time
 
@@ -404,57 +393,62 @@ def read(
             end_time if end_time is not None else "2100-01-01",
         )
         temporal = info.get("temporal_partitioning")
-        if temporal:
+        # time_part directories hold a merged archive's files, not those of
+        # one flattened to the reference's {prefix}_{i}.parquet naming
+        sample = _first_data_file(bucket_dir, path_glob or "*.parquet") if temporal else None
+        if sample is not None and os.path.basename(os.path.dirname(sample)).startswith(
+            "time_part="
+        ):
             from sat_bucket_spark.functions.temporal import (
                 get_partitioning_boundaries,
                 get_time_prefix,
             )
 
-            time_prefixes = sorted(
+            glob_times = sorted(
                 {
                     get_time_prefix(b, temporal)
                     for b in get_partitioning_boundaries(start_time, end_time, temporal)
                     if b < end_time  # a boundary at/after the exclusive end opens no needed period
                 }
             )
-    parts = None
-    if query_extent is not None and use_pruning:
-        if query_polygon is not None:
-            # cell-exact: only cells whose rectangle meets the polygon
-            labels = partitioning._labels_for_cells(
-                *partitioning._cells_by_polygon(query_polygon)
-            )
-            parts = list(zip(*(labels[lvl].tolist() for lvl in partitioning.order)))
-        else:
-            parts = partitioning.get_partitions_by_extent(query_extent)
+    pruned = query_extent is not None and use_pruning
     paths = None
     subdirs = None
     if file_extension is not None or glob_pattern is not None or regex_pattern is not None:
         from sat_bucket_spark.io import _filepaths_by_partition
 
+        if not pruned:
+            dirs = partitioning.directories
+        elif query_polygon is not None:
+            dirs = partitioning.directories_by_polygon(query_polygon)
+        else:
+            dirs = partitioning.directories_by_extent(query_extent)
         by_partition = _filepaths_by_partition(
             bucket_dir,
-            partitioning,
-            extent=query_extent if use_pruning else None,
+            dirs,
             extension=file_extension if file_extension is not None else ".parquet",
             glob_pattern=glob_pattern,
             regex_pattern=regex_pattern,
         )
-        paths = sorted(f for files in by_partition.values() for f in files)
+        kept_times = None if glob_times is None else {f"time_part={t}" for t in glob_times}
+        paths = sorted(
+            f
+            for files in by_partition.values()
+            for f in files
+            if kept_times is None or os.path.basename(os.path.dirname(f)) in kept_times
+        )
         if not paths:
             raise ValueError("No files available matching your request.")
-    elif use_pruning and not (merge_schema and hive):
-        # (a merged hive schema unions every footer of the bucket: that read
-        # opens the root and leaves the pruning to Catalyst)
-        glob_times = None
-        if time_prefixes is not None:
-            # time_part directories hold a merged archive's files, not those
-            # of one flattened to the reference's {prefix}_{i}.parquet naming
-            sample = _first_data_file(bucket_dir, path_glob or "*.parquet")
-            if sample is not None and os.path.basename(os.path.dirname(sample)).startswith(
-                "time_part="
-            ):
-                glob_times = time_prefixes
+    else:
+        parts = None
+        if pruned and query_polygon is not None:
+            # cell-exact: only cells whose rectangle meets the polygon
+            labels = partitioning._labels_for_cells(
+                *partitioning._cells_by_polygon(query_polygon)
+            )
+            parts = list(zip(*(labels[lvl].tolist() for lvl in partitioning.order)))
+        elif pruned:
+            parts = partitioning.get_partitions_by_extent(query_extent)
         subdirs = _partition_glob(partitioning, parts, glob_times)
 
     df = read_bucket_dataframe(
@@ -467,27 +461,6 @@ def read(
         paths=paths,
         merge_schema=merge_schema,
     )
-
-    # --- partition-level pruning (before the n_rows scan cap) --------------
-    if time_prefixes is not None and "time_part" in df.columns:
-        # partition-column predicate -> Catalyst prunes time_part dirs. One
-        # parsed IN list: Column.isin makes ~4 py4j calls per literal, and a
-        # day window open at one end has tens of thousands of prefixes.
-        quoted = ", ".join(
-            "'" + p.replace("\\", "\\\\").replace("'", "\\'") + "'" for p in time_prefixes
-        )
-        df = df.where(F.expr(f"time_part IN ({quoted})"))
-
-    # hive pruning via Catalyst; directory-flavor labels are not partition
-    # columns, so there the glob alone prunes (an explicit file list was
-    # already pruned by extent and keeps the label filter).
-    if parts is not None and (hive or paths is not None):
-        if query_polygon is not None:
-            # cell-exact polygon pruning (per-column y lists, not the bbox
-            # cross product) — still a pure partition-column predicate
-            df = df.where(partitioning.polygon_pruning_predicate(query_polygon))
-        else:
-            df = df.where(partitioning.pruning_predicate(query_extent))
 
     # --- n_rows: cap on rows READ, not on result rows -----------------------
     # Reference parity (readers.py:229): n_rows is a scan-time stop — it

@@ -62,6 +62,23 @@ def cached_rdd_ids(spark):
 
 
 @pytest.fixture(scope="session")
+def input_dirs():
+    """Callable ``(df, bucket_dir)`` -> directories, relative to the bucket
+    root, of the files the frame's scan reads (``DataFrame.inputFiles()``):
+    the executed file set, not a substring of the plan."""
+    import os
+    from urllib.parse import unquote, urlparse
+
+    def dirs(df, bucket_dir):
+        return {
+            os.path.relpath(os.path.dirname(unquote(urlparse(f).path)), bucket_dir)
+            for f in df.inputFiles()
+        }
+
+    return dirs
+
+
+@pytest.fixture(scope="session")
 def orbit_df(spark: SparkSession):
     """3 granules x (10 along x 5 cross) = 150 rows, deterministic.
 

@@ -83,6 +83,30 @@ class TestReadWithFileFilters:
         ).count()
         assert plain == filtered > 0
 
+    def test_polygon_plus_filter_matches_plain_polygon(self, spark, bucket):
+        tri = [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)]
+        plain = sorted(map(tuple, read(spark, bucket, polygon=tri).collect()))
+        filtered = read(spark, bucket, polygon=tri, regex_pattern=r"part-\d+")
+        assert plain == sorted(map(tuple, filtered.collect())) and plain
+
+    def test_extent_without_files_raises(self, spark, bucket):
+        # no on-disk cell under the extent: nothing to list, whatever the
+        # filter (an empty frame would still list its one sample file)
+        with pytest.raises(ValueError, match="No files available"):
+            read(spark, bucket, extent=[100, 110, 50, 60], file_extension=".parquet")
+
+    def test_filtered_plan_construction_launches_no_job(self, spark, bucket):
+        tri = [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)]
+        sc = spark.sparkContext
+        sc.setJobGroup("filtered-open-gate", "building a filtered read must launch no job")
+        try:
+            read(spark, bucket, file_extension=".parquet")
+            read(spark, bucket, extent=[5, 8, 0, 20], glob_pattern="*.parquet")
+            read(spark, bucket, polygon=tri, regex_pattern=r"part-\d+")
+        finally:
+            sc.setJobGroup("filtered-open-gate-done", "")
+        assert len(sc.statusTracker().getJobIdsForGroup("filtered-open-gate")) == 0
+
     def test_filtered_read_reads_bucket_info_once(self, spark, bucket, monkeypatch):
         """read() lists the filtered files with the partitioning it already
         holds: bucket_info.yaml is read once per call, as for a plain read."""

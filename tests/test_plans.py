@@ -1,9 +1,10 @@
 """Physical-plan quality gates: the plans must be the ones we'd want at 100 TB.
 
 These tests read ``explain()`` output and assert the optimizations that matter
-at scale actually fire: partition pruning, predicate/projection pushdown,
-broadcast joins for small dims, whole-stage codegen on hot paths, and no
-Python UDFs in expression pipelines.
+at scale actually fire: predicate/projection pushdown, broadcast joins for
+small dims, whole-stage codegen on hot paths, and no Python UDFs in expression
+pipelines. Bucket partition pruning is checked on the files a read's scan
+lists (``inputFiles()``).
 """
 
 from __future__ import annotations
@@ -90,18 +91,21 @@ def test_interval_join_broadcasts_groups(spark):
     assert "BroadcastNestedLoopJoin" in plan
 
 
-def test_bucket_read_prunes_partitions(spark, orbit_df, tmp_path_factory):
+def test_bucket_read_prunes_partitions(spark, orbit_df, tmp_path_factory, input_dirs):
+    import os
+
     from sat_bucket_spark import LonLatPartitioning, read, write_bucket
 
     d = str(tmp_path_factory.mktemp("plan_bucket"))
-    write_bucket(orbit_df, d, LonLatPartitioning(size=(10, 10)), x="lon", y="lat")
-    df = read(spark, d, extent=[5, 8, 0, 20])
-    plan = _plan(df)
-    # Catalyst partition pruning: the scan's partition filters must carry the
-    # label predicates (pruning happens at file-index level, before reading).
-    assert "PartitionFilters" in plan
-    pf = plan.split("PartitionFilters:")[1].splitlines()[0]
-    assert "lon_bin" in pf
+    p = LonLatPartitioning(size=(10, 10))
+    write_bucket(orbit_df, d, p, x="lon", y="lat")
+    extent = [5, 8, 0, 20]
+    df = read(spark, d, extent=extent)
+    # the scan reads exactly the on-disk partitions the extent intersects
+    # (pruning happens at the open, before any file is read)
+    want = {r for r in p.directories_by_extent(extent) if os.path.isdir(os.path.join(d, r))}
+    assert input_dirs(df, d) == want
+    assert want < input_dirs(read(spark, d), d)
 
 
 def test_curation_map_ops_no_shuffle_no_python(spark):

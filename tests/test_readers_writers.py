@@ -186,14 +186,18 @@ class TestPolygonRead:
         }
         assert got == want and got
 
-    def test_polygon_prunes_cell_exact(self, spark, bucket_dir):
-        """The scan's PartitionFilters must carry the polygon's per-column
-        predicate, and the unpruned variant must read more partitions."""
+    def test_polygon_prunes_cell_exact(self, spark, bucket_dir, input_dirs):
+        """The scan reads exactly the on-disk partitions of the polygon's
+        cells, and the unpruned variant reads more partitions."""
+        p = get_bucket_spatial_partitioning(bucket_dir)
         df = read(spark, bucket_dir, polygon=self.TRI)
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan
-        pf = plan.split("PartitionFilters:")[1].splitlines()[0]
-        assert "lon_bin" in pf and "lat_bin" in pf
+        want = {
+            d for d in p.directories_by_polygon(self.TRI)
+            if os.path.isdir(os.path.join(bucket_dir, d))
+        }
+        assert input_dirs(df, bucket_dir) == want
+        unpruned = read(spark, bucket_dir, polygon=self.TRI, use_pruning=False)
+        assert want < input_dirs(unpruned, bucket_dir)
 
     def test_polygon_excludes_other_spatial_args(self, spark, bucket_dir):
         with pytest.raises(ValueError):
@@ -294,7 +298,7 @@ class TestQuerySizedOpen:
 
 
 class TestPartitionGlob:
-    """The open's glob, built from the same label sets as the predicates."""
+    """The open's glob: the read's only partition pruning."""
 
     def _cells(self, p, polygon):
         labels = p._labels_for_cells(*p._cells_by_polygon(polygon))
@@ -502,7 +506,7 @@ class TestJsonlShardExport:
 
 
 class TestSchemaDrift:
-    def test_merge_schema_unions_drifted_columns(self, spark, tmp_path):
+    def test_merge_schema_unions_drifted_columns(self, spark, tmp_path, input_dirs):
         """An archive that gained a column over the years: the default read
         pins one footer's schema; merge_schema=True unions all footers and
         keeps the string-typed partition labels."""
@@ -529,7 +533,8 @@ class TestSchemaDrift:
         # pruning still applies on the merged read, and its schema is still
         # the whole bucket's, whatever partitions the query touches
         pruned = read(spark, bucket, extent=[0, 10, 0, 10], merge_schema=True)
-        assert pruned.schema == drifted.schema
+        assert pruned.schema == drifted.schema and "quality_flag" in pruned.columns
+        assert input_dirs(pruned, bucket) == {os.path.join("lon_bin=5.0", "lat_bin=5.0")}
         assert [tuple(r) for r in pruned.select("value", "quality_flag").collect()] == [
             (10.0, None)
         ]

@@ -135,28 +135,36 @@ class TestMerge:
             t = pq.read_table(f, columns=["time"])["time"].to_pylist()
             assert t == sorted(t), f
 
-    def test_read_time_window_prunes_time_partitions(self, spark, staged, tmp_path):
+    def test_read_time_window_prunes_time_partitions(self, spark, staged, tmp_path, input_dirs):
         dst = str(tmp_path / "merged_t")
         merge_granule_buckets(spark, staged, dst, temporal_partitioning="year")
         df = read(spark, dst, start_time="2021-01-01", end_time="2022-01-01")
         assert df.count() == 100
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        pf = plan.split("PartitionFilters:")[1].splitlines()[0]
-        assert "time_part" in pf  # temporal partition pruning reached the scan
+        # temporal partition pruning: the scan reads only 2021's files, and a
+        # filename-filtered read lists only those
+        dirs = input_dirs(df, dst)
+        assert dirs and all(os.path.basename(d) == "time_part=2021" for d in dirs)
+        listed = read(spark, dst, start_time="2021-01-01", end_time="2022-01-01",
+                      file_extension=".parquet")
+        assert input_dirs(listed, dst) == dirs and listed.count() == 100
 
-    def test_polygon_and_time_window_compose(self, spark, staged, tmp_path):
+    def test_polygon_and_time_window_compose(self, spark, staged, tmp_path, input_dirs):
         """A polygon query over a temporally merged bucket prunes on BOTH
         axes: time_part dirs AND the polygon's cells, with the exact
         ray-cast row filter on top."""
+        from sat_bucket_spark import get_bucket_spatial_partitioning
         from sat_bucket_spark.filters import filter_by_polygon
 
         dst = str(tmp_path / "merged_pt")
         merge_granule_buckets(spark, staged, dst, temporal_partitioning="year")
         tri = [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)]
         df = read(spark, dst, polygon=tri, start_time="2021-01-01", end_time="2022-01-01")
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        pf = plan.split("PartitionFilters:")[1].splitlines()[0]
-        assert "time_part" in pf and "lon_bin" in pf
+        dirs = input_dirs(df, dst)
+        assert all(os.path.basename(d) == "time_part=2021" for d in dirs)
+        cells = get_bucket_spatial_partitioning(dst).directories_by_polygon(tri)
+        assert {os.path.dirname(d) for d in dirs} == {
+            c for c in cells if os.path.isdir(os.path.join(dst, c, "time_part=2021"))
+        }
         want = (
             filter_by_polygon(read(spark, dst), tri)
             .where("time >= '2021-01-01' AND time < '2022-01-01'")
@@ -222,12 +230,12 @@ def staged_orbit(spark, orbit_df, tmp_path_factory):
 class TestTemporalQueryOpen:
     """The time prefixes narrow the open's glob (``time_part={...}`` under
     the spatial levels): at every granularity the pruned read equals the
-    unpruned one (``use_pruning=False`` opens the root)."""
+    unpruned one (``use_pruning=False`` globs the time level alone)."""
 
     QUERIES = [
         # time only: both granules of 2021, July 5 to August 5
         {"start_time": "2021-07-05", "end_time": "2021-08-06"},
-        # open-ended: ~29 000 day prefixes to 2100, in the glob and the predicate
+        # open-ended: ~29 000 day prefixes to 2100, all in the glob
         {"start_time": "2021-08-01"},
         {"extent": [-35, 10, -25, 25], "start_time": "2021-07-01", "end_time": "2021-08-01"},
         {"polygon": [(-30.0, -30.0), (30.0, -30.0), (0.0, 30.0)],
